@@ -9,8 +9,8 @@ import org.apache.spark.sql.SparkSession
   * Explain also detects and FLAGS any Spark job executed during plan
   * CONSTRUCTION per lane (e.g. an index-build step), so plan-cache/
   * audit tooling is never surprised by a "plan build" that touched
-  * the cluster. The adaptive rank machinery (rankBucketed) is lazy —
-  * its stats pass rides the plan as a broadcast subplan — so the
+  * the cluster. The exact-rank machinery (prefixSums over rankBucketed)
+  * is lazy — its stats pass rides the plan as a broadcast subplan — so the
   * rank lanes (q78/q85/q89/q90/q102, the cumulative-share lanes, …)
   * are pure plan-only builds and come out clean here.
   */

@@ -414,100 +414,74 @@ object Relational {
     * buffers each group's whole value set in one task. Here the input
     * collapses to distinct (group, value, count) cells in ONE keyed
     * hash aggregation (map-side partials, graceful spill), the
-    * ascending cumulative count rides rankBucketed's bucket-partitioned
-    * windows plus a per-group prefix over the bounded |groups|×≤2^14
-    * offset axis, and each requested fraction interpolates between the
-    * values at 1-based ranks ⌊p(n−1)⌋+1 and ⌈p(n−1)⌉+1 with EXACTLY
-    * Percentile's arithmetic ((higher−pos)·v_lo + (pos−lower)·v_hi;
-    * v_lo when the ranks coincide or share a value) — bit-identical
-    * doubles, so DuckDB quantile_cont oracles are unaffected. Returns
-    * one row per group: partCols ++ `qs` array<double> in ascending
-    * frac order. Nulls in `v` are excluded (Percentile semantics).
+    * ascending cumulative count rides [[prefixSums]], and each
+    * requested fraction interpolates between the values at 1-based
+    * ranks ⌊p(n−1)⌋+1 and ⌈p(n−1)⌉+1 with EXACTLY Percentile's
+    * arithmetic ((higher−pos)·v_lo + (pos−lower)·v_hi; v_lo when the
+    * ranks coincide or share a value) — bit-identical doubles, so
+    * DuckDB quantile_cont oracles are unaffected. Returns one row per
+    * group: partCols ++ `qs` array<double> in ascending frac order.
+    * Nulls in `v` are excluded (Percentile semantics); a group-less
+    * call over no non-null value returns ONE row with a null `qs`
+    * (Percentile's arity — consumers crossJoin this frame), a grouped
+    * call returns no rows. `weight` gives integer repetition weights
+    * (Percentile's `freq`), w ≥ 0: a negative weight fails the query,
+    * as Percentile does.
     */
   private[graft] def exactQuantiles(in: DataFrame, v: String,
       fracs: Seq[Double], partCols: Seq[String] = Nil,
       weight: Option[Column] = None): DataFrame = {
     val pc = partCols.map(col)
     // r17 (r16 verdict item 3): the machinery below references `cells`
-    // from ~6 subtree positions and chained calls COMPOUND the static
-    // plan (q53's formatted plan hit 7,245 lines; q52's embedded 38
-    // scans). Runtime ReusedExchange was proven to dedupe the executed
-    // work (plans/r17/*_executed_before.txt: q52 runs 4 scans, not 38),
-    // but AQE re-optimizes the remaining LOGICAL plan at every one of
-    // the ~30-40 stage boundaries, so driver-side planning grew with
-    // the SQUARE of composition depth — q52/q53 spent 4-7.6 s at sf0.1
-    // on sub-MB data. The fix lives at the CALL SITES, not here: single
-    // calls (q37/q84/q107/t54/s31) keep the one-action shape whose
-    // runtime reuse the executed plans prove, while composing callers
-    // (q52/q53) pin the bounded frames at their composition boundaries
-    // (see q52/q53) so depth never multiplies the plan. Checkpointing
-    // `cells` inside the helper was measured and REJECTED: under AQE
-    // even a lazy localCheckpoint executes its stages at build time, so
-    // it serializes every call into driver-synchronized mini-jobs and
-    // regressed the single-call lanes (q37 1.81→3.07 s at sf0.1) for no
-    // gain the within-action ReusedExchange wasn't already providing.
-    // r17: optional integer repetition weights (Percentile's `freq`
-    // semantics, q98/s47) — a cell's count is the SUM of its rows'
-    // weights instead of the row count; every rank/interpolation step
-    // below is already count-based, so nothing else changes and the
-    // result is collapse-invariant by construction (grouping equal
-    // values and summing their weights yields the same cells).
+    // from several subtree positions and chained calls COMPOUND the
+    // static plan (q53's formatted plan hit 7,245 lines; q52's embedded
+    // 38 scans). Runtime ReusedExchange dedupes the executed work, but
+    // AQE re-optimizes the remaining LOGICAL plan at every one of the
+    // ~30-40 stage boundaries, so driver-side planning grew with the
+    // SQUARE of composition depth — q52/q53 spent 4-7.6 s at sf0.1 on
+    // sub-MB data. The fix lives at the CALL SITES, not here: single
+    // calls (q37/q84/q107/t54/s31) keep the one-action shape, while
+    // composing callers (q52/q53) pin the bounded frames at their
+    // composition boundaries so depth never multiplies the plan.
+    // Checkpointing `cells` inside the helper was measured and
+    // REJECTED: under AQE even a lazy localCheckpoint executes its
+    // stages at build time, so it serializes every call into
+    // driver-synchronized mini-jobs and regressed the single-call lanes
+    // (q37 1.81→3.07 s at sf0.1).
+    // With weights a cell's count is the SUM of its rows' weights
+    // instead of the row count; every rank/interpolation step below is
+    // count-based, so the result is collapse-invariant by construction
+    // (grouping equal values and summing their weights yields the same
+    // cells). The weight check runs inside the plan — no extra job.
+    val cnt = weight.map(w => sum(when(w < 0, raise_error(lit(
+        s"exactQuantiles: negative weight in the weighted quantile of $v")))
+        .otherwise(w)))
+      .getOrElse(count(lit(1)))
     val cells = in.filter(col(v).isNotNull)
       .groupBy(pc :+ col(v).as("__q_v"): _*)
-      .agg(weight.map(w => sum(w)).getOrElse(count(lit(1))).as("__q_cnt"))
-    // bucket is a monotone pure function of the value (global stats),
-    // so it composes with any grouping — q110's bucketRank precedent
-    val bucketed = rankBucketed(cells, "__q_v")
-    val win = Window.partitionBy(pc :+ col("bucket"): _*).orderBy("__q_v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // per-(group, bucket) totals ride the SAME shuffle as the running
-    // count (whole-partition frame) — cumSumDesc's shared-exchange
-    // discipline
-    val withCum = bucketed
-      .withColumn("__q_cin", sum("__q_cnt").over(win))
-      .withColumn("__q_bsum",
-        sum("__q_cnt").over(Window.partitionBy(pc :+ col("bucket"): _*)))
-    val wb = Window.partitionBy(pc: _*).orderBy("bucket")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val off = withCum.groupBy(pc :+ col("bucket"): _*)
-      .agg(first("__q_bsum").as("__q_bsum"))
-      .withColumn("__q_off", coalesce(sum("__q_bsum").over(wb), lit(0L)))
-    // each distinct value covers ascending 1-based ranks [__q_lo, __q_hi]
-    val axis = withCum
-      .join(broadcast(off.select(
-        pc ++ Seq(col("bucket"), col("__q_off")): _*)),
-        partCols :+ "bucket")
-      .select(pc ++ Seq(col("__q_v"),
-        (col("__q_off") + col("__q_cin") - col("__q_cnt") + 1).as("__q_lo"),
-        (col("__q_off") + col("__q_cin")).as("__q_hi")): _*)
-    // target positions p·(n−1) per group; floor/ceil exactly as
-    // Percentile computes them
-    val targets = off.groupBy(pc: _*).agg(sum("__q_bsum").as("__q_n"))
-      .select(pc ++ Seq(col("__q_n"),
-        explode(array(fracs.map(lit): _*)).as("__q_p")): _*)
-      .select(pc ++ Seq(col("__q_p"),
-        (col("__q_p") * (col("__q_n") - 1)).as("__q_pos")): _*)
-      .select(pc ++ Seq(col("__q_p"), col("__q_pos"),
-        floor(col("__q_pos")).as("__q_l"),
-        ceil(col("__q_pos")).as("__q_h")): _*)
-    val tgt = targets.select(
-      partCols.map(c => col(c).as(s"__t_$c")) ++
-        Seq(col("__q_p"), col("__q_pos"), col("__q_l"), col("__q_h")): _*)
-    // ≤2 axis rows match a target (one value covers each rank); the
-    // broadcast side is |groups|×|fracs| rows
-    val cover = (col("__q_l") + 1).between(col("__q_lo"), col("__q_hi")) ||
-      (col("__q_h") + 1).between(col("__q_lo"), col("__q_hi"))
-    val cond = partCols.map(c => col(c) === col(s"__t_$c"))
-      .foldLeft(cover)(_ && _)
-    val picked = axis.join(broadcast(tgt), cond)
+      .agg(cnt.as("__q_cnt"))
+    // each distinct value covers ascending 1-based ranks [cum − cnt + 1,
+    // cum] of its group's n = cnt_tot; target position p·(n−1) with
+    // floor/ceil exactly as Percentile computes them. One value covers
+    // each rank, so the filter keeps ≤2 rows per (group, fraction).
+    def covers(r: String): Column = (col(r) + 1).between(
+      col("__q_cnt_cum") - col("__q_cnt") + 1, col("__q_cnt_cum"))
+    val picked = prefixSums(cells, "__q_v", Seq("__q_cnt"), partCols)
+      .withColumn("__q_p", explode(array(fracs.map(lit): _*)))
+      .withColumn("__q_pos", col("__q_p") * (col("__q_cnt_tot") - 1))
+      .withColumn("__q_l", floor(col("__q_pos")))
+      .withColumn("__q_h", ceil(col("__q_pos")))
+      .filter(covers("__q_l") || covers("__q_h"))
       .groupBy(pc ++ Seq(col("__q_p"), col("__q_pos"),
         col("__q_l"), col("__q_h")): _*)
       .agg(
-        min(when((col("__q_l") + 1).between(col("__q_lo"), col("__q_hi")),
-          col("__q_v"))).as("__q_vlo"),
-        min(when((col("__q_h") + 1).between(col("__q_lo"), col("__q_hi")),
-          col("__q_v"))).as("__q_vhi"))
-    val res = picked
+        min(when(covers("__q_l"), col("__q_v"))).as("__q_vlo"),
+        min(when(covers("__q_h"), col("__q_v"))).as("__q_vhi"))
+    // NOTE: partCols must stay a low-cardinality axis (today's largest:
+    // q53's 5 segments) — prefixSums' per-group offset broadcast
+    // assumes it; a corpus-proportional group axis needs a shuffle join
+    // on (group, bucket) instead (r16 ADVICE, documented guard).
+    picked
       .withColumn("__q_bnd",
         when(col("__q_h") === col("__q_l") ||
             col("__q_vhi") === col("__q_vlo"),
@@ -515,24 +489,12 @@ object Relational {
           .otherwise((col("__q_h") - col("__q_pos")) * col("__q_vlo") +
             (col("__q_pos") - col("__q_l")) * col("__q_vhi")))
       .groupBy(pc: _*)
-      .agg(transform(
-        array_sort(collect_list(struct(col("__q_p"), col("__q_bnd")))),
-        x => x.getField("__q_bnd")).as("qs"))
-      // NOTE: partCols must stay a low-cardinality axis (today's
-      // largest: q53's 5 segments) — the per-group offset frame
-      // broadcast above and the |groups|×|fracs| target broadcast both
-      // assume it; a corpus-proportional group axis needs a shuffle
-      // join on (group, bucket) instead (r16 ADVICE, documented guard).
-    // empty/all-null input: grouped calls correctly yield no rows (the
-    // old grouped percentile() agreed), but the GROUP-LESS aggregate
-    // used to emit ONE row of null percentiles — preserve that arity
-    // lazily via a 1-row left join (r16 verdict item 7 / ADVICE:
-    // consumers crossJoin this frame, so a zero-row result would
-    // silently drop their summary row).
-    if (partCols.nonEmpty) res
-    else in.sparkSession.range(1).select(lit(1).as("__q_k"))
-      .join(broadcast(res.withColumn("__q_k", lit(1))), Seq("__q_k"), "left")
-      .select(col("qs"))
+      .agg(array_sort(collect_list(struct(col("__q_p"), col("__q_bnd"))))
+        .as("__q_ps"))
+      // the group-less aggregate over no picked row still yields its one
+      // row, with an empty list: report it as null, as Percentile does
+      .select(pc :+ when(size(col("__q_ps")) > 0,
+        transform(col("__q_ps"), x => x.getField("__q_bnd"))).as("qs"): _*)
   }
 
   // q24: pivot month × order-status revenue matrix. The pivot values are
@@ -777,7 +739,7 @@ object Relational {
   // to distinct (price, count) cells in ONE keyed hash aggregation
   // (map-side partials, spills gracefully — the shuffle carries
   // distinct prices, never a growing buffer); the ascending cumulative
-  // count rides rankBucketed's bucket-partitioned windows plus a prefix
+  // count rides prefixSums' bucket-partitioned windows plus a prefix
   // over the bounded ≤2^14-row bucket axis; each quantile then
   // interpolates between the values at ranks ⌊p(n−1)⌋+1 and ⌈p(n−1)⌉+1
   // with EXACTLY Percentile's arithmetic ((higher−pos)·v_lo +
@@ -1701,95 +1663,29 @@ object Relational {
       .orderBy("day")
   }
 
-  /** Distributed descending running sum of `sumCol` under (v desc,
-    * tieCol asc) order — the Pareto/waterfill machinery WITHOUT a
-    * global single-partition window over an SF-proportional axis.
-    * Rows co-bucket by v (rankBucketed: equal values always share a
-    * bucket, so the order never straddles a boundary), the
-    * within-bucket running sum runs bucket-partitioned (parallelism =
-    * rankBuckets, adaptive in the axis cardinality), and the
-    * cross-bucket offset is a prefix over the bounded B-row bucket
-    * axis, broadcast back. cum_sum = offset + within is the SAME
-    * exact integer sum the global window would produce. Callers
-    * should persist `in` (the bucket stats subplan is one extra scan
-    * over it). Adds `cum_sum` (running long sum) and `t` (long
-    * total).
-    */
-  private[graft] def cumSumDesc(in: DataFrame, v: String, tieCol: String,
-      sumCol: String): DataFrame = {
-    val bucketed = rankBucketed(in, v)
-    val win = Window.partitionBy("bucket")
-      .orderBy(col(v).desc, col(tieCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // per-bucket totals ride the SAME bucket shuffle as the running sum
-    // (a whole-partition frame), so the offset axis derives from the
-    // window output — both consumers share ONE identical exchange and
-    // the upstream panel computes once (a groupBy straight off
-    // `bucketed` would put a partial agg BELOW its exchange, making it
-    // non-reusable and recomputing the panel per branch — the q99
-    // sf10 2× found at r13)
-    val withSums = bucketed
-      .withColumn("sum_in", sum(sumCol).over(win))
-      .withColumn("bsum", sum(sumCol).over(Window.partitionBy("bucket")))
-    val wb = Window.orderBy(col("bucket").desc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    // all rows in a bucket carry the same bsum — first() is exact here
-    val off = withSums.groupBy("bucket").agg(first("bsum").as("bsum"))
-      .withColumn("sum_off", coalesce(sum("bsum").over(wb), lit(0L)))
-    val tot = off.agg(sum("bsum").as("t"))
-    withSums
-      .join(broadcast(off.select("bucket", "sum_off")), Seq("bucket"))
-      .crossJoin(broadcast(tot))
-      .withColumn("cum_sum", col("sum_off") + col("sum_in"))
-      .drop("bsum")
-  }
-
-  /** q66/q99's running revenue share: cumSumDesc over integer cents
-    * with `rc` as both the order and the summed column; cum =
-    * cum_sum/t is the exact integer running sum divided once by the
-    * long total (the long/long column division promotes both to
-    * double, identical to the previous double-total formulation).
+  /** q66/q99's running revenue share under (rc desc, tieCol asc) order:
+    * [[prefixSums]] over integer cents with `rc` as both the order and
+    * the summed column; cum = rc_cum/rc_tot is the exact integer
+    * running sum divided once by the long total (the long/long column
+    * division promotes both to double). Adds `rc_cum`, `rc_tot` and
+    * `cum`.
     */
   private[graft] def cumShareDesc(in: DataFrame, tieCol: String): DataFrame =
-    cumSumDesc(in, "rc", tieCol, "rc")
-      .withColumn("cum", col("cum_sum") / col("t"))
+    prefixSums(in, "rc", Seq("rc"), desc = true, tie = Some(tieCol))
+      .withColumn("cum", col("rc_cum") / col("rc_tot"))
 
   /** Exact 1-based descending rank (row_number under (v desc, tieCol
     * asc) order), optionally per `partCols` group, WITHOUT a
-    * single-partition rank window over a data-proportional axis:
-    * rows co-bucket by v (rankBucketed — equal values always share a
-    * bucket, so the order never straddles a boundary), row_number
-    * runs per (partCols, bucket), and the cross-bucket rank offset is
-    * a count prefix over the bounded |groups|×B bucket axis,
-    * broadcast back. rk = offset + within is the exact integer rank
-    * the global window would produce. Callers should persist `in`
-    * (the bucket stats subplan is one extra scan). Adds `rk` (long).
+    * single-partition rank window over a data-proportional axis: the
+    * [[prefixSums]] running count of a constant 1. Callers should
+    * persist `in`. Adds `rk` (long) and `rk_tot`, the row count of the
+    * row's partCols group.
     */
   private[graft] def bucketRank(in: DataFrame, v: String, tieCol: String,
-      partCols: Seq[String] = Nil): DataFrame = {
-    val bucketed = rankBucketed(in, v)
-    val pc = partCols.map(col)
-    val win = Window.partitionBy(pc :+ col("bucket"): _*)
-      .orderBy(col(v).desc, col(tieCol))
-    // per-cell counts ride the SAME (partCols, bucket) shuffle as the
-    // row_number (whole-partition frame) — cumSumDesc's shared-exchange
-    // discipline, so the upstream panel computes once
-    val withRk = bucketed
-      .withColumn("rk_in", row_number().over(win))
-      .withColumn("bn",
-        count(lit(1)).over(Window.partitionBy(pc :+ col("bucket"): _*)))
-    val wb = Window.partitionBy(pc: _*).orderBy(col("bucket").desc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val off = withRk.groupBy(pc :+ col("bucket"): _*)
-      .agg(first("bn").as("bn"))
-      .withColumn("rk_off", coalesce(sum("bn").over(wb), lit(0L)))
-    withRk
-      .join(broadcast(off.select(
-        (partCols :+ "bucket").map(col) :+ col("rk_off"): _*)),
-        partCols :+ "bucket")
-      .withColumn("rk", col("rk_off") + col("rk_in"))
-      .drop("bn")
-  }
+      partCols: Seq[String] = Nil): DataFrame =
+    prefixSums(in.withColumn("rk", lit(1L)), v, Seq("rk"), partCols,
+        desc = true, tie = Some(tieCol))
+      .drop("rk").withColumnRenamed("rk_cum", "rk")
 
   // q66: ABC ANALYSIS — the cumulative-share Pareto classification
   // (A = first 80% of revenue, B = next 15%, C = tail) every inventory/
@@ -1815,7 +1711,7 @@ object Relational {
       .groupBy(col("abc_class"))
       .agg(count(lit(1)).as("n_parts"),
         round(sum("rc") / 100.0, 2).as("revenue"),
-        round(sum("rc") / first(col("t")), 4).as("share"))
+        round(sum("rc") / first(col("rc_tot")), 4).as("share"))
       .orderBy("abc_class")
 
   val q66_abc_analysis: Q = (s, d) =>
@@ -2207,8 +2103,8 @@ object Relational {
   def rankBuckets(nDistinct: Long): Int =
     math.max(64L, math.min(1L << 14, nDistinct / RankBucketCells + 1)).toInt
 
-  /** Shared value→bucket assignment for the exact-rank machinery
-    * (midranks/q78/q85/q90 and the q66/q99/q110 cumulative-share lanes):
+  /** Value→bucket assignment for the exact-rank primitive
+    * [[prefixSums]]:
     * ONE stats pass collects (min, max, approx distinct count) of `v`,
     * sizes the bucket count from the cell count (rankBuckets), and
     * assigns bucket = equi-width cell over v — in LOG domain when the
@@ -2256,34 +2152,79 @@ object Relational {
       .drop("__rb_mn", "__rb_mx", "__rb_nd")
   }
 
+  /** Exact running sums WITHOUT a single-partition window over a
+    * data-proportional axis — the one exact-rank mechanism behind
+    * exactQuantiles, midranks, the AUC/Gini/KS readouts and the
+    * cumulative-share/rank lanes. For each column c of `sums` adds
+    * `c_cum`, the inclusive running sum under (partCols; v ascending,
+    * or descending when `desc`, then `tie` ascending), and `c_tot`, the
+    * total per partCols group. Rows co-bucket by v (rankBucketed: equal
+    * values always share a bucket, so the order never straddles a
+    * boundary); the within-bucket running sum runs per (partCols,
+    * bucket) and the bucket totals ride the SAME window exchange (a
+    * whole-partition frame) — a groupBy straight off the bucketed
+    * frame would put a partial agg below a second exchange (the q99
+    * sf10 2× found at r13). The cross-bucket offset is a prefix over
+    * the bounded |groups|×B bucket axis, broadcast back; offset +
+    * within is the exact sum the global window would produce. Null v
+    * sorts first ascending and last descending (Spark's default null
+    * ordering); rows tied on (v, tie) take distinct running sums in
+    * arbitrary order, as under a global rows frame. Spark prunes the
+    * bucket stats, window and offset branches to different columns,
+    * so an unpersisted `in` is recomputed once per branch: callers
+    * should persist an expensive `in`.
+    */
+  private[graft] def prefixSums(in: DataFrame, v: String, sums: Seq[String],
+      partCols: Seq[String] = Nil, desc: Boolean = false,
+      tie: Option[String] = None): DataFrame = {
+    val pc = partCols.map(col)
+    def dir(c: String): Column = if (desc) col(c).desc else col(c).asc
+    val cell = Window.partitionBy(pc :+ col("bucket"): _*)
+    val run = cell.orderBy(dir(v) +: tie.map(col).toSeq: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val within = sums.foldLeft(rankBucketed(in, v)) { (df, c) =>
+      df.withColumn(s"__ps_in_$c", sum(c).over(run))
+        .withColumn(s"__ps_b_$c", sum(c).over(cell))
+    }
+    // all rows of a bucket carry the same total — first() is exact
+    val firsts = sums.map(c => first(s"__ps_b_$c").as(s"__ps_b_$c"))
+    val group = Window.partitionBy(pc: _*)
+    val before = group.orderBy(dir("bucket"))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val off = sums.foldLeft(within.groupBy(pc :+ col("bucket"): _*)
+        .agg(firsts.head, firsts.tail: _*)) { (df, c) =>
+      df.withColumn(s"__ps_off_$c",
+          coalesce(sum(s"__ps_b_$c").over(before), lit(0L)))
+        .withColumn(s"${c}_tot", sum(s"__ps_b_$c").over(group))
+    }
+    val joined = within.drop(sums.map(c => s"__ps_b_$c"): _*)
+      .join(broadcast(off.drop(sums.map(c => s"__ps_b_$c"): _*)),
+        partCols :+ "bucket")
+    sums.foldLeft(joined) { (df, c) =>
+      df.withColumn(s"${c}_cum", col(s"__ps_off_$c") + col(s"__ps_in_$c"))
+        .drop(s"__ps_off_$c", s"__ps_in_$c")
+    }.drop("bucket")
+  }
+
   // q78: EXACT ROC AUC, distributed — the Mann-Whitney statistic
   // WITHOUT a global sort: AUC = Σ_s n⁺_s·(N⁻_{<s} + ½n⁻_s) / (n⁺n⁻)
   // over DISTINCT scores s (ties get the standard ½ credit). Scores
-  // collapse to (bucket, score) cells in one keyed agg; within-bucket
-  // cumulative negatives run in a bucket-partitioned window
-  // (parallelism = rankBuckets(cells) — scales with the axis); cross-
-  // bucket offsets are a prefix sum on the bounded B-row bucket axis,
-  // broadcast back. No single-partition pass ever sees the corpus —
-  // the 100 TB shape for an exact rank statistic. The U terms are
-  // integers-plus-halves (exactly representable doubles), so the sum
-  // is order-independent.
+  // collapse to (score) cells in one keyed agg; the cumulative
+  // negatives ride prefixSums (bucket-partitioned windows plus a prefix
+  // on the bounded B-row bucket axis). No single-partition pass ever
+  // sees the corpus — the 100 TB shape for an exact rank statistic.
+  // The U terms are integers-plus-halves (exactly representable
+  // doubles), so the sum is order-independent.
   val q78_auc: Q = (s, d) => {
     val ev = Tables.events(s, d)
       .select(col("value").as("sc"),
         (col("event_type") === "purchase").cast("long").as("y"))
-    val cells = rankBucketed(ev, "sc")
-      .groupBy(col("bucket"), col("sc"))
+    val cells = ev.groupBy(col("sc"))
       .agg(sum("y").as("np"), (count(lit(1)) - sum("y")).as("nn"))
-    val win = Window.partitionBy("bucket").orderBy("sc")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wb = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, -1)
-    val off = cells.groupBy("bucket").agg(sum("nn").as("bnn"))
-      .withColumn("nn_off", coalesce(sum("bnn").over(wb), lit(0L)))
-    cells
-      .withColumn("nn_below_in", coalesce(sum("nn").over(win), lit(0L)))
-      .join(broadcast(off.select("bucket", "nn_off")), Seq("bucket"))
+    // negatives strictly below a score: the exclusive count nn_cum − nn
+    prefixSums(cells, "sc", Seq("nn"))
       .agg(
-        sum(col("np") * (col("nn_off") + col("nn_below_in") +
+        sum(col("np") * (col("nn_cum") - col("nn") +
           col("nn") / lit(2.0))).as("u"),
         sum("np").as("n_pos"), sum("nn").as("n_neg"))
       .select(col("n_pos"), col("n_neg"),
@@ -2477,9 +2418,8 @@ object Relational {
   // q85: GINI COEFFICIENT of customer spend — revenue-concentration
   // inequality (q66's ABC tells you the top bands; Gini is the single
   // scale-free number). Exact rank-sum WITHOUT a global sort, the q78
-  // machinery generalized: (bucket, value) cells from one keyed agg,
-  // within-bucket exclusive counts in a bucket-partitioned window,
-  // cross-bucket offsets on the B-row axis. A value v with count c and
+  // machinery generalized: (value) cells from one keyed agg, exclusive
+  // counts via prefixSums. A value v with count c and
   // p predecessors contributes v·(c·p + c(c+1)/2) to Σ rank·x (ties are
   // permutation-invariant, so cell order within equal values cannot
   // matter). Total spend reports in EXACT integer cents (a 2dp-rounded
@@ -2497,23 +2437,14 @@ object Relational {
     * already a double sum whose residue the 6dp round absorbs.
     */
   private[graft] def giniReadout(spend: DataFrame): DataFrame = {
-    val cells = rankBucketed(spend, "cents")
-      .groupBy(col("bucket"), col("cents"))
-      .agg(count(lit(1)).as("c"))
-    val win = Window.partitionBy("bucket").orderBy("cents")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wb = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, -1)
-    val off = cells.groupBy("bucket").agg(sum("c").as("bc"))
-      .withColumn("c_off", coalesce(sum("bc").over(wb), lit(0L)))
-    cells
-      .withColumn("below_in", coalesce(sum("c").over(win), lit(0L)))
-      .join(broadcast(off.select("bucket", "c_off")), Seq("bucket"))
+    val cells = spend.groupBy(col("cents")).agg(count(lit(1)).as("c"))
+    prefixSums(cells, "cents", Seq("c"))
       .agg(
-        // rank factor in double: c·(c_off+below_in) is a bigint
-        // product bounded by n² (wraps past n ≈ 3e9); srx is a double
-        // sum anyway, so the cast costs nothing and removes the cliff
+        // rank factor in double: c·(c_cum−c) is a bigint product
+        // bounded by n² (wraps past n ≈ 3e9); srx is a double sum
+        // anyway, so the cast costs nothing and removes the cliff
         sum(col("cents") * (col("c").cast("double") *
-            (col("c_off") + col("below_in")) +
+            (col("c_cum") - col("c")) +
           col("c") * (col("c") + 1) / lit(2.0))).as("srx"),
         sum("c").as("n"), sum(col("cents") * col("c")).as("t"))
       .select(col("n").as("n_customers"), col("t").as("total_cents"),
@@ -2669,29 +2600,15 @@ object Relational {
 
   /** Distributed midranks over one numeric column `v`: for each DISTINCT
     * value, the 1-based average rank under the midrank tie convention —
-    * q78/q85's machinery packaged for reuse. (bucket, v) cells from one
-    * keyed agg, within-bucket exclusive prefix in a bucket-partitioned
-    * window (parallelism = rankBuckets, adaptive in the cell count),
-    * cross-bucket offsets on the bounded B-row axis broadcast back. No
-    * single partition ever sees the corpus. Returns (v, c, midrank);
-    * midranks are integers or half-integers — exactly representable,
-    * order-independent.
+    * q78/q85's machinery packaged for reuse: (v) cells from one keyed
+    * agg, exclusive counts via prefixSums. No single partition ever
+    * sees the corpus. Returns (v, c, midrank); midranks are integers or
+    * half-integers — exactly representable, order-independent.
     */
-  private[graft] def midranks(in: DataFrame): DataFrame = {
-    val cells = rankBucketed(in, "v")
-      .groupBy(col("bucket"), col("v"))
-      .agg(count(lit(1)).as("c"))
-    val win = Window.partitionBy("bucket").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wb = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, -1)
-    val off = cells.groupBy("bucket").agg(sum("c").as("bc"))
-      .withColumn("c_off", coalesce(sum("bc").over(wb), lit(0L)))
-    cells
-      .withColumn("below_in", coalesce(sum("c").over(win), lit(0L)))
-      .join(broadcast(off.select("bucket", "c_off")), Seq("bucket"))
+  private[graft] def midranks(in: DataFrame): DataFrame =
+    prefixSums(in.groupBy(col("v")).agg(count(lit(1)).as("c")), "v", Seq("c"))
       .select(col("v"), col("c"),
-        (col("c_off") + col("below_in") + (col("c") + lit(1.0)) / 2).as("midrank"))
-  }
+        (col("c_cum") - col("c") + (col("c") + lit(1.0)) / 2).as("midrank"))
 
   // q89: SPEARMAN RANK CORRELATION between per-customer order count and
   // total spend — the monotone-association number Pearson (q61) misses
@@ -2734,36 +2651,23 @@ object Relational {
   // q90: TWO-SAMPLE KOLMOGOROV-SMIRNOV — the distribution-drift test
   // (are purchase values drawn from the same distribution as views?):
   // D = sup_x |F1(x) − F2(x)|. Both empirical CDFs materialize over the
-  // SAME (bucket, value) cell frame in one keyed agg carrying a per-
-  // class counter pair; running counts use the q78 bucket-partitioned
-  // window + B-row cross-bucket prefix. CDF values are exact integer
-  // counts divided once by n (a single correctly-rounded IEEE division
-  // per cell, identical on any engine), so D, its argmax location, and
-  // the min-value tie-break are all deterministic — no rounding hazard.
+  // SAME (value) cell frame in one keyed agg carrying a per-class
+  // counter pair; both running counts ride one prefixSums call. CDF
+  // values are exact integer counts divided once by n (a single
+  // correctly-rounded IEEE division per cell, identical on any engine),
+  // so D, its argmax location, and the min-value tie-break are all
+  // deterministic — no rounding hazard.
   val q90_ks: Q = (s, d) => {
     val ev = Tables.events(s, d)
       .filter(col("event_type").isin("view", "purchase"))
       .select(col("value").as("v"),
         (col("event_type") === "purchase").cast("long").as("g"))
-    val cells = rankBucketed(ev, "v")
-      .groupBy(col("bucket"), col("v"))
+    val cells = ev.groupBy(col("v"))
       .agg(sum("g").as("c1"), (count(lit(1)) - sum("g")).as("c0"))
-    val win = Window.partitionBy("bucket").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wb = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, -1)
-    val off = cells.groupBy("bucket")
-      .agg(sum("c1").as("b1"), sum("c0").as("b0"))
-      .withColumn("o1", coalesce(sum("b1").over(wb), lit(0L)))
-      .withColumn("o0", coalesce(sum("b0").over(wb), lit(0L)))
-    val tot = ev.agg(sum("g").as("n1"), (count(lit(1)) - sum("g")).as("n0"))
-    val dd = cells
-      .withColumn("k1in", sum("c1").over(win))
-      .withColumn("k0in", sum("c0").over(win))
-      .join(broadcast(off.select("bucket", "o1", "o0")), Seq("bucket"))
-      .crossJoin(broadcast(tot))
-      .select(col("v"), col("n1"), col("n0"),
-        abs((col("o1") + col("k1in")) / col("n1").cast("double") -
-          (col("o0") + col("k0in")) / col("n0").cast("double")).as("dd"))
+    val dd = prefixSums(cells, "v", Seq("c1", "c0"))
+      .select(col("v"), col("c1_tot").as("n1"), col("c0_tot").as("n0"),
+        abs(col("c1_cum") / col("c1_tot").cast("double") -
+          col("c0_cum") / col("c0_tot").cast("double")).as("dd"))
     val mx = dd.agg(max("dd").as("ksd"))
     dd.crossJoin(broadcast(mx)).filter(col("dd") === col("ksd"))
       .agg(first("n1").as("n1"), first("n0").as("n0"),
@@ -3142,7 +3046,7 @@ object Relational {
           .otherwise("C"))
       .groupBy(col("abc_class"), col("xyz_class"))
       .agg(count(lit(1)).as("n_parts"),
-        round(sum("rc") / first(col("t")), 4).as("rev_share"))
+        round(sum("rc") / first(col("rc_tot")), 4).as("rev_share"))
       .orderBy("abc_class", "xyz_class")
   }
 
@@ -4042,7 +3946,7 @@ object Relational {
   // over TIME). A year's customer axis is SF-proportional, so the
   // per-year rank never runs in one partition: ranks come from the
   // two-level bucket machinery — cents co-bucket via rankBucketed,
-  // row_number runs per (year, bucket), and the cross-bucket rank
+  // a running count runs per (year, bucket), and the cross-bucket rank
   // offset is a prefix over the bounded |years|×B axis, broadcast
   // back. rk = offset + within is the exact same integer rank the
   // per-year window produced; shares divide exact integer-cent sums
@@ -4052,13 +3956,11 @@ object Relational {
     * and s45's streaming twin. Caller persists `per`.
     */
   private[graft] def paretoDriftReadout(per: DataFrame): DataFrame = {
-    val nyr = per.groupBy("yr").agg(count(lit(1)).as("n"))
     bucketRank(per, "cents", "o_custkey", Seq("yr"))
-      .join(broadcast(nyr), Seq("yr"))
       .groupBy("yr")
-      .agg(max("n").as("n_customers"),
+      .agg(max("rk_tot").as("n_customers"),
         sum("cents").as("tot"),
-        sum(when(col("rk") * 5 <= col("n"), col("cents")).otherwise(0L))
+        sum(when(col("rk") * 5 <= col("rk_tot"), col("cents")).otherwise(0L))
           .as("top_cents"))
       .select(col("yr"), col("n_customers"),
         round(col("top_cents") / col("tot").cast("double"), 4)

@@ -1101,7 +1101,7 @@ object TextAnalysis {
   // fits log f ≈ c + s·log r with s near −1; generated/spam text
   // doesn't). Vocabulary is Heaps-bounded (~√corpus types) but still
   // grows with SF, so the rank comes from the two-level bucket
-  // machinery (Relational.bucketRank: row_number per frequency
+  // machinery (Relational.bucketRank: a running count per frequency
   // bucket + a broadcast count prefix over the bounded bucket axis —
   // never a single-partition window over the vocab); the log-log fit
   // is the native regr_* moment pass of q64.
@@ -1723,7 +1723,7 @@ object TextAnalysis {
   // and report the per-source allocation plus the score waterline
   // where selection stopped. The greedy cut is an exact cumulative
   // token sum over the (score desc, doc_id) order — at corpus scale
-  // that is a rank problem, so it rides cumSumDesc (bucket-partitioned
+  // that is a rank problem, so it rides prefixSums (bucket-partitioned
   // running sums + broadcast B-row offsets, never a global window over
   // the document axis). Budget and cut are exact integer arithmetic
   // ((t*3) div 10, cum ≤ budget) — engine-identical; scores are t28's
@@ -1736,9 +1736,10 @@ object TextAnalysis {
       // and per-branch column pruning would re-tokenize documents per
       // consumer; the cache dedupes it with no build job
       .persist()
-    graft.ops.Relational.cumSumDesc(scored, "score", "doc_id", "nt")
-      .withColumn("budget", expr("(t * 3) div 10"))
-      .filter(col("cum_sum") <= col("budget"))
+    graft.ops.Relational.prefixSums(scored, "score", Seq("nt"),
+        desc = true, tie = Some("doc_id"))
+      .withColumn("budget", expr("(nt_tot * 3) div 10"))
+      .filter(col("nt_cum") <= col("budget"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("docs_taken"),
         sum("nt").as("tokens_taken"),

@@ -258,6 +258,16 @@ class RelationalSpec extends AnyFunSuite {
           Seq("g"), weight = Some(col("w")))
         .collect().map(r => r.getString(0) -> r.getSeq[Double](1)).toMap
       assert(gotC == got)
+      // a negative weight fails the query, as Percentile's freq does
+      val neg = spark.createDataFrame(Seq(("A", 1.0, 2L), ("A", 2.0, -1L)))
+        .toDF("g", "v", "w")
+      val err = intercept[Exception] {
+        ops.Relational.exactQuantiles(neg, "v", Seq(0.5), Seq("g"),
+          weight = Some(col("w"))).collect()
+      }
+      assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .exists(e => String.valueOf(e.getMessage).contains("negative weight")),
+        s"negative weight must fail loudly: $err")
     } finally panel.unpersist()
   }
 
@@ -2400,6 +2410,36 @@ class RelationalSpec extends AnyFunSuite {
           assert(grk((grp, k)) == i + 1L, s"grouped rank diverges at ($grp,$k)")
       }
     }
+    // ascending exclusive counts over distinct-value cells (the midranks
+    // and Gini shape) and two sum columns at once (the q90 shape), with
+    // a null value cell: null sorts first ascending, last descending
+    val cells = in.groupBy("rc")
+      .agg(count(lit(1)).as("c"), sum(pmod(col("k"), lit(2L))).as("odd"))
+      .union(spark.range(1).select(lit(null).cast("long").as("rc"),
+        lit(3L).as("c"), lit(1L).as("odd")))
+    val asc = ops.Relational.prefixSums(cells, "rc", Seq("c", "odd"))
+      .collect().map(r =>
+        Option(r.getAs[java.lang.Long]("rc")).map(_.longValue) ->
+          (r.getAs[Long]("c_cum") - r.getAs[Long]("c"), r.getAs[Long]("odd_cum"),
+            r.getAs[Long]("c_tot"), r.getAs[Long]("odd_tot"))).toMap
+    val plainCells = (None, 3L, 1L) +: rows.groupBy(_._2).toSeq.sortBy(_._1)
+      .map { case (rc, ms) =>
+        (Some(rc), ms.length.toLong, ms.count(_._1 % 2 == 1).toLong) }
+    val (cTot, oddTot) = (plainCells.map(_._2).sum, plainCells.map(_._3).sum)
+    assert(asc.size == plainCells.length)
+    var below, oddRun = 0L
+    plainCells.foreach { case (rc, c, odd) =>
+      oddRun += odd
+      assert(asc(rc) == ((below, oddRun, cTot, oddTot)),
+        s"prefixSums diverges at rc=$rc")
+      below += c
+    }
+    val nullLast = ops.Relational.prefixSums(cells, "rc", Seq("c"), desc = true)
+      .filter(col("rc").isNull).select("c_cum", "c_tot").head()
+    assert(nullLast.getLong(0) == cTot && nullLast.getLong(1) == cTot)
+    // empty input: no rows, no failure
+    assert(ops.Relational.prefixSums(cells.filter(lit(false)), "rc",
+      Seq("c", "odd")).collect().isEmpty)
     in.unpersist()
   }
 
