@@ -308,12 +308,7 @@ object CdcQueries {
       .withColumn("fingerprint", lit(AvroEnvelope.fingerprintB64))
       .dropDuplicates(Seq("fingerprint", "lsn_long"))
       .drop("fingerprint")
-    Apply.liveEvents(deduped)
-      .groupBy(col("pk"))
-      .agg(max("ord").as("last_ord"),
-        max_by(col("eff_op"), col("ord")).as("last_op"),
-        max_by(col("value"), col("ord")).as("last_value"),
-        count(lit(1)).as("n_half"))
+    Apply.fold(deduped)
       .filter(col("last_op") =!= "d")
       .select(col("pk"), round(col("last_value"), 2).as("value"),
         col("last_ord"), col("n_half"))
@@ -560,31 +555,12 @@ object CdcQueries {
     * half-events keep their table, truncates cut only their own table
     * (per-table broadcast cuts), one (tbl, pk) aggregation total.
     */
-  private def multiTableApply(f2: DataFrame): DataFrame = {
-    val primary = f2.filter(col("op") =!= "t").select(col("tbl"),
-      (col("lsn_long") * 2).as("ord"),
-      when(col("op") === "u_pk", "d").otherwise(col("op")).as("eff_op"),
-      when(col("op").isin("d", "u_pk"), col("pk_before"))
-        .otherwise(col("pk_after")).as("pk"),
-      when(col("op").isin("d", "u_pk"), lit(null).cast("double"))
-        .otherwise(col("after_value")).as("value"))
-    val upkInsert = f2.filter(col("op") === "u_pk").select(col("tbl"),
-      (col("lsn_long") * 2 + 1).as("ord"), lit("c").as("eff_op"),
-      col("pk_after").as("pk"), col("after_value").as("value"))
-    val cuts = f2.filter(col("op") === "t").groupBy(col("tbl"))
-      .agg(max(col("lsn_long") * 2 + 1).as("tmax"))
-    primary.union(upkInsert)
-      .join(broadcast(cuts), Seq("tbl"), "left")
-      .filter(col("ord") > coalesce(col("tmax"), lit(-1L)))
-      .groupBy(col("tbl"), col("pk"))
-      .agg(max("ord").as("last_ord"),
-        max_by(col("eff_op"), col("ord")).as("last_op"),
-        max_by(col("value"), col("ord")).as("last_value"))
+  private def multiTableApply(f2: DataFrame, base: Option[DataFrame] = None): DataFrame =
+    Apply.fold(f2, base, keys = Seq("tbl"))
       .filter(col("last_op") =!= "d")
       .select(col("tbl"), col("pk"),
         round(col("last_value"), 2).as("value"), col("last_ord"))
       .orderBy("tbl", "pk")
-  }
 
   // c31: keepalive → standby-status REPLY roundtrip — the ack side of the
   // replication loop: reply-requested keepalives make the client emit a
@@ -688,19 +664,14 @@ object CdcQueries {
     //    evict-oldest ⇒ the store keeps the maximal LSN suffix
     val floor = Retention.suffixFloor(gated, lit(1L), cfg.nats.retention.maxMsgs)
     val minLsn = gated.agg(min("lsn_long")).head().getLong(0)
-    // -- resume (c08): history below the floor is unservable from the
-    //    stream — the snapshot producer's cut (the live replica just
-    //    below the floor) re-enters as pseudo-inserts at floor−1, the
-    //    retained suffix replays on top. Per-table truncate cuts inside
-    //    the suffix still wipe snapshot rows (their ords are lower).
-    val snapFlat = multiTableApply(gated.filter(col("lsn_long") < floor))
-      .select(col("tbl"), lit(floor - 1).as("lsn_long"), lit("c").as("op"),
-        lit(null).cast("long").as("pk_before"), col("pk").as("pk_after"),
-        col("value").as("after_value"))
-    val store = snapFlat.union(gated.filter(col("lsn_long") >= floor))
-    // -- apply (c30) + route (c18): the replica, labeled with the topic
-    //    its WAL arrived on
-    val replica = multiTableApply(store)
+    // -- resume (c08) + apply (c30): history below the floor is
+    //    unservable from the stream — the snapshot producer's cut (the
+    //    replica just below the floor) is the base of the apply's fold
+    //    over the retained suffix. Per-table truncate cuts inside the
+    //    suffix still wipe snapshot rows (their ords are lower). Route
+    //    (c18): the replica, labeled with the topic its WAL arrived on.
+    val snapshot = Apply.snapshotOf(gated.filter(col("lsn_long") < floor), Seq("tbl"))
+    val replica = multiTableApply(gated.filter(col("lsn_long") >= floor), Some(snapshot))
       .select(concat(lit(cfg.nats.namespace + ".testdb.wal.public."),
           col("tbl")).as("topic"),
         col("tbl"), col("pk"), col("value"))

@@ -168,28 +168,8 @@ object JdbcEvolution {
       val byWriter = decoded.groupBy(col("writer_version")).count()
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap // ≤2 rows
       // one-pass keyed apply, src carried through the half-events
-      val f2 = decoded.toDF()
-      val primary = f2.filter(col("op") =!= "t").select(
-        (col("lsn_long") * 2).as("ord"),
-        when(col("op") === "u_pk", "d").otherwise(col("op")).as("eff_op"),
-        when(col("op").isin("d", "u_pk"), col("pk_before"))
-          .otherwise(col("pk_after")).as("pk"),
-        when(col("op").isin("d", "u_pk"), lit(null).cast("double"))
-          .otherwise(col("value")).as("value"),
-        when(col("op").isin("d", "u_pk"), lit(null).cast("string"))
-          .otherwise(col("src")).as("src"))
-      val upkInsert = f2.filter(col("op") === "u_pk").select(
-        (col("lsn_long") * 2 + 1).as("ord"), lit("c").as("eff_op"),
-        col("pk_after").as("pk"), col("value"), col("src"))
-      val cut = f2.filter(col("op") === "t")
-        .agg(coalesce(max(col("lsn_long") * 2 + 1), lit(-1L)).as("tmax"))
-      val out = primary.union(upkInsert)
-        .crossJoin(broadcast(cut)).filter(col("ord") > col("tmax"))
-        .groupBy(col("pk"))
-        .agg(max("ord").as("last_ord"),
-          max_by(col("eff_op"), col("ord")).as("last_op"),
-          max_by(col("value"), col("ord")).as("last_value"),
-          max_by(col("src"), col("ord")).as("last_src"))
+      val out = Apply.fold(decoded.toDF().withColumnRenamed("value", "after_value"),
+          carry = Seq("src"))
         .filter(col("last_op") =!= "d")
         .select(col("pk"), round(col("last_value"), 2).as("value"),
           col("last_ord"), col("last_src").as("src"))

@@ -23,9 +23,9 @@ import graft.Tables
   *     (internal/dao/replication.go Next/Stream; daemon wiring
   *     internal/dao/init.go:91-145): each poll reads only
   *     `lsn > last_applied` and merges into the evolving replica state
-  *     exactly like c13's streaming apply — state enters the next merge
-  *     as pseudo-inserts at its own ord, so a truncate inside a batch
-  *     still wipes prior state (Apply's ord discipline).
+  *     exactly like c13's streaming apply — state is the base of the
+  *     next `Apply.fold`, entering at its own ord, so a truncate inside
+  *     a batch still wipes prior state (Apply's ord discipline).
   *
   * The replayed result is therefore ≡ c04's full-replay apply on the same
   * rows, which is what the DuckDB oracle pins.
@@ -58,26 +58,6 @@ object JdbcSource {
 
   private def lower(df: DataFrame): DataFrame = df.toDF(flatCols: _*)
 
-  /** One incremental apply step: current state (tombstones included, as
-    * pseudo half-events at their own ord) merged with a poll batch.
-    * A truncate inside the batch cuts everything below it — state rows'
-    * ords predate the batch, so they fall too, matching full replay.
-    */
-  private def applyBatch(state: DataFrame, batchFlat: DataFrame): DataFrame = {
-    val pseudo = state.select(
-      col("last_ord").as("ord"), col("last_op").as("eff_op"),
-      col("pk"), col("last_value").as("value"))
-    val cut = batchFlat.filter(col("op") === "t")
-      .agg(coalesce(max(col("lsn_long") * 2 + 1), lit(-1L)).as("tmax"))
-    pseudo.union(Apply.halfEvents(batchFlat))
-      .crossJoin(broadcast(cut)).filter(col("ord") > col("tmax"))
-      .groupBy(col("pk"))
-      .agg(
-        max("ord").as("last_ord"),
-        max_by(col("eff_op"), col("ord")).as("last_op"),
-        max_by(col("value"), col("ord")).as("last_value"))
-  }
-
   /** Run the full ingest edge. Returns (materialized replica result,
     * #partitions of the snapshot jdbc scan, #poll batches issued) so the
     * spec can pin the parallel-snapshot and incremental-poll shapes.
@@ -104,7 +84,7 @@ object JdbcSource {
         val batch = s.read.jdbc(
           url, s"(SELECT * FROM WAL WHERE LSN_LONG > $from AND LSN_LONG <= $hi) AS W",
           props)
-        state = applyBatch(state, lower(batch))
+        state = Apply.fold(lower(batch), Some(state))
         from = hi
         nBatches += 1
       }
@@ -204,7 +184,7 @@ object JdbcSource {
               val batch = s.read.jdbc(
                 url, s"(SELECT * FROM WAL WHERE LSN_LONG > $last AND LSN_LONG <= $hi) AS W",
                 props)
-              state = applyBatch(state, lower(batch))
+              state = Apply.fold(lower(batch), Some(state))
               last = hi
             }
           }

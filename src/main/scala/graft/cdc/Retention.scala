@@ -90,22 +90,12 @@ object Retention {
     * `from` (its own state for a live consumer, the snapshot LSN after a
     * gap fallback); state ≤ from comes from OUTSIDE the bounded stream
     * (local state / snapshot store), the tail comes from the retained
-    * suffix only. Same merge discipline as c08: state rows enter as
-    * pseudo-inserts at ord 2·from+1, one keyed aggregation total.
+    * suffix only. Same merge as c08: the state at `from` is the base of
+    * one fold over the retained suffix.
     */
   def resumeReplay(flat: DataFrame, retainedFloor: Long, from: Long): DataFrame = {
-    val snapState = Apply.latest(flat.filter(col("lsn_long") <= from))
-    val snapRows = snapState.select(
-      lit(from * 2 + 1).as("ord"), lit("c").as("eff_op"),
-      col("pk"), col("last_value").as("value"))
     val wal = flat.filter(col("lsn_long") >= retainedFloor && col("lsn_long") > from)
-    val cut = wal.filter(col("op") === "t")
-      .agg(coalesce(max(col("lsn_long") * 2 + 1), lit(-1L)).as("tmax"))
-    snapRows.union(Apply.halfEvents(wal))
-      .crossJoin(broadcast(cut)).filter(col("ord") > col("tmax"))
-      .groupBy(col("pk"))
-      .agg(max_by(col("eff_op"), col("ord")).as("last_op"),
-        max_by(col("value"), col("ord")).as("last_value"))
+    Apply.fold(wal, Some(Apply.snapshotOf(flat.filter(col("lsn_long") <= from))))
       .filter(col("last_op") =!= "d")
       .select(col("pk"), round(col("last_value"), 2).as("value"))
   }

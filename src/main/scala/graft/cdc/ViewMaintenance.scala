@@ -8,14 +8,18 @@ import graft.Tables
   * downstream workload a creek consumer actually runs: a grouped
   * aggregate view (per key-group row count + sum) kept current from
   * change DELTAS, never recomputed from the full replica. This is the
-  * classic IVM contract: per batch, only the touched keys are re-read
-  * (old value out, new value in), the view absorbs the group-level
-  * deltas, and a truncate — which invalidates everything by definition —
-  * triggers the one legitimate rebuild.
+  * classic IVM contract: per batch, only the touched keys are
+  * re-aggregated (old value out, new value in), the view absorbs the
+  * group-level deltas, and a truncate — which invalidates everything by
+  * definition — triggers the one legitimate rebuild.
   *
-  * Scale shape: per poll batch the work is O(|batch| + |touched keys|),
-  * not O(|replica|): untouched state rides across via anti-join, the
-  * view update is a tiny grouped union. Sums are maintained in integer
+  * Cost: each delta batch still scans the WHOLE state to find its
+  * touched keys (a join against the touched set) and rewrites it
+  * (left-anti + union + localCheckpoint), so a batch costs
+  * O(|batch| + |state|), not O(|batch| + |touched keys|) — graftbench
+  * measured 51,520 state rows read per applied event. ROADMAP open
+  * item 1 moves the state onto a bucketed store so a batch reads only
+  * the buckets its keys touch. Sums are maintained in integer
   * CENTS (per-row cents derived once from the same double both engines
   * see), so delta accumulation is order-independent and exact — a
   * floating view maintained by ± deltas would drift from the recompute.
@@ -31,25 +35,10 @@ object ViewMaintenance {
       .agg(count(lit(1)).as("n_rows"),
         sum(round(col("last_value") * 100).cast("long")).as("sum_cents"))
 
-  /** Merge a batch's half-events into (a subset of) live state rows:
-    * state enters as pseudo-inserts at its own ord (strictly below any
-    * batch ord — batches ascend the WAL), one keyed aggregation, live
-    * rows out. `tmax` > 0 applies an in-batch truncate cut.
-    */
-  private def mergeBatch(state: Option[DataFrame], half: DataFrame,
-      tmax: Long): DataFrame = {
-    val pseudo = state.map(_.select(
-      col("last_ord").as("ord"), lit("c").as("eff_op"),
-      col("pk"), col("last_value").as("value")))
-    pseudo.fold(half)(_ union half)
-      .filter(col("ord") > tmax)
-      .groupBy(col("pk"))
-      .agg(max("ord").as("last_ord"),
-        max_by(col("eff_op"), col("ord")).as("last_op"),
-        max_by(col("value"), col("ord")).as("last_value"))
-      .filter(col("last_op") =!= "d")
+  /** Live rows of a folded state, as the view's state keeps them. */
+  private def live(state: DataFrame): DataFrame =
+    state.filter(col("last_op") =!= "d")
       .select(col("pk"), col("last_ord"), col("last_value"))
-  }
 
   /** The engine: carries (state, view) across batches as checkpointed
     * tables — what a production IVM job persists between runs. Shared by
@@ -65,17 +54,21 @@ object ViewMaintenance {
     def advance(chunk: DataFrame): Unit = {
       val tmax = chunk.filter(col("op") === "t")
         .agg(coalesce(max(col("lsn_long") * 2 + 1), lit(-1L))).head().getLong(0)
-      val half = Apply.halfEvents(chunk)
       if (view == null || tmax >= 0) {
-        // bootstrap, or truncate: the view is invalidated by definition
-        state = mergeBatch(Option(state), half, tmax).localCheckpoint()
+        // bootstrap, or truncate: the view is invalidated by definition,
+        // and the cut drops every state row (their ords precede the
+        // batch), so the batch alone folds to the new state
+        state = live(Apply.fold(chunk)).localCheckpoint()
         view = viewOf(state.select(col("pk"), col("last_value"))).localCheckpoint()
         onBatch(true, -1L)
       } else {
-        // DELTA path: only the touched keys are read and re-aggregated
-        val touched = half.select("pk").distinct()
+        // DELTA path: only the touched keys are re-aggregated
+        val touched = Apply.halfEvents(chunk).select("pk").distinct()
         val oldT = state.join(touched, Seq("pk"))
-        val newT = mergeBatch(Some(oldT), half, -1L)
+        // tmax < 0: the batch holds no truncate; dropping `t` rows says
+        // so to the optimizer, which then plans the fold without a cut
+        val newT = live(Apply.fold(chunk.filter(col("op") =!= "t"),
+          Some(oldT.withColumn("last_op", lit("c")))))
         val cents = (v: org.apache.spark.sql.Column) => round(v * 100).cast("long")
         val deltas = oldT
           .select(col("pk"), lit(-1L).as("dn"), (-cents(col("last_value"))).as("dc"))

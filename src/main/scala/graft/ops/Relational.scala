@@ -2169,20 +2169,24 @@ object Relational {
     * within is the exact sum the global window would produce. Null v
     * sorts first ascending and last descending (Spark's default null
     * ordering); rows tied on (v, tie) take distinct running sums in
-    * arbitrary order, as under a global rows frame. Spark prunes the
-    * bucket stats, window and offset branches to different columns,
-    * so an unpersisted `in` is recomputed once per branch: callers
-    * should persist an expensive `in`.
+    * arbitrary order, as under a global rows frame. The bucket stats,
+    * window and offset branches each read `in`. A filter that keeps
+    * every row (at least 0 non-null fields) but references every column
+    * stops Spark pruning them to different column sets, so all three
+    * read `in` identically and share ONE exchange beneath it (a persist
+    * of the value cells was measured slower, and a typed identity map
+    * pays a row conversion).
     */
   private[graft] def prefixSums(in: DataFrame, v: String, sums: Seq[String],
       partCols: Seq[String] = Nil, desc: Boolean = false,
       tie: Option[String] = None): DataFrame = {
+    val whole = in.na.drop(0, in.columns.toSeq)
     val pc = partCols.map(col)
     def dir(c: String): Column = if (desc) col(c).desc else col(c).asc
     val cell = Window.partitionBy(pc :+ col("bucket"): _*)
     val run = cell.orderBy(dir(v) +: tie.map(col).toSeq: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val within = sums.foldLeft(rankBucketed(in, v)) { (df, c) =>
+    val within = sums.foldLeft(rankBucketed(whole, v)) { (df, c) =>
       df.withColumn(s"__ps_in_$c", sum(c).over(run))
         .withColumn(s"__ps_b_$c", sum(c).over(cell))
     }

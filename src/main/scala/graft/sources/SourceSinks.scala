@@ -716,15 +716,14 @@ object SourceSinks {
   // ingestion service actually runs (creek's consumer feeding an
   // Iceberg/Delta table): the WAL stream lands in two commits against
   // x16's manifest layout. Commit 1 applies the first half of the
-  // stream into an immutable fileset; commit 2 MERGEs the second half's
-  // delta state (tombstones included) copy-on-write and swaps the
-  // manifest atomically. Carried rows die under a commit-2 truncate
-  // exactly as a full replay would kill them (ord > cut, broadcast
-  // scalar), so read-as-of(v2) must hash-match c04's full-replay
+  // stream into an immutable fileset; commit 2 folds the second half
+  // onto it copy-on-write and swaps the manifest atomically. Carried
+  // rows die under a commit-2 truncate exactly as a full replay would
+  // kill them, so read-as-of(v2) must hash-match c04's full-replay
   // replica — which IS the oracle. Scale: the replica never touches
   // the driver (c33 discipline — the returned plan is a file scan over
-  // the committed fileset); the merge is ONE keyed full-outer join;
-  // manifest reads are bounded path metadata.
+  // the committed fileset); the merge is ONE keyed aggregation (the
+  // Apply fold); manifest reads are bounded path metadata.
   val x19_cdc_table_sink: Q = (s, d) => {
     import s.implicits._
     val dir = cleanupOnExit(Files.createTempDirectory("graft_cdcsink"))
@@ -749,25 +748,18 @@ object SourceSinks {
       .cast("long").as("m")).collect()(0).getLong(0)
     val batch1 = flat.filter(col("lsn_long") <= mid)
     val batch2 = flat.filter(col("lsn_long") > mid)
-    graft.cdc.Apply.state(batch1).filter(col("last_op") =!= "d")
+    graft.cdc.Apply.latest(batch1)
       .select(col("pk"), col("last_value"), col("last_ord"))
       .write.mode("overwrite").parquet(s"$dir/A")
     Seq((1, "A")).toDF("version", "fileset")
       .repartition(1).write.mode("overwrite").parquet(s"$dir/manifest_v1")
     commit("manifest_v1")
-    val t2cut = batch2.filter(col("op") === "t")
-      .agg(coalesce(max(col("lsn_long") * 2 + 1), lit(-1L)).as("t2max"))
-    val delta = graft.cdc.Apply.state(batch2).select(
-      col("pk"), col("last_ord").as("d_ord"), col("last_op").as("d_op"),
-      col("last_value").as("d_value"))
-    s.read.parquet(s"$dir/A")
-      .crossJoin(broadcast(t2cut))
-      .filter(col("last_ord") > col("t2max")).drop("t2max")
-      .join(delta, Seq("pk"), "full_outer")
-      .filter(coalesce(col("d_op"), lit("c")) =!= "d")
-      .select(col("pk"),
-        coalesce(col("d_value"), col("last_value")).as("last_value"),
-        coalesce(col("d_ord"), col("last_ord")).as("last_ord"))
+    // commit 2 folds batch2 onto fileset A (its rows re-enter as
+    // upserts at their own ord; batch2's truncate cuts them too)
+    graft.cdc.Apply.fold(batch2,
+        Some(s.read.parquet(s"$dir/A").withColumn("last_op", lit("c"))))
+      .filter(col("last_op") =!= "d")
+      .select(col("pk"), col("last_value"), col("last_ord"))
       .write.mode("overwrite").parquet(s"$dir/B")
     Seq((1, "A"), (2, "B")).toDF("version", "fileset")
       .repartition(1).write.mode("overwrite").parquet(s"$dir/manifest_v2")

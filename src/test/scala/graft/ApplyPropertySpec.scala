@@ -11,7 +11,7 @@ import graft.cdc.{Apply, Retention}
   * an independent in-memory fold of the creek consumer contract. Fewer
   * cases than the pure suites (each case is a Spark job), but these pin
   * the distributed aggregation itself — ord discipline, u_pk half-event
-  * explosion, truncate cuts, snapshot pseudo-insert merge — over inputs
+  * explosion, truncate cuts, base-state and batch-by-batch folds — over inputs
   * the planted testdata never produces (dense key collisions, truncates
   * at every position, empty suffixes).
   */
@@ -50,26 +50,100 @@ object ApplyPropertySpec extends Properties("spark-apply") {
 
   /** The consumer contract as a pure fold (upsert c/u, u_pk = delete old
     * + upsert new, d deletes, t clears) — the replica ground truth.
+    * `v` is what an upsert stores for its key (the after value by default).
     */
-  private def fold(rows: Seq[FlatRow]): Map[Long, Double] =
-    rows.sortBy(_.lsn_long).foldLeft(Map.empty[Long, Double]) { (st, r) =>
+  private def fold[V](rows: Seq[FlatRow], v: FlatRow => V): Map[Long, V] =
+    rows.sortBy(_.lsn_long).foldLeft(Map.empty[Long, V]) { (st, r) =>
       r.op match {
-        case "c" | "u" => st + (r.pk_after.get -> r.after_value.get)
-        case "u_pk" => st - r.pk_before.get + (r.pk_after.get -> r.after_value.get)
+        case "c" | "u" => st + (r.pk_after.get -> v(r))
+        case "u_pk" => st - r.pk_before.get + (r.pk_after.get -> v(r))
         case "d" => st - r.pk_before.get
         case "t" => Map.empty
         case _ => st
       }
     }
+  private def fold(rows: Seq[FlatRow]): Map[Long, Double] =
+    fold(rows, _.after_value.get)
 
   private def replica(df: DataFrame): Map[Long, Double] =
     df.collect().map(r => r.getAs[Long]("pk") -> r.getAs[Double]("value")).toMap
+
+  /** Live rows of an `Apply.fold` result, rounded like the lanes do. */
+  private def live(state: DataFrame): Map[Long, Double] =
+    replica(state.filter(col("last_op") =!= "d")
+      .select(col("pk"), round(col("last_value"), 2).as("value")))
+
+  private def rounded(m: Map[Long, Double]): Map[Long, Double] =
+    m.map { case (k, v) => k -> (math.rint(v * 100) / 100) }
+
+  // cut points splitting a stream into consecutive batches
+  private def batches(rows: Seq[FlatRow], cutPcts: Seq[Int]): Seq[Seq[FlatRow]] = {
+    val cuts = (0 +: cutPcts.map(_ * rows.length / 100) :+ rows.length).sorted
+    cuts.zip(cuts.tail).map { case (a, b) => rows.slice(a, b) }
+  }
 
   property("Apply.latest ≡ consumer fold over random streams") =
     Prop.forAll(genRows) { rows =>
       val got = replica(Apply.latest(toDf(rows))
         .select(col("pk"), round(col("last_value"), 2).as("value")))
-      got == fold(rows).map { case (k, v) => k -> (math.rint(v * 100) / 100) }
+      got == rounded(fold(rows))
+    }
+
+  property("fold over a base state with tombstones ≡ full replay") =
+    Prop.forAll(genRows, Gen.chooseNum(0, 100)) { (rows, cutPct) =>
+      val Seq(before, after) = batches(rows, Seq(cutPct))
+      // the base is the prefix's state as the fold returns it, deletes
+      // kept as tombstones at their own ord
+      val base = Apply.fold(toDf(before)).persist()
+      val tombstones = base.filter(col("last_op") === "d").count()
+      val got = live(Apply.fold(toDf(after), Some(base)))
+      base.unpersist()
+      Prop.collect(if (tombstones > 0) "base has tombstones" else "no tombstones") {
+        got == rounded(fold(rows))
+      }
+    }
+
+  property("per-tbl truncate cuts ≡ the fold per table") =
+    Prop.forAll(genRows.flatMap(rows =>
+        Gen.listOfN(rows.length, Gen.oneOf("t0", "t1")).map(rows.zip(_)))) { tagged =>
+      val df = tagged.map { case (r, t) =>
+        (t, r.lsn_long, r.op, r.pk_before, r.pk_after, r.after_value)
+      }.toDF("tbl", "lsn_long", "op", "pk_before", "pk_after", "after_value")
+      val got = Apply.fold(df, keys = Seq("tbl"))
+        .filter(col("last_op") =!= "d")
+        .select(col("tbl"), col("pk"), round(col("last_value"), 2))
+        .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      val want = tagged.groupBy(_._2).toSeq.flatMap { case (t, rs) =>
+        rounded(fold(rs.map(_._1))).map { case (pk, v) => (t, pk) -> v }
+      }.toMap
+      got == want
+    }
+
+  property("a carried column follows the winning half-event") =
+    Prop.forAll(genRows) { rows =>
+      // src names the event that wrote it, so every key's src pins
+      // exactly which half-event the fold kept
+      val df = toDf(rows).withColumn("src",
+        when(col("after_value").isNotNull, concat(lit("e"), col("lsn_long"))))
+      val got = Apply.fold(df, carry = Seq("src"))
+        .filter(col("last_op") =!= "d")
+        .select(col("pk"), round(col("last_value"), 2), col("last_src"))
+        .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getString(2))).toMap
+      got == fold(rows, r => (math.rint(r.after_value.get * 100) / 100, s"e${r.lsn_long}"))
+    }
+
+  property("batch-by-batch folds, each on the previous state ≡ one fold") =
+    Prop.forAll(genRows, Gen.listOfN(3, Gen.chooseNum(0, 100))) { (rows, cutPcts) =>
+      // the poll / incremental-view contract: state_i = fold(batch_i,
+      // state_{i-1}) lands on the single fold over the whole stream
+      val parts = batches(rows, cutPcts)
+      val stepwise = parts.foldLeft(Option.empty[DataFrame]) { (st, b) =>
+        Some(Apply.fold(toDf(b), st).localCheckpoint())
+      }.get
+      val once = Apply.fold(toDf(rows))
+      Prop.collect(s"${parts.count(_.nonEmpty)} non-empty batches") {
+        live(stepwise) == live(once) && live(once) == rounded(fold(rows))
+      }
     }
 
   property("retention resume ≡ full replay for every gap-free cut") =

@@ -40,6 +40,31 @@ class CdcSpec extends AnyFunSuite {
     assert(merged == full)
   }
 
+  test("CDC apply is shuffle-once-per-key: replay, snapshot ⊕ WAL, resume") {
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    val flat = Envelope.flat(Tables.events(spark, sf))
+    val snapLsn = flat.filter(col("tx_at") < lit("2024-01-20").cast("timestamp"))
+      .agg(coalesce(max("lsn_long"), lit(-1L)).as("s"))
+    val b = flat.agg(min("lsn_long"), max("lsn_long")).head()
+    val (mn, mx) = (b.getLong(0), b.getLong(1))
+    Seq(
+      "latest" -> Apply.latest(flat),
+      "snapshotPlusWal" -> Apply.snapshotPlusWal(flat, snapLsn),
+      "resumeReplay" -> Retention.resumeReplay(flat, mn + (mx - mn) / 3, mn + (mx - mn) / 2)
+    ).foreach { case (name, df) =>
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      val byPk = Metrics.allNodes(plan).collect {
+        case e: ShuffleExchangeLike => e.outputPartitioning
+      }.collect {
+        case HashPartitioning(Seq(a: AttributeReference), _) if a.name == "pk" => a
+      }
+      assert(byPk.length == 1, s"$name: ${byPk.length} pk-keyed shuffles\n$plan")
+    }
+  }
+
   test("avro schema fingerprint is deterministic and discriminating") {
     val s1 = Tables.customer(spark, sf).schema
     val s2 = Tables.orders(spark, sf).schema
