@@ -1,6 +1,6 @@
 package graft.cdc
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -13,102 +13,108 @@ import graft.Tables
   * group-level deltas, and a truncate — which invalidates everything by
   * definition — triggers the one legitimate rebuild.
   *
-  * Cost: each delta batch still scans the WHOLE state to find its
-  * touched keys (a join against the touched set) and rewrites it
-  * (left-anti + union + localCheckpoint), so a batch costs
-  * O(|batch| + |state|), not O(|batch| + |touched keys|) — graftbench
-  * measured 51,520 state rows read per applied event. ROADMAP open
-  * item 1 moves the state onto a bucketed store so a batch reads only
-  * the buckets its keys touch. Sums are maintained in integer
-  * CENTS (per-row cents derived once from the same double both engines
-  * see), so delta accumulation is order-independent and exact — a
-  * floating view maintained by ± deltas would drift from the recompute.
-  * localCheckpoint truncates lineage at each batch boundary (the d09
-  * discipline): state/view are the tables a production job persists.
+  * Each batch is read once (persisted for the advance) and folded once
+  * by `Apply.fold`; the state is read only through broadcast joins — for
+  * the touched keys' old values, then for its rewrite (left-anti + union
+  * + localCheckpoint) — so it is never shuffled, but it is still scanned
+  * whole: O(|state|) rows read per batch (ROADMAP open item 1). Sums are
+  * maintained in integer CENTS (per-row cents derived once from the same
+  * double both engines see), so delta accumulation is order-independent
+  * and exact — a floating view maintained by ± deltas would drift from
+  * the recompute. The view, at most 19 groups (`pk % 10`), is a local
+  * relation.
   */
 object ViewMaintenance {
   private type Q = (SparkSession, String) => DataFrame
 
+  private def cents(v: Column): Column = round(v * 100).cast("long")
+
   /** The view definition over live replica rows (pk, last_value). */
   def viewOf(live: DataFrame): DataFrame =
     live.groupBy((col("pk") % 10).as("grp"))
-      .agg(count(lit(1)).as("n_rows"),
-        sum(round(col("last_value") * 100).cast("long")).as("sum_cents"))
+      .agg(count(lit(1)).as("n_rows"), sum(cents(col("last_value"))).as("sum_cents"))
 
-  /** Live rows of a folded state, as the view's state keeps them. */
-  private def live(state: DataFrame): DataFrame =
-    state.filter(col("last_op") =!= "d")
-      .select(col("pk"), col("last_ord"), col("last_value"))
-
-  /** The engine: carries (state, view) across batches as checkpointed
-    * tables — what a production IVM job persists between runs. Shared by
-    * c36 (batch poll loop) and s14 (Structured Streaming foreachBatch).
-    * Batches MUST arrive in ascending WAL order (the resume contract any
-    * CDC consumer already holds); `onBatch` reports (invalidated,
-    * touchedKeys) so specs can pin the incremental discipline.
+  /** The engine: carries (state, view) across batches — what a
+    * production IVM job persists between runs. Shared by c36 (batch poll
+    * loop) and s14 (Structured Streaming foreachBatch). Batches MUST
+    * arrive in ascending WAL order (the resume contract any CDC consumer
+    * already holds); `onBatch` reports (invalidated, touchedKeys) so
+    * specs can pin the incremental discipline.
     */
   final class IncrementalView(onBatch: (Boolean, Long) => Unit = (_, _) => ()) {
     private[cdc] var state: DataFrame = null
     private[cdc] var view: DataFrame = null
 
     def advance(chunk: DataFrame): Unit = {
-      val tmax = chunk.filter(col("op") === "t")
-        .agg(coalesce(max(col("lsn_long") * 2 + 1), lit(-1L))).head().getLong(0)
-      if (view == null || tmax >= 0) {
-        // bootstrap, or truncate: the view is invalidated by definition,
-        // and the cut drops every state row (their ords precede the
-        // batch), so the batch alone folds to the new state
-        state = live(Apply.fold(chunk)).localCheckpoint()
-        view = viewOf(state.select(col("pk"), col("last_value"))).localCheckpoint()
-        onBatch(true, -1L)
-      } else {
-        // DELTA path: only the touched keys are re-aggregated
-        val touched = Apply.halfEvents(chunk).select("pk").distinct()
-        val oldT = state.join(touched, Seq("pk"))
-        // tmax < 0: the batch holds no truncate; dropping `t` rows says
-        // so to the optimizer, which then plans the fold without a cut
-        val newT = live(Apply.fold(chunk.filter(col("op") =!= "t"),
-          Some(oldT.withColumn("last_op", lit("c")))))
-        val cents = (v: org.apache.spark.sql.Column) => round(v * 100).cast("long")
-        val deltas = oldT
-          .select(col("pk"), lit(-1L).as("dn"), (-cents(col("last_value"))).as("dc"))
-          .union(newT
-            .select(col("pk"), lit(1L).as("dn"), cents(col("last_value")).as("dc")))
-          .groupBy((col("pk") % 10).as("grp"))
-          .agg(sum("dn").as("n_rows"), sum("dc").as("sum_cents"))
-        view = view.union(deltas)
-          .groupBy("grp")
-          .agg(sum("n_rows").as("n_rows"), sum("sum_cents").as("sum_cents"))
-          .localCheckpoint()
-        state = state.join(touched, Seq("pk"), "left_anti")
-          .union(newT).localCheckpoint()
-        onBatch(false, touched.count())
-      }
+      val batch = chunk.persist()
+      try {
+        val s = batch.sparkSession
+        import s.implicits._
+        // one job over every partition fills the cache and finds the truncates
+        val truncates = batch.filter(col("op") === "t").select("lsn_long").as[Long].collect()
+        // bootstrap, or truncate: the view is invalidated by definition, and
+        // the cut drops every state row (their ords precede the batch)
+        val invalidated = view == null || truncates.nonEmpty
+        if (invalidated) {
+          state = Seq.empty[(Long, Double)].toDF("pk", "last_value")
+          view = Seq.empty[(Long, Long, java.lang.Long)].toDF("grp", "n_rows", "sum_cents")
+        }
+        // every ord after the last truncate follows every state ord, so
+        // these events alone fold to a touched key's new row; the state adds
+        // old values by broadcast. A lone `op` filter lets the optimizer
+        // plan a truncate-free batch's fold without a cut
+        val events = truncates.maxOption.fold(batch)(t => batch.filter(col("lsn_long") > t))
+          .filter(col("op") =!= "t")
+        val old = state
+          .join(broadcast(Apply.halfEvents(events).select("pk")), Seq("pk"), "left_semi")
+          .select(col("pk"), lit(1L).as("old_n"), cents(col("last_value")).as("old_cents"))
+        val changes = Apply.fold(events).join(broadcast(old), Seq("pk"), "left").persist()
+        try {
+          val isLive = col("last_op") =!= "d"
+          val deltas = changes.select((col("pk") % 10).as("grp"),
+            (when(isLive, 1L).otherwise(0L) - coalesce(col("old_n"), lit(0L))).as("n_rows"),
+            (coalesce(when(isLive, cents(col("last_value"))), lit(0L)) -
+              coalesce(col("old_cents"), lit(0L))).as("sum_cents"),
+            lit(1L).as("n_keys"))
+          val groups = view.withColumn("n_keys", lit(0L)).union(deltas).groupBy("grp")
+            .agg(sum("n_rows"), sum("sum_cents"), sum("n_keys")).collect()
+          view = groups.filter(_.getLong(1) > 0).sortBy(_.getLong(0)).toSeq
+            .map(r => (r.getLong(0), r.getLong(1), r.getAs[java.lang.Long](2)))
+            .toDF("grp", "n_rows", "sum_cents")
+          // coalesced, or the union would add partitions every batch
+          state = state.join(broadcast(changes.select("pk")), Seq("pk"), "left_anti")
+            .union(changes.filter(isLive).select("pk", "last_value"))
+            .coalesce(s.sparkContext.defaultParallelism).localCheckpoint()
+          onBatch(invalidated, if (invalidated) -1L else groups.map(_.getLong(3)).sum)
+        } finally changes.unpersist()
+      } finally batch.unpersist()
     }
 
-    /** The maintained view (groups that netted to zero rows drop out,
-      * matching the recompute's GROUP BY).
+    /** The maintained view, in grp order (groups that netted to zero rows
+      * drop out, matching the recompute's GROUP BY).
       */
-    def current: DataFrame = view.filter(col("n_rows") > 0).orderBy("grp")
+    def current: DataFrame = view
   }
 
   private def walFlat(s: SparkSession, d: String): DataFrame =
     Envelope.flat(Tables.events(s, d))
       .select("lsn_long", "op", "pk_before", "pk_after", "after_value")
 
+  /** The (lo, hi] LSN ranges of `nChunks` ascending poll batches. */
+  private def lsnRanges(flat: DataFrame, nChunks: Int): Seq[(Long, Long)] = {
+    val b = flat.agg(min("lsn_long"), max("lsn_long")).head()
+    val (mn, mx) = (b.getLong(0), b.getLong(1))
+    val step = math.max(1L, (mx - mn + nChunks) / nChunks)
+    (mn - 1 until mx by step).map(lo => (lo, math.min(lo + step, mx)))
+  }
+
   /** Drive the view over the WAL in `nChunks` poll batches. */
   def c36run(s: SparkSession, d: String, nChunks: Int = 4,
       onBatch: (Boolean, Long) => Unit = (_, _) => ()): DataFrame = {
     val flat = walFlat(s, d)
-    val b = flat.agg(min("lsn_long"), max("lsn_long")).head()
-    val (mn, mx) = (b.getLong(0), b.getLong(1))
-    val step = math.max(1L, (mx - mn + nChunks) / nChunks)
     val engine = new IncrementalView(onBatch)
-    var lo = mn - 1
-    while (lo < mx) {
-      val hi = math.min(lo + step, mx)
+    lsnRanges(flat, nChunks).foreach { case (lo, hi) =>
       engine.advance(flat.filter(col("lsn_long") > lo && col("lsn_long") <= hi))
-      lo = hi
     }
     engine.current
   }
@@ -120,22 +126,17 @@ object ViewMaintenance {
   // as per-batch files (ascending LSN ranges, d11's explicit-arrival
   // plan: each file lands only after the previous micro-batch drains,
   // since mtime ordering is not a file-source contract) and foreachBatch
-  // advances the checkpointed (state, view) pair. The final view must
+  // advances the (state, view) pair. The final view must
   // hash-match c36's oracle: streaming adds nothing the batch loop
   // didn't already prove.
   def streamingView(s: SparkSession, d: String, nChunks: Int = 4): DataFrame = {
     val flat = walFlat(s, d).persist()
     val dir = java.nio.file.Files.createTempDirectory("graft_s14_")
     try {
-      val b = flat.agg(min("lsn_long"), max("lsn_long")).head()
-      val (mn, mx) = (b.getLong(0), b.getLong(1))
-      val step = math.max(1L, (mx - mn + nChunks) / nChunks)
-      def land(i: Int): Unit = {
-        val lo = mn - 1 + i * step
+      def land(i: Int, lo: Long, hi: Long): Unit = {
         val sub = java.nio.file.Files.createTempDirectory(s"graft_s14_w$i")
         try {
-          flat.filter(col("lsn_long") > lo &&
-              col("lsn_long") <= math.min(lo + step, mx))
+          flat.filter(col("lsn_long") > lo && col("lsn_long") <= hi)
             .coalesce(1).write.mode("overwrite").parquet(sub.toString)
           val listing = java.nio.file.Files.list(sub)
           val parquet = try {
@@ -152,13 +153,10 @@ object ViewMaintenance {
       val q = stream.writeStream.outputMode("append")
         .foreachBatch(onMicroBatch)
         .queryName(s"graft_s14_${System.nanoTime()}").start()
-      try {
-        var i = 0
-        while (mn - 1 + i * step < mx) { land(i); q.processAllAvailable(); i += 1 }
+      try lsnRanges(flat, nChunks).zipWithIndex.foreach { case ((lo, hi), i) =>
+        land(i, lo, hi); q.processAllAvailable()
       } finally q.stop()
-      val rows = engine.current.collect().toSeq
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1),
-        engine.current.schema)
+      engine.current
     } finally {
       graft.sources.SourceSinks.deleteDir(dir)
       flat.unpersist()

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Properties, Test}
-import graft.cdc.{Apply, Retention}
+import graft.cdc.{Apply, Retention, ViewMaintenance}
 
 /** Property sweeps through the REAL distributed operators (not the pure
   * codec models of CodecPropertySpec): random WAL op streams run through
@@ -11,7 +11,8 @@ import graft.cdc.{Apply, Retention}
   * an independent in-memory fold of the creek consumer contract. Fewer
   * cases than the pure suites (each case is a Spark job), but these pin
   * the distributed aggregation itself — ord discipline, u_pk half-event
-  * explosion, truncate cuts, base-state and batch-by-batch folds — over inputs
+  * explosion, truncate cuts, base-state and batch-by-batch folds, the
+  * incremental view's delta advance — over inputs
   * the planted testdata never produces (dense key collisions, truncates
   * at every position, empty suffixes).
   */
@@ -145,6 +146,51 @@ object ApplyPropertySpec extends Properties("spark-apply") {
         live(stepwise) == live(once) && live(once) == rounded(fold(rows))
       }
     }
+
+  /** Advances an IncrementalView over `parts` in order: its view must
+    * equal `viewOf` the full replay, and `onBatch` must report a rebuild
+    * for exactly the bootstrap batch and the batches holding a truncate,
+    * and the distinct half-event keys of every other batch as touched.
+    */
+  private def viewHolds(parts: Seq[Seq[FlatRow]]): Boolean = {
+    val log = Seq.newBuilder[(Boolean, Long)]
+    val engine = new ViewMaintenance.IncrementalView((inv, n) => log += ((inv, n)))
+    parts.foreach(b => engine.advance(toDf(b)))
+    val asTuples = (df: DataFrame) =>
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    val want = asTuples(ViewMaintenance.viewOf(Apply.latest(toDf(parts.flatten))
+      .select(col("pk"), col("last_value"))).orderBy("grp"))
+    val wantLog = parts.zipWithIndex.map { case (b, i) =>
+      if (i == 0 || b.exists(_.op == "t")) (true, -1L)
+      else (false, b.flatMap(r => r.pk_before ++ r.pk_after).distinct.length.toLong)
+    }
+    asTuples(engine.current) == want && log.result() == wantLog
+  }
+
+  property("IncrementalView advanced batch by batch ≡ viewOf the full replay") =
+    Prop.forAll(genRows, Gen.listOfN(3, Gen.chooseNum(0, 100))) { (rows, cutPcts) =>
+      val parts = batches(rows, cutPcts)
+      Prop.classify(parts.drop(1).exists(_.exists(_.op == "t")), "truncate after bootstrap") {
+        viewHolds(parts)
+      }
+    }
+
+  property("IncrementalView: a planted stream of the view's edge cases") = Prop.delay {
+    def ev(lsn: Long, op: String, before: Option[Long], after: Option[Long], v: Double) =
+      FlatRow(lsn, op, before, after, if (op == "d" || op == "t") None else Some(v))
+    def up(lsn: Long, op: String, pk: Long, v: Double) = ev(lsn, op, None, Some(pk), v)
+    def del(lsn: Long, pk: Long) = ev(lsn, "d", Some(pk), None, 0)
+    def move(lsn: Long, from: Long, to: Long, v: Double) = ev(lsn, "u_pk", Some(from), Some(to), v)
+    Prop(viewHolds(Seq(
+      Seq(up(1, "c", 1, 1.0), up(2, "c", 2, -3.25), up(3, "c", 13, 5.0)),
+      // u_pk across groups (1 → 7), a key created and deleted in the
+      // batch, negative cents
+      Seq(move(4, 1, 7, 2.5), up(5, "c", 4, 1.1), del(6, 4), up(7, "u", 2, -0.07)),
+      // a truncate in a delta-era batch, with events on both sides of it
+      Seq(up(8, "c", 8, 3.0), ev(9, "t", None, None, 0), up(10, "c", 9, -4.4),
+        move(11, 9, 11, -1.0)),
+      Seq(up(12, "u", 11, 0.5), del(13, 13), up(14, "c", 3, 0.01), move(15, 3, 23, -0.99)))))
+  }
 
   property("retention resume ≡ full replay for every gap-free cut") =
     Prop.forAll(genRows, Gen.chooseNum(0, 100), Gen.chooseNum(0, 100)) {

@@ -910,6 +910,68 @@ class CdcSpec extends AnyFunSuite {
       s"foreachBatch diverged from the poll loop:\n s=${streamed.toSeq}\n b=${batch.toSeq}")
   }
 
+  test("c36 delta advance: fewer jobs, half the shuffles, none over the state") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val sf01 = new java.io.File(new java.io.File(sf).getParentFile, "sf0.01").getPath
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val onJob = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    val onQuery = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        plans.add(qe.executedPlan); ()
+      }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def drain(): Unit =
+      org.apache.spark.graft.SchedulerShim.waitListenerBusEmpty(spark.sparkContext, 60000)
+    // count c36's second batch at sf0.01, its first delta advance
+    var batch = 0
+    ViewMaintenance.c36run(spark, sf01, onBatch = (invalidated, _) => {
+      batch += 1
+      if (batch == 1) {
+        drain()
+        spark.sparkContext.addSparkListener(onJob)
+        spark.listenerManager.register(onQuery)
+      } else if (batch == 2) {
+        assert(!invalidated, "c36's second batch at sf0.01 must take the delta path")
+        drain()
+        spark.sparkContext.removeSparkListener(onJob)
+        spark.listenerManager.unregister(onQuery)
+      }
+    })
+    // the operators that ran: through AQE stages and into the plans that
+    // filled the caches a query read; `builds = false` leaves out the
+    // build sides of broadcasts, keeping only rows that flow into `p`
+    def walk(p: SparkPlan, builds: Boolean): Seq[SparkPlan] = p +: (p match {
+      case _: BroadcastExchangeLike if !builds => Nil
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan, builds)
+      case q: QueryStageExec => walk(q.plan, builds)
+      case m: InMemoryTableScanExec => walk(m.relation.cachedPlan, builds)
+      case o => o.children.flatMap(walk(_, builds))
+    })
+    import scala.jdk.CollectionConverters._
+    // a cache read by several queries ran once: count each node once
+    val ran = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
+    plans.asScala.foreach(p => ran.addAll(walk(p, builds = true).asJava))
+    val shuffles = ran.asScala.toSeq.collect { case e: ShuffleExchangeLike => e }
+    val broadcasts = ran.asScala.count(_.isInstanceOf[BroadcastExchangeLike])
+    info(s"${jobs.get} jobs, ${shuffles.length} shuffle and $broadcasts broadcast exchanges")
+    // the advance before the one-pass rebuild ran 15 jobs and 9 shuffles
+    assert(jobs.get < 15, s"${jobs.get} jobs")
+    assert(shuffles.length <= 4, s"${shuffles.length} shuffles:\n${shuffles.mkString("\n")}")
+    // the checkpointed state is the advance's only RDD scan
+    val overState = shuffles.filter(walk(_, builds = false).exists(_.isInstanceOf[RDDScanExec]))
+    assert(overState.isEmpty, s"the state is shuffled:\n${overState.mkString("\n")}")
+  }
+
   test("c35 multi-table stream: lazy relation registration, per-table truncate") {
     import PgOutput._
     // two shards (user_id%4: 0 → t0, 1 → t1), truncate on t0 only; the
