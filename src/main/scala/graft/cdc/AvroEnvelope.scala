@@ -1,9 +1,6 @@
 package graft.cdc
 
-import java.io.ByteArrayOutputStream
-import org.apache.avro.Schema
-import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
-import org.apache.avro.io.{DecoderFactory, EncoderFactory}
+import org.apache.avro.generic.{GenericData, GenericRecord}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -27,17 +24,16 @@ case class EnvDecoded(fingerprint: String, lsn_long: Long, lsn_str: String,
   * enum c|u|u_pk|d|t|r, timestamp-micros sent_at, and namespace-
   * disambiguated nullable before/after row records (before = replica
   * identity / key columns only, after = full row — pgtype.go
-  * RelationMessageKeysToAvro vs RelationMessageToAvro). Framing is the
-  * Avro single-object encoding the reference client checks before
-  * dispatching on fingerprint (client.go:264-291): 0xC3 0x01 magic, 8-byte
-  * little-endian CRC-64-AVRO fingerprint, Avro binary body. The
-  * `fingerprint` FIELD inside the envelope is the base64-url form of those
-  * 8 wire bytes, exactly as the client derives it (client.go:271).
+  * RelationMessageKeysToAvro vs RelationMessageToAvro), framed as a
+  * [[SingleObject]] message. The `fingerprint` FIELD inside the envelope
+  * is the base64-url form of the frame's 8 fingerprint bytes, exactly as
+  * the client derives it (client.go:271).
   *
   * The schema is generated by [[AvroSchemaGen.publishMessage]] (same JSON
   * the structure spec asserts); this codec is what actually pushes bytes
-  * through it. Encode/decode run per partition with one reusable codec
-  * (genuine per-partition imperative logic) — no driver hop at scale.
+  * through it. Encode/decode run per partition with one reusable
+  * [[SingleObject.Codec]] (genuine per-partition imperative logic), so
+  * at scale the bytes never leave the executors.
   */
 object AvroEnvelope {
 
@@ -50,16 +46,14 @@ object AvroEnvelope {
   val schemaJson: String =
     AvroSchemaGen.publishMessage(tableSchema, "events", Set("user_id"))
 
-  lazy val fingerprint: Long =
-    AvroSchemaGen.fingerprint64(AvroSchemaGen.parse(schemaJson))
-
   /** base64-url of the 8 little-endian wire bytes (client.go:271). */
-  lazy val fingerprintB64: String = AvroSchemaGen.fingerprintB64(fingerprint)
+  lazy val fingerprintB64: String =
+    AvroSchemaGen.fingerprintB64(AvroSchemaGen.fingerprint64(schemaJson))
 
-  def encodeOne(schema: Schema, fp: Long, fpB64: String, r: EnvRecord): Array[Byte] = {
-    val out = new ByteArrayOutputStream(128)
-    out.write(0xC3); out.write(0x01)
-    out.write(AvroSchemaGen.fingerprintBytes(fp), 0, 8)
+  def codec(): SingleObject.Codec = new SingleObject.Codec(schemaJson)
+
+  def encodeOne(codec: SingleObject.Codec, r: EnvRecord): Array[Byte] = {
+    val schema = codec.schema
     val src = new GenericData.Record(schema.getField("source").schema())
     src.put("name", "graft")
     src.put("tx_at", r.tx_at_us)
@@ -69,7 +63,7 @@ object AvroEnvelope {
     src.put("tx_id", r.lsn_long)
     src.put("lsn", Lsn.format(r.lsn_long).toString)
     val rec = new GenericData.Record(schema)
-    rec.put("fingerprint", fpB64)
+    rec.put("fingerprint", fingerprintB64)
     rec.put("source", src)
     rec.put("op", new GenericData.EnumSymbol(schema.getField("op").schema(), r.op))
     rec.put("sent_at", r.tx_at_us)
@@ -87,19 +81,16 @@ object AvroEnvelope {
       a.put("ts", r.tx_at_us)
       a
     }.orNull)
-    val enc = EncoderFactory.get.binaryEncoder(out, null)
-    new GenericDatumWriter[GenericRecord](schema).write(rec, enc)
-    enc.flush()
-    out.toByteArray
+    codec.frame(rec)
   }
 
-  def decodeOne(schema: Schema, fp: Long, bytes: Array[Byte]): EnvDecoded = {
-    val magicOk = bytes.length > 10 &&
-      (bytes(0) & 0xFF) == 0xC3 && (bytes(1) & 0xFF) == 0x01
-    val gotFp = java.nio.ByteBuffer.wrap(bytes, 2, 8)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN).getLong
-    val dec = DecoderFactory.get.binaryDecoder(bytes, 10, bytes.length - 10, null)
-    val rec = new GenericDatumReader[GenericRecord](schema).read(null, dec)
+  /** Decode one frame. The envelope has a single writer schema, so a frame
+    * under any other fingerprint is read as this schema and flagged
+    * fp_ok = false; a payload that is not a frame at all fails loudly.
+    */
+  def decodeOne(codec: SingleObject.Codec, bytes: Array[Byte]): EnvDecoded = {
+    val fp = SingleObject.requireHeader(bytes)
+    val rec = codec.readBody(bytes, SingleObject.HeaderLen)
     val src = rec.get("source").asInstanceOf[GenericRecord]
     val before = Option(rec.get("before")).map(_.asInstanceOf[GenericRecord])
     val after = Option(rec.get("after")).map(_.asInstanceOf[GenericRecord])
@@ -120,7 +111,7 @@ object AvroEnvelope {
       pk_after = after.map(_.get("user_id").asInstanceOf[Long]),
       after_value = after.flatMap(a => Option(a.get("value")).map(_.asInstanceOf[Double])),
       after_ts_us = after.map(_.get("ts").asInstanceOf[Long]),
-      magic_ok = magicOk, fp_ok = gotFp == fp)
+      magic_ok = true, fp_ok = fp == codec.fingerprint)
   }
 
   /** Flat envelope → EnvRecord rows. Truncates flow through with null
@@ -135,12 +126,9 @@ object AvroEnvelope {
   /** Encode every WAL event to single-object wire bytes, decode back. */
   def roundtrip(flat: DataFrame)(implicit s: SparkSession): Dataset[EnvDecoded] = {
     import s.implicits._
-    val json = schemaJson
-    val fp = fingerprint
-    val fpB64 = fingerprintB64
     envRecords(flat).mapPartitions { it =>
-      val schema = new Schema.Parser().parse(json)
-      it.map(r => decodeOne(schema, fp, encodeOne(schema, fp, fpB64, r)))
+      val c = codec()
+      it.map(r => decodeOne(c, encodeOne(c, r)))
     }
   }
 }

@@ -124,12 +124,14 @@ object AvroSchemaGen {
   def fingerprint64(schema: Schema): Long =
     SchemaNormalization.parsingFingerprint64(schema)
 
-  def fingerprint64(st: StructType, name: String): Long =
-    fingerprint64(parse(record(st, name, "graft")))
+  def fingerprint64(json: String): Long = fingerprint64(parse(json))
 
-  /** Little-endian 8 bytes of the fingerprint — the byte order used in the
-    * Avro single-object encoding header (and thus in creek's base64-url
-    * fingerprint strings, client.go:271).
+  def fingerprint64(st: StructType, name: String): Long =
+    fingerprint64(record(st, name, "graft"))
+
+  /** Little-endian 8 bytes of the fingerprint — the byte order of the
+    * [[SingleObject]] header (and thus of creek's base64-url fingerprint
+    * strings, client.go:271).
     */
   def fingerprintBytes(fp: Long): Array[Byte] =
     java.nio.ByteBuffer.allocate(8)

@@ -151,7 +151,7 @@ object CdcQueries {
     val rows = Tables.names.map { t =>
       val st = Tables.load(s, d, t).schema
       val json = AvroSchemaGen.record(st, t, "graft")
-      val fp = AvroSchemaGen.fingerprint64(AvroSchemaGen.parse(json))
+      val fp = AvroSchemaGen.fingerprint64(json)
       (t, AvroSchemaGen.fingerprintHex(fp), AvroSchemaGen.fingerprintB64(fp),
         st.fields.length, json.length)
     }
@@ -184,12 +184,17 @@ object CdcQueries {
   val c13_stream_apply: Q = (s, d) =>
     StreamApply.run(s, d, queryName = s"graft_stream_apply_${System.nanoTime()}")
 
-  // c14: Avro single-object encode/decode roundtrip — oracle-checked:
-  // codec transparency means the decoded rows ARE the flat-envelope
-  // projection with both framing flags true.
+  // c14: Avro single-object encode/decode roundtrip of the WAL's
+  // non-truncate events through the publish_message codec — oracle-
+  // checked: codec transparency means the decoded rows ARE the flat-
+  // envelope projection with both framing flags true.
   val c14_avro_roundtrip: Q = (s, d) => {
     implicit val spark: SparkSession = s
-    AvroWal.roundtrip(flatEnv(s, d)).toDF().orderBy("lsn_long")
+    AvroEnvelope.roundtrip(flatEnv(s, d).filter(col("op") =!= "t"))
+      .select(col("lsn_long"), col("op"),
+        coalesce(col("pk_after"), col("pk_before")).as("pk"),
+        col("after_value").as("value"), col("tx_at_us"), col("magic_ok"), col("fp_ok"))
+      .orderBy("lsn_long")
   }
 
   // c15 (rows-only): seq/len wire framing split + distributed reassembly.
@@ -351,27 +356,24 @@ object CdcQueries {
     val walRecs = flat.filter(col("lsn_long") > sVal)
       .select(col("lsn_long"), col("op"), unix_micros(col("tx_at")).as("tx_at_us"),
         col("pk_before"), col("pk_after"), col("after_value")).as[EnvRecord]
-    val json = AvroEnvelope.schemaJson
-    val fp = AvroEnvelope.fingerprint
-    val fpB64 = AvroEnvelope.fingerprintB64
     // encode + frame per partition; snapshot rows share lsn S, so their
     // wire message id is keyed by pk (odd) vs WAL by lsn (even)
     val frames = snapRecs.union(walRecs).mapPartitions { it =>
-      val schema = new org.apache.avro.Schema.Parser().parse(json)
+      val codec = AvroEnvelope.codec()
       it.flatMap { r =>
         val msgId =
           if (r.lsn_long == sVal && r.op == "r" && r.pk_before.isEmpty)
             r.pk_after.get * 2 + 1
           else r.lsn_long * 2
-        Chunking.split(msgId, AvroEnvelope.encodeOne(schema, fp, fpB64, r))
+        Chunking.split(msgId, AvroEnvelope.encodeOne(codec, r))
       }
     }
     val reassembled = Chunking.reassemble(frames.toDF())
       .select(col("msg_id"), col("bytes"))
       .as[(Long, Array[Byte])]
     val decoded = reassembled.mapPartitions { it =>
-      val schema = new org.apache.avro.Schema.Parser().parse(json)
-      it.map { case (_, bytes) => AvroEnvelope.decodeOne(schema, fp, bytes) }
+      val codec = AvroEnvelope.codec()
+      it.map { case (_, bytes) => AvroEnvelope.decodeOne(codec, bytes) }
     }
     val flatBack = decoded.toDF()
       .select(col("lsn_long"), col("op"), col("pk_before"), col("pk_after"),
@@ -470,8 +472,8 @@ object CdcQueries {
   // contract (client.go:632-658): a message whose seq-0 frame (the one
   // carrying the total length) is missing, or whose reassembled bytes
   // don't reach the declared length, is DRAINED — dropped whole, stream
-  // continues, never a failure. A 16-byte chunk size splits every ~40-
-  // byte message into ≥3 frames so the corruption is genuinely PARTIAL
+  // continues, never a failure. A 16-byte chunk size splits every 75–
+  // 102-byte envelope message into ≥5 frames so the corruption is PARTIAL
   // delivery (frames do arrive): every 997th message loses its FIRST
   // frame (seq-0/length check), every 991st an INTERIOR frame
   // (contiguity + length check). The oracle is the flat stream minus
@@ -479,12 +481,11 @@ object CdcQueries {
   val c28_chunk_recovery: Q = (s, d) => {
     implicit val spark: SparkSession = s
     import spark.implicits._
-    val json = AvroWal.schemaJson
-    val fp = AvroWal.fingerprint
-    val frames = AvroWal.walRecords(flatEnv(s, d)).mapPartitions { it =>
-      val schema = new org.apache.avro.Schema.Parser().parse(json)
+    val wal = AvroEnvelope.envRecords(flatEnv(s, d).filter(col("op") =!= "t"))
+    val frames = wal.mapPartitions { it =>
+      val codec = AvroEnvelope.codec()
       it.flatMap { r =>
-        val fs = Chunking.split(r.lsn_long, AvroWal.encodeOne(schema, fp, r),
+        val fs = Chunking.split(r.lsn_long, AvroEnvelope.encodeOne(codec, r),
           chunkSize = 16)
         if (r.lsn_long % 997 == 0) fs.drop(1) // lost first frame
         else if (r.lsn_long % 991 == 0) fs.patch(1, Nil, 1) // lost interior
@@ -495,10 +496,12 @@ object CdcQueries {
       .filter(Chunking.isCompleteMessage) // drain incomplete messages
       .select(col("msg_id"), col("bytes")).as[(Long, Array[Byte])]
     reassembled.mapPartitions { it =>
-      val schema = new org.apache.avro.Schema.Parser().parse(json)
-      it.map { case (_, bytes) => AvroWal.decodeOne(schema, fp, bytes) }
+      val codec = AvroEnvelope.codec()
+      it.map { case (_, bytes) => AvroEnvelope.decodeOne(codec, bytes) }
     }.toDF()
-      .select(col("lsn_long"), col("op"), col("pk"), col("value"))
+      .select(col("lsn_long"), col("op"),
+        coalesce(col("pk_after"), col("pk_before")).as("pk"),
+        col("after_value").as("value"))
       .orderBy("lsn_long")
   }
 
@@ -1008,7 +1011,7 @@ object CdcQueries {
       .groupBy(_.getString(0))
       .map { case (subj, rs) =>
         val parsed = rs.sortBy(_.getLong(2)).map(r =>
-          new org.apache.avro.Schema.Parser().parse(r.getString(1)))
+          AvroSchemaGen.parse(r.getString(1)))
         def ok(reader: org.apache.avro.Schema,
             writer: org.apache.avro.Schema): Boolean =
           org.apache.avro.SchemaCompatibility
@@ -1444,8 +1447,8 @@ object CdcQueries {
         |  '' AS removed_cols
         |FROM t ORDER BY subject""".stripMargin,
     // c14's codec is transparent by construction: the decoded rows must
-    // BE the walRecords projection of the flat envelope with both
-    // framing flags true — all SQL-recomputable (converted, r13)
+    // BE the flat envelope's non-truncate events projected to pk/value
+    // with both framing flags true — all SQL-recomputable (converted, r13)
     "c14_avro_roundtrip" ->
       s"""WITH $sqlEnv, $sqlFlat
          |SELECT lsn_long, op, coalesce(pk_after, pk_before) AS pk,

@@ -61,18 +61,17 @@ object Chunking {
     col("min_seq") === 0 && col("n_frames") === col("max_seq") + 1 &&
       length(col("bytes")) === col("total_len")
 
-  /** c15: encode WAL records to Avro single-object bytes, split into wire
-    * frames, shuffle frames by message, reassemble in order, decode, and
-    * verify (rows-only; spec asserts set equality with the input).
+  /** c15: encode the WAL's non-truncate events through the envelope codec,
+    * split into wire frames, shuffle frames by message, reassemble in
+    * order, decode, and verify (rows-only; spec asserts set equality with
+    * the input).
     */
   def roundtrip(flat: DataFrame)(implicit s: SparkSession): DataFrame = {
     import s.implicits._
-    val json = AvroWal.schemaJson
-    val fp = AvroWal.fingerprint
-    val frames = AvroWal.walRecords(flat).mapPartitions { it =>
-      val schema = new org.apache.avro.Schema.Parser().parse(json)
+    val frames = AvroEnvelope.envRecords(flat.filter(col("op") =!= "t")).mapPartitions { it =>
+      val codec = AvroEnvelope.codec()
       it.flatMap { r =>
-        val bytes = AvroWal.encodeOne(schema, fp, r)
+        val bytes = AvroEnvelope.encodeOne(codec, r)
         // through the wire form and back (exercises the 6-byte header)
         split(r.lsn_long, bytes).map(f => parseFrame(r.lsn_long, frameBytes(f)))
       }
@@ -82,11 +81,12 @@ object Chunking {
         col("total_len"), col("bytes"))
       .as[(Long, Long, Int, Array[Byte])]
       .mapPartitions { it =>
-        val schema = new org.apache.avro.Schema.Parser().parse(json)
+        val codec = AvroEnvelope.codec()
         it.map { case (msgId, nChunks, totalLen, bytes) =>
-          val dec = AvroWal.decodeOne(schema, fp, bytes)
+          val dec = AvroEnvelope.decodeOne(codec, bytes)
           (msgId, nChunks, totalLen, bytes.length == totalLen,
-            dec.magic_ok && dec.fp_ok, dec.op, dec.pk, dec.value)
+            dec.magic_ok && dec.fp_ok, dec.op, dec.pk_after.orElse(dec.pk_before),
+            dec.after_value)
         }
       }
       .toDF("msg_id", "n_chunks", "total_len", "len_ok", "codec_ok", "op", "pk", "value")

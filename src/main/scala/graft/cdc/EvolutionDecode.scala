@@ -1,9 +1,6 @@
 package graft.cdc
 
-import java.io.ByteArrayOutputStream
-import org.apache.avro.Schema
-import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
-import org.apache.avro.io.{DecoderFactory, EncoderFactory}
+import org.apache.avro.generic.GenericData
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -16,19 +13,18 @@ case class EvolvedDecoded(lsn_long: Option[Long], pk: Option[Long],
   fp_ok: Boolean)
 
 /** Schema-evolution-aware decoding — the downstream-consumer side of the
-  * reference's schema registry: each wire message is framed with its
-  * WRITER's fingerprint (client.go:264-291), the consumer resolves the
-  * fingerprint to the writer schema (c12's registry contract,
-  * client.go:169-219) and reads with Avro schema RESOLUTION into its own
-  * current (latest) schema — old-writer records gain the added column's
-  * null default; a v1 reader conversely drops the v2-only field. This is
-  * what lets a replica consumer survive an upstream ALTER TABLE without
-  * a coordinated deploy: c17 *detects* the evolution, c24 *decodes
-  * across* it.
+  * reference's schema registry: each [[SingleObject]] message carries its
+  * WRITER's fingerprint, the consumer resolves the fingerprint to the
+  * writer schema (c12's registry contract, client.go:169-219) and reads
+  * with Avro schema RESOLUTION into its own current (latest) schema —
+  * old-writer records gain the added column's null default; a v1 reader
+  * conversely drops the v2-only field. This is what lets a replica
+  * consumer survive an upstream ALTER TABLE without a coordinated deploy:
+  * c17 *detects* the evolution, c24 *decodes across* it.
   *
-  * Uses the Avro library's writer/reader resolution
-  * (GenericDatumReader(writer, reader), Avro spec "Schema Resolution") —
-  * the same mechanism the reference's hamba/avro Unmarshal applies.
+  * Resolution is the Avro library's writer/reader resolution (Avro spec
+  * "Schema Resolution") — the same mechanism the reference's hamba/avro
+  * Unmarshal applies.
   */
 object EvolutionDecode {
   val v1Json: String =
@@ -46,77 +42,44 @@ object EvolutionDecode {
       |{"name":"value","type":["null","double"]},
       |{"name":"src","type":["null","string"],"default":null}]}""".stripMargin.replace("\n", "")
 
-  lazy val fpV1: Long = AvroSchemaGen.fingerprint64(AvroSchemaGen.parse(v1Json))
-  lazy val fpV2: Long = AvroSchemaGen.fingerprint64(AvroSchemaGen.parse(v2Json))
+  /** Registry keys of the two versions; `writer_version` is 2 for fpV2. */
+  lazy val fpV1: Long = AvroSchemaGen.fingerprint64(v1Json)
+  lazy val fpV2: Long = AvroSchemaGen.fingerprint64(v2Json)
 
-  def encodeOne(schema: Schema, fp: Long, lsn: Long, pk: Long,
+  def encodeOne(writer: SingleObject.Codec, lsn: Long, pk: Long,
       value: Option[Double], src: Option[String]): Array[Byte] = {
-    val out = new ByteArrayOutputStream(64)
-    out.write(0xC3); out.write(0x01)
-    out.write(AvroSchemaGen.fingerprintBytes(fp), 0, 8)
-    val rec = new GenericData.Record(schema)
+    val rec = new GenericData.Record(writer.schema)
     rec.put("lsn", lsn)
     rec.put("pk", pk)
     rec.put("value", value.map(java.lang.Double.valueOf).orNull)
-    if (schema.getField("src") != null) rec.put("src", src.orNull)
-    val enc = EncoderFactory.get.binaryEncoder(out, null)
-    new GenericDatumWriter[GenericRecord](schema).write(rec, enc)
-    enc.flush()
-    out.toByteArray
+    if (writer.schema.getField("src") != null) rec.put("src", src.orNull)
+    writer.frame(rec)
   }
 
-  /** Resolve the frame's writer fingerprint against the registry map and
-    * decode into `reader` (latest). Returns null-default for fields the
-    * writer didn't know; silently drops fields the reader doesn't have.
-    * An UNKNOWN fingerprint yields a row with every data field null and
-    * fp_ok = false (the consumer skips/queues it, as the reference client
-    * does when its schema lookup fails, client.go:272-276) — never a task
-    * failure, and never values a downstream aggregation could mistake for
-    * decoded data.
+  /** Resolve the frame's writer fingerprint through `reader`'s registry
+    * and decode into `reader`'s schema: null-default for fields the writer
+    * didn't know; fields the reader doesn't have are dropped. A payload
+    * that is not a frame, or whose writer fingerprint is in neither the
+    * reader's schema nor its registry, yields a row with every data field
+    * null and fp_ok = false (the consumer skips/queues it, as the
+    * reference client does when its schema lookup fails,
+    * client.go:272-276) — never a task failure, and never values a
+    * downstream aggregation could mistake for decoded data.
     */
-  def decodeOne(registry: Map[Long, Schema], reader: Schema,
-      bytes: Array[Byte]): EvolvedDecoded = {
-    val gotFp = java.nio.ByteBuffer.wrap(bytes, 2, 8)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN).getLong
-    registry.get(gotFp) match {
+  def decodeOne(reader: SingleObject.Codec, bytes: Array[Byte]): EvolvedDecoded =
+    SingleObject.header(bytes).flatMap(fp => reader.read(fp, bytes).map(fp -> _)) match {
       case None =>
         EvolvedDecoded(None, None, None, None, writer_version = 0, fp_ok = false)
-      case Some(writer) =>
-        val dec = DecoderFactory.get.binaryDecoder(bytes, 10, bytes.length - 10, null)
-        val rec = new GenericDatumReader[GenericRecord](writer, reader).read(null, dec)
+      case Some((fp, rec)) =>
         EvolvedDecoded(
           lsn_long = Some(rec.get("lsn").asInstanceOf[Long]),
           pk = Some(rec.get("pk").asInstanceOf[Long]),
           value = Option(rec.get("value")).map(_.asInstanceOf[Double]),
-          src = if (reader.getField("src") == null) None
+          src = if (reader.schema.getField("src") == null) None
                 else Option(rec.get("src")).map(_.toString),
-          writer_version = if (gotFp == fpV2) 2 else 1,
+          writer_version = if (fp == fpV2) 2 else 1,
           fp_ok = true)
     }
-  }
-
-  /** decodeOne against a mutable parsed-schema cache PLUS a registry
-    * lookup: an unknown writer fingerprint consults the (persisted,
-    * broadcast) registry snapshot, parses the schema once and caches it —
-    * the consumer-side analogue of the reference's LRU + request/reply
-    * lookup (dao/schemas.go:16-66, mq/schemas.go:50-71). Only a
-    * fingerprint absent from BOTH yields the null-field skip row.
-    */
-  def decodeResolving(cache: scala.collection.mutable.Map[Long, Schema],
-      registryJson: Map[Long, String], reader: Schema,
-      bytes: Array[Byte]): EvolvedDecoded = {
-    val gotFp = java.nio.ByteBuffer.wrap(bytes, 2, 8)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN).getLong
-    val writer = cache.get(gotFp).orElse {
-      val parsed = registryJson.get(gotFp).map(new Schema.Parser().parse(_))
-      parsed.foreach(cache.put(gotFp, _))
-      parsed
-    }
-    writer match {
-      case None => EvolvedDecoded(None, None, None, None, 0, fp_ok = false)
-      case Some(w) => decodeOne(Map(gotFp -> w), reader, bytes)
-    }
-  }
 
   /** Mixed-writer stream (v2 every 3rd lsn) decoded with the LATEST (v2)
     * reader: v1-written rows surface src = null via the default. The
@@ -127,23 +90,20 @@ object EvolutionDecode {
   def roundtrip(flat: DataFrame, registryJson: Map[Long, String])(
       implicit s: SparkSession): Dataset[EvolvedDecoded] = {
     import s.implicits._
-    val (j1, j2, f1, f2) = (v1Json, v2Json, fpV1, fpV2)
+    val (j1, j2) = (v1Json, v2Json)
     flat.filter(col("op") =!= "t")
       .select(col("lsn_long"),
         coalesce(col("pk_after"), col("pk_before")).as("pk"),
         col("after_value").as("value"))
       .as[(Long, Long, Option[Double])]
       .mapPartitions { it =>
-        val s1 = new Schema.Parser().parse(j1)
-        val s2 = new Schema.Parser().parse(j2)
-        val cache = scala.collection.mutable.Map(f2 -> s2)
+        val v1 = new SingleObject.Codec(j1)
+        val v2 = new SingleObject.Codec(j2, registryJson)
         it.map { case (lsn, pk, value) =>
           val bytes =
-            if (lsn % 3 == 0)
-              encodeOne(s2, f2, lsn, pk, value, Some(s"v2:$pk"))
-            else
-              encodeOne(s1, f1, lsn, pk, value, None)
-          decodeResolving(cache, registryJson, reader = s2, bytes)
+            if (lsn % 3 == 0) encodeOne(v2, lsn, pk, value, Some(s"v2:$pk"))
+            else encodeOne(v1, lsn, pk, value, None)
+          decodeOne(v2, bytes)
         }
       }
   }

@@ -1,11 +1,8 @@
 package graft.cdc
 
-import java.io.ByteArrayOutputStream
 import java.nio.file.Files
 
-import org.apache.avro.Schema
-import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
-import org.apache.avro.io.{DecoderFactory, EncoderFactory}
+import org.apache.avro.generic.GenericData
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -41,44 +38,34 @@ object JdbcEvolution {
   private val walColsV1 = Seq("LSN_LONG", "OP", "PK_BEFORE", "PK_AFTER", "AFTER_VALUE")
   private val flatColsV1 = Seq("lsn_long", "op", "pk_before", "pk_after", "after_value")
 
-  /** Avro single-object frame (0xC3 0x01 + LE fingerprint + body) for one
-    * WAL row under `schema` — fields taken from the record by name, so
-    * the same encoder serves both writer generations.
+  /** One WAL row as a [[SingleObject]] frame under `writer`'s schema —
+    * fields taken from the record by name, so the same encoder serves both
+    * writer generations.
     */
-  def encodeRow(schema: Schema, fp: Long, lsn: Long, op: String,
+  def encodeRow(writer: SingleObject.Codec, lsn: Long, op: String,
       pkB: Option[Long], pkA: Option[Long], value: Option[Double],
       src: Option[String]): Array[Byte] = {
-    val out = new ByteArrayOutputStream(64)
-    out.write(0xC3); out.write(0x01)
-    out.write(AvroSchemaGen.fingerprintBytes(fp), 0, 8)
-    val rec = new GenericData.Record(schema)
+    val rec = new GenericData.Record(writer.schema)
     rec.put("lsn_long", lsn)
     rec.put("op", op)
     rec.put("pk_before", pkB.map(java.lang.Long.valueOf).orNull)
     rec.put("pk_after", pkA.map(java.lang.Long.valueOf).orNull)
     rec.put("after_value", value.map(java.lang.Double.valueOf).orNull)
-    if (schema.getField("src") != null) rec.put("src", src.orNull)
-    val enc = EncoderFactory.get.binaryEncoder(out, null)
-    new GenericDatumWriter[GenericRecord](schema).write(rec, enc)
-    enc.flush()
-    out.toByteArray
+    if (writer.schema.getField("src") != null) rec.put("src", src.orNull)
+    writer.frame(rec)
   }
 
-  /** Resolve the frame's writer fingerprint against the registry and read
-    * with the latest `reader` — Avro schema resolution fills the added
-    * column's null default for old writers. Unknown fingerprints fail
-    * loudly here (the fixture registers both generations; c24 covers the
-    * skip-row contract).
+  /** Resolve the frame's writer fingerprint through `reader`'s registry and
+    * read with `reader`'s (latest) schema — Avro schema resolution fills
+    * the added column's null default for old writers; frames written under
+    * the latest schema itself are writer_version 2. A payload that is not a
+    * frame, or an unknown fingerprint, fails loudly here (the fixture
+    * registers both generations; c24 covers the skip-row contract).
     */
-  def decodeRow(cache: scala.collection.mutable.Map[Long, Schema],
-      registryJson: Map[Long, String], reader: Schema, fpV2: Long,
-      bytes: Array[Byte]): EvolvedWal = {
-    val gotFp = java.nio.ByteBuffer.wrap(bytes, 2, 8)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN).getLong
-    val writer = cache.getOrElseUpdate(gotFp,
-      new Schema.Parser().parse(registryJson(gotFp)))
-    val dec = DecoderFactory.get.binaryDecoder(bytes, 10, bytes.length - 10, null)
-    val rec = new GenericDatumReader[GenericRecord](writer, reader).read(null, dec)
+  def decodeRow(reader: SingleObject.Codec, bytes: Array[Byte]): EvolvedWal = {
+    val fp = SingleObject.requireHeader(bytes)
+    val rec = reader.read(fp, bytes).getOrElse(throw new IllegalStateException(
+      s"writer fingerprint ${AvroSchemaGen.fingerprintHex(fp)} is not registered"))
     EvolvedWal(
       lsn_long = rec.get("lsn_long").asInstanceOf[Long],
       op = rec.get("op").toString,
@@ -86,13 +73,13 @@ object JdbcEvolution {
       pk_after = Option(rec.get("pk_after")).map(_.asInstanceOf[Long]),
       value = Option(rec.get("after_value")).map(_.asInstanceOf[Double]),
       src = Option(rec.get("src")).map(_.toString),
-      writer_version = if (gotFp == fpV2) 2 else 1)
+      writer_version = if (fp == reader.fingerprint) 2 else 1)
   }
 
   /** Distributed per-batch frame production under the batch's writer
-    * schema (parsed once per partition).
+    * schema (one codec per partition).
     */
-  private def frames(batch: DataFrame, writerJson: String, fp: Long)(
+  private def frames(batch: DataFrame, writerJson: String)(
       implicit s: SparkSession): DataFrame = {
     import s.implicits._
     val hasSrc = batch.columns.contains("src")
@@ -101,9 +88,9 @@ object JdbcEvolution {
       (if (hasSrc) col("src") else lit(null).cast("string")).as("src"))
       .as[(Long, String, Option[Long], Option[Long], Option[Double], Option[String])]
     base.mapPartitions { it =>
-      val schema = new Schema.Parser().parse(writerJson)
+      val writer = new SingleObject.Codec(writerJson)
       it.map { case (lsn, op, pkB, pkA, v, src) =>
-        encodeRow(schema, fp, lsn, op, pkB, pkA, v, src)
+        encodeRow(writer, lsn, op, pkB, pkA, v, src)
       }
     }.toDF("frame")
   }
@@ -135,7 +122,7 @@ object JdbcEvolution {
       val framesV1 = Seq((minL - 1, mid), (mid, evoCut)).map { case (lo, hi) =>
         frames(s.read.jdbc(url,
           s"(SELECT * FROM WAL WHERE LSN_LONG > $lo AND LSN_LONG <= $hi) AS W",
-          props).toDF(flatColsV1: _*), jsonV1, fpV1)
+          props).toDF(flatColsV1: _*), jsonV1)
       }.reduce(_ union _)
       // ---- the upstream ALTER TABLE ADD COLUMN, mid-stream -------------
       fx.evolve()
@@ -155,15 +142,14 @@ object JdbcEvolution {
         case (lo, hi) =>
           frames(s.read.jdbc(url,
             s"(SELECT * FROM WAL WHERE LSN_LONG > $lo AND LSN_LONG <= $hi) AS W",
-            props).toDF(flatColsV1 :+ "src": _*), jsonV2, fpV2)
+            props).toDF(flatColsV1 :+ "src": _*), jsonV2)
       }.reduce(_ union _)
       // ---- consumer: replay ALL frames with the LATEST reader ----------
       val registry = Map(fpV1 -> jsonV1, fpV2 -> jsonV2)
       val decoded = framesV1.union(framesV2).as[Array[Byte]]
         .mapPartitions { it =>
-          val cache = scala.collection.mutable.Map.empty[Long, Schema]
-          val reader = new Schema.Parser().parse(jsonV2)
-          it.map(bytes => decodeRow(cache, registry, reader, fpV2, bytes))
+          val reader = new SingleObject.Codec(jsonV2, registry)
+          it.map(bytes => decodeRow(reader, bytes))
         }
       val byWriter = decoded.groupBy(col("writer_version")).count()
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap // ≤2 rows

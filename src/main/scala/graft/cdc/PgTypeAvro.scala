@@ -1,10 +1,8 @@
 package graft.cdc
 
-import java.io.ByteArrayOutputStream
 import java.math.{BigDecimal => JBigDecimal, BigInteger}
 import org.apache.avro.Schema
-import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
-import org.apache.avro.io.{DecoderFactory, EncoderFactory}
+import org.apache.avro.generic.GenericData
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -127,8 +125,6 @@ object PgTypeAvro {
     PgCol("nums", "_int4"))
 
   val schemaJson: String = record(typedCols, "typed", "graft")
-  lazy val fingerprint: Long =
-    AvroSchemaGen.fingerprint64(AvroSchemaGen.parse(schemaJson))
 
   val NumScale = 4
   val InfSym = "infinity"
@@ -192,10 +188,8 @@ object PgTypeAvro {
   private def decodeInf(v: AnyRef): String =
     if (v.toString == InfSym) "infinity" else "-infinity"
 
-  def encodeOne(schema: Schema, fp: Long, r: PgRow): Array[Byte] = {
-    val out = new ByteArrayOutputStream(256)
-    out.write(0xC3); out.write(0x01)
-    out.write(AvroSchemaGen.fingerprintBytes(fp), 0, 8)
+  def encodeOne(codec: SingleObject.Codec, r: PgRow): Array[Byte] = {
+    val schema = codec.schema
     def enumOf(field: String, sym: String): GenericData.EnumSymbol = {
       val union = schema.getField(field).schema()
       val es = (0 until union.getTypes.size).map(union.getTypes.get)
@@ -224,19 +218,15 @@ object PgTypeAvro {
     val nums = new java.util.ArrayList[AnyRef]()
     r.nums.foreach(n => nums.add(Integer.valueOf(n)))
     rec.put("nums", nums)
-    val enc = EncoderFactory.get.binaryEncoder(out, null)
-    new GenericDatumWriter[GenericRecord](schema).write(rec, enc)
-    enc.flush()
-    out.toByteArray
+    codec.frame(rec)
   }
 
-  def decodeOne(schema: Schema, fp: Long, bytes: Array[Byte]): PgDecoded = {
-    val magicOk = bytes.length > 10 &&
-      (bytes(0) & 0xFF) == 0xC3 && (bytes(1) & 0xFF) == 0x01
-    val gotFp = java.nio.ByteBuffer.wrap(bytes, 2, 8)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN).getLong
-    val dec = DecoderFactory.get.binaryDecoder(bytes, 10, bytes.length - 10, null)
-    val rec = new GenericDatumReader[GenericRecord](schema).read(null, dec)
+  /** Decode one frame; like [[AvroEnvelope.decodeOne]], another fingerprint
+    * is flagged fp_ok = false and a non-frame fails loudly.
+    */
+  def decodeOne(codec: SingleObject.Codec, bytes: Array[Byte]): PgDecoded = {
+    val fp = SingleObject.requireHeader(bytes)
+    val rec = codec.readBody(bytes, SingleObject.HeaderLen)
     def bytesOf(v: AnyRef): Array[Byte] = {
       val bb = v.asInstanceOf[java.nio.ByteBuffer]
       val a = new Array[Byte](bb.remaining()); bb.duplicate().get(a); a
@@ -271,17 +261,15 @@ object PgTypeAvro {
         .asScala.map(_.toString).mkString(","),
       nums_str = rec.get("nums").asInstanceOf[java.util.List[AnyRef]]
         .asScala.map(_.toString).mkString(","),
-      magic_ok = magicOk, fp_ok = gotFp == fp)
+      magic_ok = true, fp_ok = fp == codec.fingerprint)
   }
 
   /** Encode every typed row to single-object wire bytes, decode back. */
   def roundtrip(events: DataFrame)(implicit s: SparkSession): Dataset[PgDecoded] = {
     import s.implicits._
-    val json = schemaJson
-    val fp = fingerprint
     typedRows(events).mapPartitions { it =>
-      val schema = new Schema.Parser().parse(json)
-      it.map(r => decodeOne(schema, fp, encodeOne(schema, fp, r)))
+      val codec = new SingleObject.Codec(schemaJson)
+      it.map(r => decodeOne(codec, encodeOne(codec, r)))
     }
   }
 }

@@ -34,7 +34,7 @@ class SchemaRegistry(spark: SparkSession) {
     * every Relation message, schemas.go:68-95); returns its fingerprint.
     */
   def registerJson(subject: String, json: String, createdAtMicros: Long): Long = {
-    val fp = AvroSchemaGen.fingerprint64(AvroSchemaGen.parse(json))
+    val fp = AvroSchemaGen.fingerprint64(json)
     entries += RegistryEntry(subject, AvroSchemaGen.fingerprintHex(fp),
       AvroSchemaGen.fingerprintB64(fp), json, createdAtMicros)
     fp

@@ -1,13 +1,10 @@
 package graft.cdc
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets
 import java.time.format.DateTimeFormatter
 import java.time.{Instant, ZoneOffset}
-import org.apache.avro.Schema
-import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
-import org.apache.avro.io.{DecoderFactory, EncoderFactory}
+import org.apache.avro.generic.GenericData
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Lsn
@@ -24,9 +21,9 @@ case class SnapHeader(topic: String, fingerprint: String, schema: String,
   *   1. message 0: the JSON-marshaled header {topic, fingerprint, schema,
   *      tx_id, lsn, at, approx_rows} — the CONSUMER PARSES THE ROW SCHEMA
   *      OUT OF THE HEADER (it holds no static schema);
-  *   2. one message per row: PLAIN Avro binary (no single-object framing —
-  *      unlike WAL messages, snapshot rows are bound to the header's
-  *      schema, mq/snapshots.go:113-131);
+  *   2. one message per row: a bare Avro body, no [[SingleObject]]
+  *      header — unlike WAL messages, snapshot rows are bound to the
+  *      header's schema (mq/snapshots.go:113-131);
   *   3. the final message: the literal 3-byte "EOF" sentinel
   *      (creek.SnapEOF) — a consumer that has not seen it must treat the
   *      snapshot as incomplete (the client blocks until it arrives).
@@ -54,8 +51,6 @@ object SnapshotWire {
     */
   val rowSchemaJson: String =
     AvroSchemaGen.record(AvroEnvelope.tableSchema, "events", "graft", Set("user_id"))
-  lazy val rowFingerprint: Long =
-    AvroSchemaGen.fingerprint64(AvroSchemaGen.parse(rowSchemaJson))
 
   def headerJson(h: SnapHeader): String = {
     val m = new ObjectMapper()
@@ -77,22 +72,18 @@ object SnapshotWire {
       n.get("at").asLong(), n.get("approx_rows").asLong())
   }
 
-  /** One snapshot row → plain Avro binary under the header's schema. */
-  def encodeRow(schema: Schema, pk: Long, value: Option[Double], tsUs: Long): Array[Byte] = {
-    val rec = new GenericData.Record(schema)
+  /** One snapshot row → bare Avro body under the header's schema. */
+  def encodeRow(codec: SingleObject.Codec, pk: Long, value: Option[Double],
+      tsUs: Long): Array[Byte] = {
+    val rec = new GenericData.Record(codec.schema)
     rec.put("user_id", pk)
     rec.put("value", value.map(java.lang.Double.valueOf).orNull)
     rec.put("ts", tsUs)
-    val out = new ByteArrayOutputStream(64)
-    val enc = EncoderFactory.get.binaryEncoder(out, null)
-    new GenericDatumWriter[GenericRecord](schema).write(rec, enc)
-    enc.flush()
-    out.toByteArray
+    codec.body(rec)
   }
 
-  def decodeRow(schema: Schema, bytes: Array[Byte]): (Long, Option[Double], Long) = {
-    val dec = DecoderFactory.get.binaryDecoder(bytes, 0, bytes.length, null)
-    val rec = new GenericDatumReader[GenericRecord](schema).read(null, dec)
+  def decodeRow(codec: SingleObject.Codec, bytes: Array[Byte]): (Long, Option[Double], Long) = {
+    val rec = codec.readBody(bytes)
     (rec.get("user_id").asInstanceOf[Long],
       Option(rec.get("value")).map(_.asInstanceOf[Double]),
       rec.get("ts").asInstanceOf[Long])
@@ -112,7 +103,7 @@ object SnapshotWire {
     val nRows = state.count()
     val header = SnapHeader(
       topic = if (topic.nonEmpty) topic else s"CREEK_SNAP.public.events.${atUs}",
-      fingerprint = AvroSchemaGen.fingerprintB64(rowFingerprint),
+      fingerprint = AvroSchemaGen.fingerprintB64(AvroSchemaGen.fingerprint64(rowSchemaJson)),
       schema = rowSchemaJson,
       tx_id = txId, lsn = Lsn.format(snapLsn).toString,
       at_us = atUs, approx_rows = nRows)
@@ -122,11 +113,11 @@ object SnapshotWire {
     val json = rowSchemaJson
     val rowFrames = state.select(col("pk"), col("value")).as[(Long, Option[Double])]
       .mapPartitions { it =>
-        val schema = new Schema.Parser().parse(json)
+        val codec = new SingleObject.Codec(json)
         it.flatMap { case (pk, value) =>
           require(pk >= 0, s"row msg ids are pks and must be >= 0, got $pk " +
             "(negative ids are reserved for the header/EOF sentinels)")
-          Chunking.split(pk, encodeRow(schema, pk, value, atUs))
+          Chunking.split(pk, encodeRow(codec, pk, value, atUs))
         }
       }
     s.createDataset(headerFrames).union(rowFrames)
@@ -164,8 +155,8 @@ object SnapshotWire {
     val json = header.schema // the consumer's schema comes from the wire
     val rows = reassembled.filter(r => r._1 >= 0 && !isEof(r._2))
       .mapPartitions { it =>
-        val schema = new Schema.Parser().parse(json)
-        it.map { case (_, bytes) => decodeRow(schema, bytes) }
+        val codec = new SingleObject.Codec(json)
+        it.map { case (_, bytes) => decodeRow(codec, bytes) }
       }
       .toDF("pk", "value", "ts_us")
     (header, rows)

@@ -133,23 +133,12 @@ object ViewMaintenance {
     val flat = walFlat(s, d).persist()
     val dir = java.nio.file.Files.createTempDirectory("graft_s14_")
     try {
-      def land(i: Int, lo: Long, hi: Long): Unit = {
-        val sub = java.nio.file.Files.createTempDirectory(s"graft_s14_w$i")
-        try {
-          flat.filter(col("lsn_long") > lo && col("lsn_long") <= hi)
-            .coalesce(1).write.mode("overwrite").parquet(sub.toString)
-          val listing = java.nio.file.Files.list(sub)
-          val parquet = try {
-            import scala.jdk.CollectionConverters._
-            listing.iterator().asScala.find(_.toString.endsWith(".parquet")).get
-          } finally listing.close()
-          java.nio.file.Files.move(parquet, dir.resolve(f"batch_$i%02d.parquet"))
-        } finally graft.sources.SourceSinks.deleteDir(sub)
-      }
+      def land(i: Int, lo: Long, hi: Long): Unit = graft.sources.SourceSinks.landSingleParquet(
+        flat.filter(col("lsn_long") > lo && col("lsn_long") <= hi),
+        dir.resolve(f"batch_$i%02d.parquet"))
       val engine = new IncrementalView()
       val stream = s.readStream.schema(flat.schema).parquet(dir.toString)
-      val onMicroBatch: (DataFrame, Long) => Unit =
-        (batchDf, _) => if (!batchDf.isEmpty) engine.advance(batchDf)
+      val onMicroBatch: (DataFrame, Long) => Unit = (batchDf, _) => engine.advance(batchDf)
       val q = stream.writeStream.outputMode("append")
         .foreachBatch(onMicroBatch)
         .queryName(s"graft_s14_${System.nanoTime()}").start()

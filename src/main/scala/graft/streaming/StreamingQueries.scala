@@ -255,18 +255,8 @@ object StreamingQueries {
       // completed batch BEFORE the late file even exists, so the second
       // batch runs against the advanced watermark regardless of any
       // file-listing order
-      def land(pred: org.apache.spark.sql.Column, name: String): Unit = {
-        val sub = java.nio.file.Files.createTempDirectory(s"graft_s11_w")
-        try {
-          evs.filter(pred).coalesce(1).write.mode("overwrite").parquet(sub.toString)
-          val listing = java.nio.file.Files.list(sub)
-          val parquet = try {
-            import scala.jdk.CollectionConverters._
-            listing.iterator().asScala.find(_.toString.endsWith(".parquet")).get
-          } finally listing.close()
-          java.nio.file.Files.move(parquet, dir.resolve(name))
-        } finally graft.sources.SourceSinks.deleteDir(sub)
-      }
+      def land(pred: org.apache.spark.sql.Column, name: String): Unit =
+        graft.sources.SourceSinks.landSingleParquet(evs.filter(pred), dir.resolve(name))
       val stream = s.readStream.schema(evs.schema).parquet(dir.toString)
       val name = s"graft_s11_${System.nanoTime()}"
       land(col("ts") >= lit(cutoff), "ontime.parquet")
@@ -350,19 +340,8 @@ object StreamingQueries {
     val dir = java.nio.file.Files.createTempDirectory("graft_s13_")
     val data = dir.resolve("data"); val cp = dir.resolve("checkpoint")
     java.nio.file.Files.createDirectories(data)
-    def land(b: Int): Unit = {
-      val sub = java.nio.file.Files.createTempDirectory(s"graft_s13_w$b")
-      try {
-        evs.filter(col("event_id") % 2 === b).coalesce(1)
-          .write.mode("overwrite").parquet(sub.toString)
-        val listing = java.nio.file.Files.list(sub)
-        val parquet = try {
-          import scala.jdk.CollectionConverters._
-          listing.iterator().asScala.find(_.toString.endsWith(".parquet")).get
-        } finally listing.close()
-        java.nio.file.Files.move(parquet, data.resolve(f"batch_$b%02d.parquet"))
-      } finally graft.sources.SourceSinks.deleteDir(sub)
-    }
+    def land(b: Int): Unit = graft.sources.SourceSinks.landSingleParquet(
+      evs.filter(col("event_id") % 2 === b), data.resolve(f"batch_$b%02d.parquet"))
     def incarnation(name: String): org.apache.spark.sql.streaming.StreamingQuery =
       s.readStream.schema(evs.schema).parquet(data.toString)
         .groupBy(col("event_type"))

@@ -9,6 +9,13 @@ import org.apache.spark.unsafe.types.UTF8String
 class CdcSpec extends AnyFunSuite {
   import SparkTestSession._
 
+  /** A copy of `frame` whose header names writer fingerprint `fp`. */
+  private def withFingerprint(frame: Array[Byte], fp: Long): Array[Byte] = {
+    val out = frame.clone()
+    System.arraycopy(AvroSchemaGen.fingerprintBytes(fp), 0, out, 2, 8)
+    out
+  }
+
   test("LSN parse/format matches pglogrepl semantics") {
     assert(Lsn.parse(UTF8String.fromString("16/B374D848")) == 0x16B374D848L)
     assert(Lsn.format(0x16B374D848L).toString == "16/B374D848")
@@ -79,14 +86,15 @@ class CdcSpec extends AnyFunSuite {
   }
 
   test("avro roundtrip preserves every record and the framing") {
-    implicit val s = spark
     val flat = Envelope.flat(Tables.events(spark, sf))
-    val decoded = AvroWal.roundtrip(flat).collect()
+    val decoded = CdcQueries.c14_avro_roundtrip(spark, sf).collect()
     assert(decoded.nonEmpty)
-    assert(decoded.forall(d => d.magic_ok && d.fp_ok))
-    val orig = AvroWal.walRecords(flat).collect()
-      .map(r => (r.lsn_long, r.op, r.pk, r.value, r.tx_at_us)).toSet
-    val got = decoded.map(d => (d.lsn_long, d.op, d.pk, d.value, d.tx_at_us)).toSet
+    assert(decoded.forall(d => d.getAs[Boolean]("magic_ok") && d.getAs[Boolean]("fp_ok")))
+    val orig = flat.filter(col("op") =!= "t")
+      .select(col("lsn_long"), col("op"), coalesce(col("pk_after"), col("pk_before")),
+        col("after_value"), unix_micros(col("tx_at")))
+      .collect().map(_.toSeq).toSet
+    val got = decoded.map(_.toSeq.take(5)).toSet
     assert(got == orig)
   }
 
@@ -243,11 +251,46 @@ class CdcSpec extends AnyFunSuite {
     assert(decoded.forall(d => d.tx_id == d.lsn_long && d.sent_at_us == d.tx_at_us &&
       d.db == "testdb" && d.schema_name == "public" && d.table_name == "events"))
     // a message framed under a different schema fingerprint is rejected
-    val schema = AvroSchemaGen.parse(AvroEnvelope.schemaJson)
+    val codec = AvroEnvelope.codec()
     val one = AvroEnvelope.envRecords(flat).head()
-    val bytes = AvroEnvelope.encodeOne(schema, AvroEnvelope.fingerprint + 1,
-      AvroEnvelope.fingerprintB64, one)
-    assert(!AvroEnvelope.decodeOne(schema, AvroEnvelope.fingerprint, bytes).fp_ok)
+    val bytes = withFingerprint(AvroEnvelope.encodeOne(codec, one), codec.fingerprint + 1)
+    assert(!AvroEnvelope.decodeOne(codec, bytes).fp_ok)
+  }
+
+  test("decoders reject payloads that are not single-object frames") {
+    import org.apache.spark.sql.types._
+    val env = AvroEnvelope.codec()
+    val pg = new SingleObject.Codec(PgTypeAvro.schemaJson)
+    val acct = new SingleObject.Codec(EvolutionDecode.v2Json,
+      Map(EvolutionDecode.fpV1 -> EvolutionDecode.v1Json))
+    val wal = new SingleObject.Codec(AvroSchemaGen.record(StructType(Seq(
+      StructField("lsn_long", LongType, nullable = false), StructField("op", StringType),
+      StructField("pk_before", LongType), StructField("pk_after", LongType),
+      StructField("after_value", DoubleType))), "wal", "graft"))
+    // a valid frame with its magic broken: bytes 2-9 still carry the
+    // decoder's own (registered) fingerprint
+    def wrongMagic(frame: Array[Byte]): Array[Byte] = { val b = frame.clone(); b(0) = 0x4F; b }
+    val short = Array[Byte](0xC3.toByte, 0x01, 1, 2, 3)
+    def loud(bytes: Array[Byte])(decode: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](decode)
+      val head = bytes.take(2).map(b => f"0x${b & 0xFF}%02X").mkString(" ")
+      assert(e.getMessage.contains(s"${bytes.length} bytes") && e.getMessage.contains(head),
+        e.getMessage)
+    }
+    val envBad = wrongMagic(AvroEnvelope.encodeOne(env,
+      EnvRecord(1L, "c", 0L, None, Some(1L), Some(1.0))))
+    val pgBad = wrongMagic(PgTypeAvro.encodeOne(pg, PgTypeAvro.PgRow(1L, flag = true, 1, 1,
+      0.5f, None, "n", "u", "{}", 0L, None, None, 0L, None, None, Nil, Nil)))
+    val acctBad = wrongMagic(EvolutionDecode.encodeOne(acct, 1L, 1L, Some(1.0), Some("v2:1")))
+    val walBad = wrongMagic(JdbcEvolution.encodeRow(wal, 1L, "c", None, Some(1L), None, None))
+    Seq(short, envBad).foreach(b => loud(b)(AvroEnvelope.decodeOne(env, b)))
+    Seq(short, pgBad).foreach(b => loud(b)(PgTypeAvro.decodeOne(pg, b)))
+    Seq(short, walBad).foreach(b => loud(b)(JdbcEvolution.decodeRow(wal, b)))
+    // c24 skips it: the null-field skip row, never decoded data
+    Seq(short, acctBad).foreach { b =>
+      assert(EvolutionDecode.decodeOne(acct, b) ==
+        EvolvedDecoded(None, None, None, None, writer_version = 0, fp_ok = false))
+    }
   }
 
   test("c21 redelivery dedup restores exactly-once state (and is not vacuous)") {
@@ -292,18 +335,16 @@ class CdcSpec extends AnyFunSuite {
     // v2-written records carry their payload through resolution
     assert(v2w.forall(r => r.src.contains(s"v2:${r.pk.get}")))
     // reverse resolution: a v1 READER drops the v2-only field
-    val s1 = AvroSchemaGen.parse(EvolutionDecode.v1Json)
-    val s2 = AvroSchemaGen.parse(EvolutionDecode.v2Json)
-    val reg = Map(EvolutionDecode.fpV1 -> s1, EvolutionDecode.fpV2 -> s2)
-    val bytes = EvolutionDecode.encodeOne(s2, EvolutionDecode.fpV2,
+    val bytes = EvolutionDecode.encodeOne(new SingleObject.Codec(EvolutionDecode.v2Json),
       99L, 7L, Some(1.5), Some("v2:7"))
-    val down = EvolutionDecode.decodeOne(reg, reader = s1, bytes)
+    val down = EvolutionDecode.decodeOne(new SingleObject.Codec(EvolutionDecode.v1Json,
+      registry), bytes)
     assert(down.lsn_long.contains(99L) && down.pk.contains(7L) &&
       down.value.contains(1.5) && down.src.isEmpty)
     // an unknown writer fingerprint surfaces fp_ok=false with every data
     // field null (no in-band sentinel values), not a crash
     val unknown = EvolutionDecode.decodeOne(
-      Map(EvolutionDecode.fpV1 -> s1), reader = s1, bytes)
+      new SingleObject.Codec(EvolutionDecode.v1Json), bytes)
     assert(!unknown.fp_ok && unknown.writer_version == 0)
     assert(unknown.lsn_long.isEmpty && unknown.pk.isEmpty &&
       unknown.value.isEmpty && unknown.src.isEmpty)
@@ -409,17 +450,20 @@ class CdcSpec extends AnyFunSuite {
       assert(loaded.jsonByFingerprint(fp2) == EvolutionDecode.v2Json)
       assert(loaded.latestBySubject().count() == 2)
       // the loaded snapshot resolves a writer the consumer doesn't hold
-      val s2 = AvroSchemaGen.parse(EvolutionDecode.v2Json)
-      val bytes = EvolutionDecode.encodeOne(s2, fp2, 42L, 9L, Some(2.5), Some("v2:9"))
-      val cache = scala.collection.mutable.Map.empty[Long, org.apache.avro.Schema]
-      val dec = EvolutionDecode.decodeResolving(
-        cache, loaded.jsonByFingerprint, reader = s2, bytes)
+      val v2 = new SingleObject.Codec(EvolutionDecode.v2Json)
+      val bytes = EvolutionDecode.encodeOne(v2, 42L, 9L, Some(2.5), Some("v2:9"))
+      val dec = EvolutionDecode.decodeOne(
+        new SingleObject.Codec(EvolutionDecode.v2Json, loaded.jsonByFingerprint), bytes)
       assert(dec.fp_ok && dec.lsn_long.contains(42L) && dec.src.contains("v2:9"))
-      assert(cache.contains(fp2)) // parsed once, cached for the partition
-      // absent from BOTH cache and registry → null-field skip row
-      val miss = EvolutionDecode.decodeResolving(
-        cache, Map.empty, reader = s2,
-        EvolutionDecode.encodeOne(s2, fp2 + 1, 1L, 1L, None, None))
+      // a v1 consumer holds no v2 schema: the writer resolves only
+      // through the loaded snapshot
+      val viaRegistry = EvolutionDecode.decodeOne(
+        new SingleObject.Codec(EvolutionDecode.v1Json, loaded.jsonByFingerprint), bytes)
+      assert(viaRegistry.fp_ok && viaRegistry.writer_version == 2)
+      // absent from both the reader's schema and the registry → skip row
+      val miss = EvolutionDecode.decodeOne(
+        new SingleObject.Codec(EvolutionDecode.v2Json, loaded.jsonByFingerprint),
+        withFingerprint(EvolutionDecode.encodeOne(v2, 1L, 1L, None, None), fp2 + 1))
       assert(!miss.fp_ok && miss.lsn_long.isEmpty)
     } finally graft.sources.SourceSinks.deleteDir(dir)
   }
@@ -463,9 +507,8 @@ class CdcSpec extends AnyFunSuite {
     // ...and are genuinely PARTIAL: at 16-byte chunks every encoded WAL
     // message spans ≥2 frames, so a dropped frame still leaves frames
     // arriving (the drain logic runs, it's not an absent message)
-    val one = graft.cdc.AvroWal.encodeOne(
-      AvroSchemaGen.parse(AvroWal.schemaJson), AvroWal.fingerprint,
-      WalRecord(1L, "c", 1L, Some(1.0), 0L))
+    val one = AvroEnvelope.encodeOne(AvroEnvelope.codec(),
+      EnvRecord(1L, "c", 0L, None, Some(1L), Some(1.0)))
     assert(Chunking.split(1L, one, chunkSize = 16).length >= 2)
     assert(got == all -- lostFirst -- lostInterior)
   }
@@ -482,8 +525,8 @@ class CdcSpec extends AnyFunSuite {
     // THE ROW SCHEMA ITSELF (the consumer holds nothing statically)
     assert(header.lsn == "AB/10" && header.tx_id == 42L && header.approx_rows == 3L)
     assert(header.schema == SnapshotWire.rowSchemaJson)
-    assert(header.fingerprint ==
-      AvroSchemaGen.fingerprintB64(SnapshotWire.rowFingerprint))
+    assert(header.fingerprint == AvroSchemaGen.fingerprintB64(
+      AvroSchemaGen.fingerprint64(SnapshotWire.rowSchemaJson)))
     val got = rows.collect().map(r => (r.getLong(0),
       Option(r.get(1)).map(_.asInstanceOf[Double]))).toSet
     assert(got == Set(1L -> Some(1.5), 2L -> None, 3L -> Some(-0.25)))
@@ -870,10 +913,10 @@ class CdcSpec extends AnyFunSuite {
       AvroSchemaGen.record(stV2, "wal", "graft"))
     val (f1v, f2v) = (AvroSchemaGen.fingerprint64(stV1, "wal"),
       AvroSchemaGen.fingerprint64(stV2, "wal"))
-    val frame = JdbcEvolution.encodeRow(AvroSchemaGen.parse(j1), f1v,
+    val frame = JdbcEvolution.encodeRow(new SingleObject.Codec(j1),
       5L, "c", None, Some(7L), Some(1.25), None)
-    val dec = JdbcEvolution.decodeRow(scala.collection.mutable.Map.empty,
-      Map(f1v -> j1, f2v -> j2), AvroSchemaGen.parse(j2), f2v, frame)
+    val dec = JdbcEvolution.decodeRow(
+      new SingleObject.Codec(j2, Map(f1v -> j1, f2v -> j2)), frame)
     assert(dec.writer_version == 1 && dec.src.isEmpty &&
       dec.pk_after.contains(7L) && dec.value.contains(1.25),
       s"v1→v2 resolution drift: $dec")

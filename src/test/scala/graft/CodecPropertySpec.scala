@@ -2,7 +2,8 @@ package graft
 
 import org.scalacheck.{Gen, Prop, Properties}
 import org.apache.spark.unsafe.types.UTF8String
-import graft.cdc.{Chunking, PgOutput, PgoDecoded, PgoRow, StandbyReply}
+import graft.cdc.{AvroEnvelope, Chunking, EnvRecord, PgOutput, PgoDecoded, PgoRow,
+  SingleObject, StandbyReply}
 import graft.functions.Lsn
 
 /** Property-based checks for the driver-side codec primitives — the byte
@@ -38,6 +39,41 @@ object CodecPropertySpec extends Properties("codecs") {
       (bytes.isEmpty || frames.length == expected) &&
         frames.zipWithIndex.forall { case (f, i) => f.seq == i && f.total_len == bytes.length } &&
         java.util.Arrays.equals(reassembled, bytes)
+    }
+
+  // -- Avro single-object codec reuse ----------------------------------
+  // One codec instance frames a random mix of small and large envelopes
+  // (every op including t, absent before/after images and values,
+  // extreme lsn / timestamp / value): reusing its encoder and buffer must
+  // leak no byte from one record into the next.
+
+  private val genAnyLong: Gen[Long] = Gen.oneOf(
+    Gen.choose(Long.MinValue, Long.MaxValue),
+    Gen.oneOf(0L, 1L, -1L, Long.MaxValue, Long.MinValue))
+
+  private val genEnvRecord: Gen[EnvRecord] = for {
+    op <- Gen.oneOf("c", "u", "u_pk", "d", "t", "r")
+    lsn <- genAnyLong
+    txAt <- genAnyLong
+    pkBefore <- Gen.option(genAnyLong)
+    pkAfter <- Gen.option(genAnyLong)
+    value <- Gen.option(Gen.oneOf(Gen.choose(-1e300, 1e300), Gen.oneOf(Double.MaxValue,
+      -Double.MaxValue, Double.MinPositiveValue, Double.PositiveInfinity,
+      Double.NegativeInfinity)))
+  } yield EnvRecord(lsn, op, txAt, pkBefore, pkAfter,
+    after_value = if (pkAfter.isEmpty) None else value) // no after image, no value
+
+  property("a reused envelope codec frames like a fresh one, losslessly") =
+    Prop.forAll(Gen.listOf(genEnvRecord)) { recs =>
+      val codec = AvroEnvelope.codec()
+      recs.forall { r =>
+        val frame = AvroEnvelope.encodeOne(codec, r)
+        val d = AvroEnvelope.decodeOne(codec, frame)
+        java.util.Arrays.equals(frame, AvroEnvelope.encodeOne(AvroEnvelope.codec(), r)) &&
+          (d.lsn_long, d.op, d.tx_at_us, d.pk_before, d.pk_after, d.after_value) ==
+            (r.lsn_long, r.op, r.tx_at_us, r.pk_before, r.pk_after, r.after_value) &&
+          SingleObject.header(frame).contains(codec.fingerprint)
+      }
     }
 
   // -- pgoutput writer/reader primitives -------------------------------
