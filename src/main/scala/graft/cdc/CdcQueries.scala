@@ -548,11 +548,14 @@ object CdcQueries {
   // multi-relation decode loses nothing the apply needs.
   val c35_multi_table_stream: Q = (s, d) => {
     implicit val spark: SparkSession = s
-    val decoded = PgOutput.multiRoundtrip(flatEnv(s, d)).toDF()
+    val decoded = PgOutput.roundtrip(flatEnv(s, d), shardOf).toDF()
     multiTableApply(decoded.select(
       col("table_name").as("tbl"), col("lsn_long"), col("op"),
       col("pk_before"), col("pk_after"), col("after_value")))
   }
+
+  /** c30's sharding on the wire: user → relation `t{user_id % 4}`. */
+  private val shardOf: Long => String = uid => s"t${uid % 4}"
 
   /** One-pass multi-table apply over a flat stream carrying `tbl`:
     * half-events keep their table, truncates cut only their own table
@@ -643,7 +646,7 @@ object CdcQueries {
   def c37run(s: SparkSession, d: String): (DataFrame, Long, Long) = {
     implicit val spark: SparkSession = s
     // -- decode (c35): interleaved multi-relation byte stream
-    val decoded = PgOutput.multiRoundtrip(flatEnv(s, d)).toDF().select(
+    val decoded = PgOutput.roundtrip(flatEnv(s, d), shardOf).toDF().select(
       col("table_name").as("tbl"), col("lsn_long"), col("op"),
       col("pk_before"), col("pk_after"), col("after_value"))
     // ONE allow-list constant drives both the budget sizing and the
@@ -708,7 +711,7 @@ object CdcQueries {
     // the collapse server-side; the daemon's publication layer must land
     // on the same observable contract either way: events surface under
     // the ROOT topic with source.table = the root
-    val decoded = PgOutput.multiRoundtripAs(flatEnv(s, d), leafOf).toDF()
+    val decoded = PgOutput.roundtrip(flatEnv(s, d), leafOf).toDF()
       .select(col("table_name"), col("lsn_long"), col("op"),
         col("pk_before"), col("pk_after"), col("after_value"))
     val leaves = decoded.select("table_name").distinct()
@@ -883,7 +886,7 @@ object CdcQueries {
   // c44: TRANSACTION-BOUNDARY GROUPING — WAL ops roll up to their
   // COMMIT, the reference's unit of atomicity (every op between two
   // commit markers shares its Begin's xid/commit time —
-  // replication.go semantics, PgOutput.scala:58). The planted lift
+  // replication.go semantics, PgOutput.consume). The planted lift
   // commits every 7 LSNs, so the owning commit LSN is CLOSED-FORM
   // integer arithmetic (((lsn+6) div 7)·7) — no window, no scan-order
   // assumption — and the whole lane is ONE keyed agg to the per-tx

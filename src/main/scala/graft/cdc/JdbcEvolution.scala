@@ -110,7 +110,7 @@ object JdbcEvolution {
       val flat = Envelope.flat(Tables.events(s, d)).select(flatColsV1.map(col): _*)
       val b = flat.agg(min("lsn_long"), max("lsn_long")).head()
       val (minL, maxL) = (b.getLong(0), b.getLong(1))
-      val evoCut = minL + (maxL - minL) * 3 / 5
+      val evoCut = Polls.snapshotCut(minL, maxL)
       // ---- land generation 1: the table BEFORE the ALTER ---------------
       fx.landV1(flat.filter(col("lsn_long") <= evoCut).toDF(walColsV1: _*))
       // c11: writer identity from the CURRENT JDBC StructType
@@ -118,8 +118,7 @@ object JdbcEvolution {
       val jsonV1 = AvroSchemaGen.record(st1, "wal", "graft")
       val fpV1 = AvroSchemaGen.fingerprint64(st1, "wal")
       // polls 1-2: the pre-evolution tail, framed under writer v1
-      val mid = minL + (evoCut - minL) / 2
-      val framesV1 = Seq((minL - 1, mid), (mid, evoCut)).map { case (lo, hi) =>
+      val framesV1 = Polls.ranges(minL - 1, evoCut, 2).map { case (lo, hi) =>
         frames(s.read.jdbc(url,
           s"(SELECT * FROM WAL WHERE LSN_LONG > $lo AND LSN_LONG <= $hi) AS W",
           props).toDF(flatColsV1: _*), jsonV1)
@@ -137,12 +136,10 @@ object JdbcEvolution {
       val fpV2 = AvroSchemaGen.fingerprint64(st2, "wal")
       require(fpV2 != fpV1, "ALTER TABLE did not change the fingerprint")
       // polls 3-4: the post-evolution tail, framed under writer v2
-      val step = math.max(1L, (maxL - evoCut + 1) / 2)
-      val framesV2 = Seq((evoCut, evoCut + step), (evoCut + step, maxL)).map {
-        case (lo, hi) =>
-          frames(s.read.jdbc(url,
-            s"(SELECT * FROM WAL WHERE LSN_LONG > $lo AND LSN_LONG <= $hi) AS W",
-            props).toDF(flatColsV1 :+ "src": _*), jsonV2)
+      val framesV2 = Polls.ranges(evoCut, maxL, 2).map { case (lo, hi) =>
+        frames(s.read.jdbc(url,
+          s"(SELECT * FROM WAL WHERE LSN_LONG > $lo AND LSN_LONG <= $hi) AS W",
+          props).toDF(flatColsV1 :+ "src": _*), jsonV2)
       }.reduce(_ union _)
       // ---- consumer: replay ALL frames with the LATEST reader ----------
       val registry = Map(fpV1 -> jsonV1, fpV2 -> jsonV2)

@@ -67,26 +67,19 @@ object JdbcSource {
     val (fx, minL, maxL) = loadDb(s, d, dir)
     val (url, props) = (fx.url, fx.props)
     try {
-      // snapshot cut at the 60% LSN point — deterministic from the data,
-      // leaving a meaningful tail for the poll loop at every sf
-      val snapLsn = minL + (maxL - minL) * 3 / 5
+      val snapLsn = Polls.snapshotCut(minL, maxL)
       // ---- initial snapshot: ONE logical SELECT *, N physical stripes --
       val snapshot = s.read.jdbc(
         url, s"(SELECT * FROM WAL WHERE LSN_LONG <= $snapLsn) AS SNAP",
         "LSN_LONG", minL, snapLsn, 8, props)
       var state = Apply.state(lower(snapshot))
       // ---- lsn-poll micro-batch loop: WHERE lsn > last_applied ---------
-      val step = math.max(1L, (maxL - snapLsn + 3) / 4)
-      var from = snapLsn
-      var nBatches = 0
-      while (from < maxL) {
-        val hi = math.min(from + step, maxL)
+      val polls = Polls.ranges(snapLsn, maxL, 4)
+      polls.foreach { case (lo, hi) =>
         val batch = s.read.jdbc(
-          url, s"(SELECT * FROM WAL WHERE LSN_LONG > $from AND LSN_LONG <= $hi) AS W",
+          url, s"(SELECT * FROM WAL WHERE LSN_LONG > $lo AND LSN_LONG <= $hi) AS W",
           props)
         state = Apply.fold(lower(batch), Some(state))
-        from = hi
-        nBatches += 1
       }
       val out = state.filter(col("last_op") =!= "d")
         .select(col("pk"), round(col("last_value"), 2).as("value"), col("last_ord"))
@@ -99,7 +92,7 @@ object JdbcSource {
         Files.createTempDirectory("graft_c33_replica"))
       out.write.mode("overwrite").parquet(s"$pdir/replica")
       (s.read.parquet(s"$pdir/replica").orderBy("pk"),
-        snapshot.rdd.getNumPartitions, nBatches)
+        snapshot.rdd.getNumPartitions, polls.length)
     } finally {
       fx.close()
       graft.sources.SourceSinks.deleteDir(dir)
@@ -160,7 +153,7 @@ object JdbcSource {
       val cmdDir = dir.resolve("polls"); Files.createDirectories(cmdDir)
       val cp = dir.resolve("checkpoint")
       val offsetPath = durable.resolve("offset")
-      val snapLsn = minL + (maxL - minL) * 3 / 5
+      val snapLsn = Polls.snapshotCut(minL, maxL)
       // ---- initial snapshot (c33's striped scan), state version 0 ----
       val snapshot = s.read.jdbc(
         url, s"(SELECT * FROM WAL WHERE LSN_LONG <= $snapLsn) AS SNAP",
@@ -191,6 +184,10 @@ object JdbcSource {
           val v = off.version + 1
           state.write.mode("overwrite").parquet(s"$durable/state_v$v")
           writeOffset(offsetPath, Offset(batchId, last, v))
+          // a restart re-reads only the version the offset names, so
+          // every older version is garbage once v is committed
+          (0L until v).map(k => durable.resolve(s"state_v$k")).filter(Files.exists(_))
+            .foreach(graft.sources.SourceSinks.deleteDir)
         }
       }
       def incarnation(): org.apache.spark.sql.streaming.StreamingQuery =
@@ -202,8 +199,7 @@ object JdbcSource {
       def land(seq: Int, hi: Long): Unit =
         graft.sources.SourceSinks.landSingleParquet(
           Seq(PollCmd(seq, hi)).toDF(), cmdDir.resolve(f"poll_$seq%02d.parquet"))
-      val step = math.max(1L, (maxL - snapLsn + 3) / 4)
-      val his = (1 to 4).map(i => math.min(snapLsn + i * step, maxL))
+      val his = Polls.ranges(snapLsn, maxL, 4).map(_._2).padTo(4, maxL)
       // incarnation 1: two polls, then STOP mid-tail
       val q1 = incarnation()
       try { land(0, his(0)); land(1, his(1)); q1.processAllAvailable() }

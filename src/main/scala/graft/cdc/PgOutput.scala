@@ -30,32 +30,9 @@ case class StandbyReply(wal_write: Long, wal_flush: Long, wal_apply: Long,
   * producer's core message loop re-implemented from the public PostgreSQL
   * protocol ("Logical Replication Message Formats" + "Streaming Replication
   * Protocol"), matching the reference's dispatch and envelope semantics
-  * branch for branch (/root/reference/internal/dao/replication.go:205-310
-  * frame loop, :309-368 Begin/Relation, :369-519 Insert/Update/Delete/
-  * Truncate, :520-558 getValues/getKeyValues, :559-565 text-column decode,
-  * :567-583 baseMessage):
-  *
-  *   - each wire frame is a CopyData payload (here length-prefixed, the
-  *     delimiting the pg wire protocol provides): 'k' primary keepalive
-  *     (ServerWALEnd advances CurrentLSN) or 'w' XLogData (WALStart u64,
-  *     ServerWALEnd u64, ServerTime i64, pgoutput body);
-  *   - Begin 'B' (FinalLSN u64, CommitTime i64 in MICROSECONDS SINCE THE
-  *     POSTGRES EPOCH 2000-01-01, Xid u32) sets the transaction context;
-  *   - Relation 'R' (relid, namespace, name, replica identity, columns
-  *     with key flags + type OIDs) registers the table — a stream is
-  *     self-contained because Postgres re-sends Relation messages on every
-  *     new connection;
-  *   - Insert 'I' → op c with after = the new tuple; Update 'U' with an
-  *     old tuple ('K'/'O') → op u_pk with before = the old tuple, without
-  *     one → op u with before = the KEY COLUMNS OF THE NEW TUPLE
-  *     (replication.go:434-441); Delete 'D' → op d with before = the old
-  *     tuple; Truncate 'T' → one op t per relation id;
-  *   - tuple cells are 'n' null (present, null value), 'u' unchanged
-  *     TOAST (ABSENT from the value map — replication.go:527-530), or
-  *     't' text, decoded by column OID like the reference's
-  *     decodeTextColumnData (int8/float8/timestamptz here);
-  *   - the envelope lsn is CurrentLSN = max WALStart seen
-  *     (replication.go:243-245), tx_id/tx_at come from Begin.
+  * branch for branch (creek's internal/dao/replication.go). One producer,
+  * `encode`, plants a stream; one consumer loop, `consume`, reads it — its
+  * scaladoc states the frame layout and what the loop yields.
   *
   * Scale shape: the WAL is segmented into contiguous LSN ranges, one
   * self-contained stream per segment (what a parallel backfill of archived
@@ -102,27 +79,43 @@ object PgOutput {
     def result(): Array[Byte] = out.toByteArray
   }
 
-  final class R(buf: Array[Byte], var pos: Int = 0) {
-    def u8(): Int = { val v = buf(pos) & 0xFF; pos += 1; v }
-    def u16(): Int = (u8() << 8) | u8()
-    def u32(): Long = (u16().toLong << 16) | u16()
-    def u64(): Long = (u32() << 32) | u32()
+  /** Reads `buf` in place from `pos` up to `end`. A read that would pass
+    * `end` throws an IllegalArgumentException naming the offset the read
+    * starts at, so a cut length prefix, a short frame, a cut message and a
+    * string without its NUL all fail by the same rule (offsets count from
+    * the start of `buf`).
+    */
+  final class R(buf: Array[Byte], var pos: Int, end: Int) {
+    def this(buf: Array[Byte]) = this(buf, 0, buf.length)
+    private def need(n: Int): Unit =
+      require(n >= 0 && n <= end - pos,
+        s"truncated frame: need $n bytes at offset $pos of $end")
+    private def get(): Int = { val v = buf(pos) & 0xFF; pos += 1; v }
+    def u8(): Int = { need(1); get() }
+    def u16(): Int = { need(2); (get() << 8) | get() }
+    def u32(): Long = { need(4); (get().toLong << 24) | (get() << 16) | (get() << 8) | get() }
+    def u64(): Long = { need(8); (u32() << 32) | u32() }
     def i64(): Long = u64()
     def cstr(): String = {
       val start = pos
-      while (buf(pos) != 0) pos += 1
+      while (pos < end && buf(pos) != 0) pos += 1
+      require(pos < end, s"truncated frame: no NUL ends the string at offset $start")
       val s = new String(buf, start, pos - start, StandardCharsets.UTF_8)
       pos += 1
       s
     }
+    /** `n` bytes of UTF-8 text, decoded in place. */
+    def text(n: Int): String = {
+      need(n)
+      val s = new String(buf, pos, n, StandardCharsets.UTF_8); pos += n; s
+    }
     def bytes(n: Int): Array[Byte] = {
-      // copyOfRange zero-pads past the end — a truncated frame would parse
-      // silently; fail loudly instead (consistent with c28's drain contract)
-      require(n >= 0 && pos + n <= buf.length,
-        s"truncated frame: need $n bytes at offset $pos of ${buf.length}")
+      need(n)
       val b = java.util.Arrays.copyOfRange(buf, pos, pos + n); pos += n; b
     }
-    def remaining: Int = buf.length - pos
+    /** The next `n` bytes as a reader bounded by their end (no copy). */
+    def sub(n: Int): R = { need(n); val r = new R(buf, pos, pos + n); pos += n; r }
+    def remaining: Int = end - pos
   }
 
   // ------------------------------------------------------------------
@@ -194,9 +187,9 @@ object PgOutput {
   /** Primary keepalive frame 'k': ServerWALEnd, ServerTime, ReplyRequested.
     * ServerTime is on the wire as micros since the pg epoch (like Begin/
     * Commit times); the default writes 0 — "time unknown" — for callers
-    * that omit serverTimeUs. encodeStream deliberately passes the commit
-    * clock (r.tx_at_us) instead, so its planted keepalives carry a real
-    * ServerTime for the x14 lag gauges; decoders accept both.
+    * that omit serverTimeUs. `encode` passes the commit clock
+    * (r.tx_at_us) instead, so its planted keepalives carry a real
+    * ServerTime for the x14 lag gauges.
     */
   def keepalive(serverWalEnd: Long, reply: Boolean,
       serverTimeUs: Long = PgEpochMicros): Array[Byte] =
@@ -231,14 +224,19 @@ object PgOutput {
   val eventsCols: Seq[(Int, String, Int)] = Seq(
     (1, "user_id", OidInt8), (0, "value", OidFloat8), (0, "ts", OidTimestamptz))
 
-  /** Plant one self-contained stream for a sorted LSN segment: Relation
-    * preamble, then Begin + change + Commit per transaction, keepalives
-    * sprinkled every 97 messages (ServerWALEnd = last seen LSN).
+  /** Plant one self-contained stream for a sorted LSN segment. Rows route
+    * to the relation `tableOf(user_id)`; each relation's Relation message
+    * (ids from RelId up, in order of first use) is emitted lazily before
+    * its first row — exactly how a pg session registers relations, so
+    * with several tables the consumer's relations map is exercised with
+    * live dispatch and a truncate cuts only its own relation. Each row is
+    * Begin + change + Commit; every 97th row is followed by a keepalive
+    * (ServerWALEnd = the row's LSN, ServerTime = its commit time).
     */
-  def encodeStream(rows: Seq[PgoRow], keepaliveReply: Boolean = false): Array[Byte] = {
+  def encode(rows: Seq[PgoRow], tableOf: Long => String = _ => "events",
+      keepaliveReply: Boolean = false): Array[Byte] = {
     val out = new ByteArrayOutputStream(rows.length * 96 + 256)
-    if (rows.isEmpty) return out.toByteArray
-    frame(out, xlog(rows.head.lsn_long, relationMsg(RelId, "public", "events", eventsCols)))
+    var registered = Map.empty[String, Int]
     var n = 0
     rows.foreach { r =>
       // the planted lift reuses lsn as the Begin Xid, but pgoutput xids
@@ -246,8 +244,15 @@ object PgOutput {
       // (the decode side would diverge from the lsn-based oracle)
       require(r.lsn_long <= 0xFFFFFFFFL,
         s"planted xid = lsn ${r.lsn_long} exceeds the u32 pgoutput Xid")
+      val tname = tableOf(r.user_id)
+      val relId = registered.getOrElse(tname, {
+        val id = RelId + registered.size
+        frame(out, xlog(r.lsn_long, relationMsg(id, "public", tname, eventsCols)))
+        registered += tname -> id
+        id
+      })
       frame(out, xlog(r.lsn_long, beginMsg(r.lsn_long, r.tx_at_us, r.lsn_long)))
-      frame(out, xlog(r.lsn_long, bodyFor(r, RelId)))
+      frame(out, xlog(r.lsn_long, bodyFor(r, relId)))
       frame(out, xlog(r.lsn_long, commitMsg(r.lsn_long, r.tx_at_us)))
       n += 1
       if (n % 97 == 0)
@@ -277,37 +282,6 @@ object PgOutput {
     }
   }
 
-  /** Plant a MULTI-TABLE stream: rows route to `t{user_id % 4}` (the c18/
-    * c30 sharding); each table's Relation message is emitted lazily on
-    * FIRST use, interleaved with data frames — exactly how a pg session
-    * registers relations — so the consumer's relations map is exercised
-    * with live dispatch, and a truncate cuts only its own relation.
-    */
-  def encodeMultiStream(rows: Seq[PgoRow],
-      tableOf: Long => String = uid => s"t${(uid % 4).toInt}"): Array[Byte] = {
-    val out = new ByteArrayOutputStream(rows.length * 96 + 1024)
-    var registered = Map.empty[String, Int]
-    var n = 0
-    rows.foreach { r =>
-      require(r.lsn_long <= 0xFFFFFFFFL,
-        s"planted xid = lsn ${r.lsn_long} exceeds the u32 pgoutput Xid")
-      val tname = tableOf(r.user_id)
-      val relId = registered.getOrElse(tname, {
-        val id = RelId + registered.size
-        frame(out, xlog(r.lsn_long, relationMsg(id, "public", tname, eventsCols)))
-        registered += tname -> id
-        id
-      })
-      frame(out, xlog(r.lsn_long, beginMsg(r.lsn_long, r.tx_at_us, r.lsn_long)))
-      frame(out, xlog(r.lsn_long, bodyFor(r, relId)))
-      frame(out, xlog(r.lsn_long, commitMsg(r.lsn_long, r.tx_at_us)))
-      n += 1
-      if (n % 97 == 0)
-        frame(out, keepalive(r.lsn_long, reply = false, serverTimeUs = r.tx_at_us))
-    }
-    out.toByteArray
-  }
-
   // ------------------------------------------------------------------
   // consumer: the decode loop (replication.go:205-583)
 
@@ -323,10 +297,14 @@ object PgOutput {
 
   /** Tuple → column-name map: 'n' maps the name to null, 'u' leaves the
     * name ABSENT (unchanged toast), 't' decodes by OID — exactly
-    * getValues (replication.go:520-538).
+    * getValues (replication.go:520-538). A tuple with more cells than
+    * its relation has columns fails loudly.
     */
   def readTuple(r: R, cols: Seq[(Int, String, Int)]): Map[String, Any] = {
+    val at = r.pos
     val n = r.u16()
+    require(n <= cols.length,
+      s"tuple at offset $at has $n cells for ${cols.length} columns")
     val m = Map.newBuilder[String, Any]
     var i = 0
     while (i < n) {
@@ -334,10 +312,9 @@ object PgOutput {
       r.u8().toChar match {
         case 'n' => m += name -> null
         case 'u' => () // unchanged toast: absent from the map
-        case 't' =>
-          val len = r.u32().toInt
-          m += name -> decodeText(oid, new String(r.bytes(len), StandardCharsets.UTF_8))
-        case k => throw new IllegalArgumentException(s"unknown tuple kind $k")
+        case 't' => m += name -> decodeText(oid, r.text(r.u32().toInt))
+        case k => throw new IllegalArgumentException(
+          s"unknown tuple kind $k at offset ${r.pos - 1}")
       }
       i += 1
     }
@@ -351,39 +328,172 @@ object PgOutput {
   def readKeyTuple(tuple: Map[String, Any], cols: Seq[(Int, String, Int)]): Map[String, Any] =
     tuple.filter { case (name, _) => cols.exists(c => c._2 == name && c._1 == 1) }
 
-  /** Run the consumer loop over one framed byte stream. Unknown relation
-    * ids skip the message (the reference logs and continues,
-    * replication.go:370-372) — never a task failure.
+  /** The one walk over a stream's length prefixes (layout: `consume`):
+    * each frame is handed out in order as a reader bounded by its end.
+    * Bytes after the last frame that do not form a whole frame fail
+    * loudly, like any other read past an end.
     */
-  def decodeStream(bytes: Array[Byte]): Seq[PgoDecoded] = {
-    val out = Seq.newBuilder[PgoDecoded]
+  def frames(bytes: Array[Byte]): Iterator[R] = new Iterator[R] {
+    private val top = new R(bytes)
+    def hasNext: Boolean = top.remaining > 0
+    def next(): R = top.sub(top.u32().toInt)
+  }
+
+  /** What one pass of `consume` yields (stated there). */
+  case class Consumed(rows: Seq[PgoDecoded], replies: Seq[StandbyReply],
+      keepalives: Seq[(Long, Long)]) {
+
+    /** The gauge triple at every keepalive, exactly as the keepalive arm
+      * of the reference loop feeds metrics (replication.go:219-237):
+      * SetWalLSN(ServerWALEnd), SetBehindLSN(head, ServerWALEnd) with the
+      * negative diff clamped, SetBehindTime(now − ServerTime) in millis.
+      * `headLsn`/`headTimeUs` stand in for GetCurrLSN() / time.Now() —
+      * the server's WAL head and the observation clock, which in the
+      * planted world are known exactly.
+      */
+    def lag(headLsn: Long, headTimeUs: Long): Seq[LagGauge] =
+      keepalives.map { case (walEnd, timeUs) =>
+        LagGauge(wal_lsn = walEnd, wal_lsn_str = Lsn.format(walEnd).toString,
+          behind_lsn = math.max(0L, headLsn - walEnd),
+          behind_time_ms = math.max(0L, (headTimeUs - timeUs) / 1000))
+      }
+  }
+
+  /** The consumer loop (replication.go:205-583) over one stream. The
+    * stream is a sequence of frames, each a 4-byte big-endian length and
+    * a CopyData payload of that many bytes, read in place. The loop
+    * yields the decoded envelope rows, the Standby Status Update sent for
+    * each keepalive that requests one, and each keepalive's
+    * (ServerWALEnd, ServerTime in unix micros).
+    *
+    * Payloads by frame type:
+    *   - 'k' primary keepalive: ServerWALEnd u64, ServerTime i64,
+    *     ReplyRequested u8. ServerWALEnd advances CurrentLSN; the
+    *     (ServerWALEnd, ServerTime) pair is recorded for the lag gauges;
+    *     a requested reply makes the client send a Standby Status Update
+    *     carrying CurrentLSN (replication.go:230-233 zeroes the send
+    *     deadline, :87-93 posts CurrentLSN), emitted as wire bytes and
+    *     re-parsed, so the full 'r' roundtrip is pinned;
+    *   - 'w' XLogData: WALStart u64, ServerWALEnd u64, ServerTime i64 and
+    *     one pgoutput message. WALStart advances CurrentLSN, which is the
+    *     envelope lsn (replication.go:243-245);
+    *   - any other frame type is skipped (log-and-continue in the
+    *     reference, replication.go:199-203).
+    *
+    * pgoutput messages:
+    *   - Begin 'B' (FinalLSN u64, CommitTime i64 in MICROSECONDS SINCE THE
+    *     POSTGRES EPOCH 2000-01-01, Xid u32) sets tx_id/tx_at;
+    *   - Relation 'R' (relid, namespace, name, replica identity, columns
+    *     with key flags + type OIDs) registers the table — a stream is
+    *     self-contained because Postgres re-sends Relation messages on
+    *     every new connection;
+    *   - Insert 'I' → op c with after = the new tuple; Update 'U' with an
+    *     old tuple ('K'/'O') → op u_pk with before = the old tuple, without
+    *     one → op u with before = the KEY COLUMNS OF THE NEW TUPLE
+    *     (replication.go:434-441); Delete 'D' → op d with before = the old
+    *     tuple; Truncate 'T' → one op t per relation id. A change for an
+    *     unknown relation id is skipped (replication.go:370-372);
+    *   - tuple cells are 'n' null (present, null value), 'u' unchanged
+    *     TOAST (ABSENT from the value map — replication.go:527-530), or
+    *     't' text, decoded by column OID like the reference's
+    *     decodeTextColumnData (int8/float8/timestamptz here);
+    *   - Commit 'C', Type 'Y', Origin 'O', logical Message 'M' and any
+    *     future tag add nothing and are ignored (replication.go:257-301).
+    *
+    * A read past the end of the stream, of a frame or of a message throws
+    * an IllegalArgumentException naming the offset.
+    */
+  def consume(bytes: Array[Byte]): Consumed = {
+    val rows = Seq.newBuilder[PgoDecoded]
+    val replies = Seq.newBuilder[StandbyReply]
+    val keepalives = Seq.newBuilder[(Long, Long)]
     var relations = Map.empty[Long, Rel]
     var currentLsn = 0L
     var txid = 0L
     var commitUs = 0L
-    val top = new R(bytes)
-    while (top.remaining >= 4) {
-      val len = top.u32().toInt
-      val r = new R(top.bytes(len))
-      r.u8().toChar match {
+
+    def emit(rel: Rel, op: String, before: Option[Map[String, Any]],
+        after: Option[Map[String, Any]]): Unit = {
+      def pkOf(m: Map[String, Any]) =
+        m.get("user_id").collect { case l: Long => l }
+      rows += PgoDecoded(
+        lsn_long = currentLsn, lsn_str = Lsn.format(currentLsn).toString, op = op,
+        tx_id = txid, tx_at_us = commitUs,
+        schema_name = rel.ns, table_name = rel.name,
+        pk_before = before.flatMap(pkOf),
+        n_before_cols = before.map(_.valuesIterator.count(_ != null)),
+        pk_after = after.flatMap(pkOf),
+        after_value = after.flatMap(_.get("value").collect { case d: Double => d }),
+        after_ts_us = after.flatMap(_.get("ts").collect { case t: Long => t }))
+    }
+
+    frames(bytes).foreach { f =>
+      f.u8().toChar match {
         case 'k' =>
-          val serverWalEnd = r.u64()
+          val serverWalEnd = f.u64()
+          keepalives += ((serverWalEnd, f.i64() + PgEpochMicros))
           if (serverWalEnd > currentLsn) currentLsn = serverWalEnd
+          if (f.u8() != 0)
+            replies += parseStandbyStatus(standbyStatus(currentLsn, 0L, reply = false))
         case 'w' =>
-          val walStart = r.u64()
-          r.u64(); r.i64() // ServerWALEnd, ServerTime
+          val walStart = f.u64()
+          f.u64(); f.i64() // ServerWALEnd, ServerTime
           if (walStart > currentLsn) currentLsn = walStart
-          decodeLogical(r, relations, currentLsn, txid, commitUs) match {
-            case LBegin(xid, cUs) => txid = xid; commitUs = cUs
-            case LRelation(id, rel) => relations += id -> rel
-            case LRows(rows) => out ++= rows
-            case LNoop => ()
+          f.u8().toChar match {
+            case 'B' =>
+              f.u64() // FinalLSN (AckedLSN bookkeeping; envelope lsn is CurrentLSN)
+              commitUs = f.i64() + PgEpochMicros
+              txid = f.u32()
+            case 'R' =>
+              val id = f.u32()
+              val ns = f.cstr(); val name = f.cstr()
+              f.u8() // replica identity
+              val cols = (0 until f.u16()).map { _ =>
+                val flags = f.u8(); val cname = f.cstr(); val oid = f.u32().toInt
+                f.u32() // type modifier
+                (flags, cname, oid)
+              }
+              relations += id -> Rel(ns, name, cols)
+            case 'I' =>
+              relations.get(f.u32()).foreach { rel =>
+                f.u8() // 'N'
+                emit(rel, "c", None, Some(readTuple(f, rel.cols)))
+              }
+            case 'U' =>
+              relations.get(f.u32()).foreach { rel =>
+                var kind = f.u8()
+                var old: Option[Map[String, Any]] = None
+                if (kind == 'K' || kind == 'O') {
+                  old = Some(readTuple(f, rel.cols))
+                  kind = f.u8()
+                }
+                require(kind == 'N', s"expected new tuple at offset ${f.pos - 1}, got $kind")
+                val newTuple = readTuple(f, rel.cols)
+                old match {
+                  case Some(o) => emit(rel, "u_pk", Some(o), Some(newTuple))
+                  case None =>
+                    emit(rel, "u", Some(readKeyTuple(newTuple, rel.cols)), Some(newTuple))
+                }
+              }
+            case 'D' =>
+              relations.get(f.u32()).foreach { rel =>
+                val kind = f.u8()
+                emit(rel, "d",
+                  if (kind == 'K' || kind == 'O') Some(readTuple(f, rel.cols)) else None,
+                  None)
+              }
+            case 'T' =>
+              val n = f.u32().toInt
+              f.u8() // options
+              (0 until n).foreach { _ =>
+                relations.get(f.u32()).foreach(rel => emit(rel, "t", None, None))
+              }
+            case _ => ()
           }
-        case _ => () // unexpected frame type: log-and-continue in the
-                     // reference (replication.go:199-203) — skip here
+        case _ => ()
       }
     }
-    out.result()
+    Consumed(rows.result(), replies.result(), keepalives.result())
   }
 
   /** Parse one standby-status reply (the server-side read of 'r'). */
@@ -396,141 +506,12 @@ object PgOutput {
     StandbyReply(w, f, a, Lsn.format(w).toString, r.u8() != 0)
   }
 
-  /** The REPLY side of the keepalive protocol: walk a framed stream whose
-    * keepalives request replies; each one makes the client send a
-    * Standby Status Update carrying its current XLog position
-    * (replication.go:230-233 zeroes the send deadline, :87-93 posts
-    * CurrentLSN). Replies are emitted as wire bytes and re-parsed, so the
-    * oracle pins the full 'r' roundtrip: position = last LSN received
-    * before each reply-requested keepalive.
-    */
-  def decodeReplies(bytes: Array[Byte]): Seq[StandbyReply] = {
-    val out = Seq.newBuilder[StandbyReply]
-    var currentLsn = 0L
-    val top = new R(bytes)
-    while (top.remaining >= 4) {
-      val len = top.u32().toInt
-      val r = new R(top.bytes(len))
-      r.u8().toChar match {
-        case 'k' =>
-          val serverWalEnd = r.u64()
-          r.i64() // ServerTime
-          val reply = r.u8() != 0
-          if (serverWalEnd > currentLsn) currentLsn = serverWalEnd
-          if (reply)
-            out += parseStandbyStatus(standbyStatus(currentLsn, 0L, reply = false))
-        case 'w' =>
-          val walStart = r.u64()
-          if (walStart > currentLsn) currentLsn = walStart
-        case _ => ()
-      }
-    }
-    out.result()
-  }
-
-  private sealed trait Logical
-  private case class LBegin(xid: Long, commitUs: Long) extends Logical
-  private case class LRelation(id: Long, rel: Rel) extends Logical
-  private case class LRows(rows: Seq[PgoDecoded]) extends Logical
-  private case object LNoop extends Logical
-
-  private def decodeLogical(r: R, relations: Map[Long, Rel], lsn: Long,
-      txid: Long, commitUs: Long): Logical = {
-
-    def base(rel: Rel, op: String, before: Option[Map[String, Any]],
-        after: Option[Map[String, Any]]): PgoDecoded = {
-      def pkOf(m: Map[String, Any]) =
-        m.get("user_id").collect { case l: Long => l }
-      PgoDecoded(
-        lsn_long = lsn, lsn_str = Lsn.format(lsn).toString, op = op,
-        tx_id = txid, tx_at_us = commitUs,
-        schema_name = rel.ns, table_name = rel.name,
-        pk_before = before.flatMap(pkOf),
-        n_before_cols = before.map(_.valuesIterator.count(_ != null)),
-        pk_after = after.flatMap(pkOf),
-        after_value = after.flatMap(_.get("value").collect { case d: Double => d }),
-        after_ts_us = after.flatMap(_.get("ts").collect { case t: Long => t }))
-    }
-
-    r.u8().toChar match {
-      case 'B' =>
-        r.u64() // FinalLSN (AckedLSN bookkeeping; envelope lsn is CurrentLSN)
-        val cUs = r.i64() + PgEpochMicros
-        val xid = r.u32()
-        LBegin(xid, cUs)
-      case 'C' => LNoop // commit adds nothing the Begin didn't carry
-      case 'Y' => LNoop // Type message: handled as no-op like the reference
-      case 'R' =>
-        val id = r.u32()
-        val ns = r.cstr(); val name = r.cstr()
-        r.u8() // replica identity
-        val nCols = r.u16()
-        val cols = (0 until nCols).map { _ =>
-          val flags = r.u8(); val cname = r.cstr(); val oid = r.u32().toInt
-          r.u32() // type modifier
-          (flags, cname, oid)
-        }
-        LRelation(id, Rel(ns, name, cols))
-      case 'I' =>
-        val relId = r.u32()
-        relations.get(relId) match {
-          case None => LNoop
-          case Some(rel) =>
-            r.u8() // 'N'
-            LRows(Seq(base(rel, "c", None, Some(readTuple(r, rel.cols)))))
-        }
-      case 'U' =>
-        val relId = r.u32()
-        relations.get(relId) match {
-          case None => LNoop
-          case Some(rel) =>
-            var kind = r.u8()
-            var old: Option[Map[String, Any]] = None
-            if (kind == 'K' || kind == 'O') {
-              old = Some(readTuple(r, rel.cols))
-              kind = r.u8()
-            }
-            require(kind == 'N', s"expected new tuple, got $kind")
-            val newTuple = readTuple(r, rel.cols)
-            old match {
-              case Some(o) => LRows(Seq(base(rel, "u_pk", Some(o), Some(newTuple))))
-              case None =>
-                LRows(Seq(base(rel, "u",
-                  Some(readKeyTuple(newTuple, rel.cols)), Some(newTuple))))
-            }
-        }
-      case 'D' =>
-        val relId = r.u32()
-        relations.get(relId) match {
-          case None => LNoop
-          case Some(rel) =>
-            val kind = r.u8()
-            val old =
-              if (kind == 'K' || kind == 'O') Some(readTuple(r, rel.cols)) else None
-            LRows(Seq(base(rel, "d", old, None)))
-        }
-      case 'T' =>
-        val n = r.u32().toInt
-        r.u8() // options
-        val rows = (0 until n).flatMap { _ =>
-          relations.get(r.u32()).map(rel => base(rel, "t", None, None))
-        }
-        LRows(rows)
-      case _ => LNoop // Origin ('O'), logical Message ('M'), and any
-        // future tag fall through the reference's type switch with no
-        // case — ignored, never fatal (replication.go:257-301)
-    }
-  }
-
   // ------------------------------------------------------------------
 
-  /** Plant + decode: the flat envelope (minus op 'r', which is a snapshot
-    * op pgoutput never carries) segmented into contiguous LSN streams,
-    * each generated and decoded independently after one shuffle.
-    */
   /** Shared plant-side plumbing: the flat envelope (minus snapshot op
-    * 'r') segmented into contiguous LSN streams, each handed to `f` as a
-    * sorted row sequence after ONE shuffle.
+    * 'r', which pgoutput never carries) segmented into contiguous LSN
+    * streams, each handed to `f` as a sorted row sequence after ONE
+    * shuffle.
     */
   private def segmented[T: org.apache.spark.sql.Encoder](flat: DataFrame)(
       f: Seq[PgoRow] => Iterator[T])(implicit s: SparkSession): Dataset[T] = {
@@ -543,36 +524,22 @@ object PgOutput {
       .flatMapGroups((_, it) => f(it.toSeq.sortBy(_.lsn_long)))
   }
 
-  def roundtrip(flat: DataFrame)(implicit s: SparkSession): Dataset[PgoDecoded] = {
-    import s.implicits._
-    segmented(flat)(rows => decodeStream(encodeStream(rows)).iterator)
-  }
-
-  /** Plant + decode the multi-table stream (one shuffle, per-segment
-    * self-contained streams with interleaved relation registration).
+  /** Plant + decode, each segment's stream routing rows to `tableOf`
+    * (c35/c37 shard by user, c38 plants leaf-partition relation names).
     */
-  def multiRoundtrip(flat: DataFrame)(implicit s: SparkSession): Dataset[PgoDecoded] = {
-    import s.implicits._
-    segmented(flat)(rows => decodeStream(encodeMultiStream(rows)).iterator)
-  }
-
-  /** multiRoundtrip with a caller-chosen user→table mapping (c38 plants
-    * leaf-partition relation names through this).
-    */
-  def multiRoundtripAs(flat: DataFrame, tableOf: Long => String)(
+  def roundtrip(flat: DataFrame, tableOf: Long => String = _ => "events")(
       implicit s: SparkSession): Dataset[PgoDecoded] = {
     import s.implicits._
-    segmented(flat)(rows => decodeStream(encodeMultiStream(rows, tableOf)).iterator)
+    segmented(flat)(rows => consume(encode(rows, tableOf)).rows.iterator)
   }
 
   /** Plant + reply: the same segmented streams with reply-requesting
-    * keepalives, run through the reply loop — one shuffle, replies
-    * generated and parsed per segment.
+    * keepalives, run through the consumer loop for its replies.
     */
   def standbyRoundtrip(flat: DataFrame)(implicit s: SparkSession): Dataset[StandbyReply] = {
     import s.implicits._
     segmented(flat)(rows =>
-      decodeReplies(encodeStream(rows, keepaliveReply = true)).iterator)
+      consume(encode(rows, keepaliveReply = true)).replies.iterator)
   }
 
   /** One replication-lag observation — the three gauges the reference
@@ -583,40 +550,9 @@ object PgOutput {
   case class LagGauge(wal_lsn: Long, wal_lsn_str: String, behind_lsn: Long,
     behind_time_ms: Long)
 
-  /** Walk a framed stream and emit the gauge triple at every keepalive,
-    * exactly as the keepalive arm of the consumer loop feeds metrics
-    * (replication.go:219-237): SetWalLSN(ServerWALEnd),
-    * SetBehindLSN(head, ServerWALEnd) with the negative diff clamped,
-    * SetBehindTime(now − ServerTime) in millis. `headLsn`/`headTimeUs`
-    * stand in for GetCurrLSN() / time.Now() — the server's WAL head and
-    * the observation clock, which in the planted world are known exactly.
-    */
-  def lagObservations(bytes: Array[Byte], headLsn: Long,
-      headTimeUs: Long): Seq[LagGauge] = {
-    val out = Seq.newBuilder[LagGauge]
-    val top = new R(bytes)
-    while (top.remaining >= 4) {
-      val len = top.u32().toInt
-      val r = new R(top.bytes(len))
-      r.u8().toChar match {
-        case 'k' =>
-          val serverWalEnd = r.u64()
-          val serverTimeUs = r.i64() + PgEpochMicros
-          out += LagGauge(
-            wal_lsn = serverWalEnd,
-            wal_lsn_str = Lsn.format(serverWalEnd).toString,
-            behind_lsn = math.max(0L, headLsn - serverWalEnd),
-            behind_time_ms = math.max(0L, (headTimeUs - serverTimeUs) / 1000))
-        case _ => () // XLogData advances position but only keepalives
-                     // drive the lag gauges in the reference loop
-      }
-    }
-    out.result()
-  }
-
   /** Plant + observe: segmented streams (keepalives every 97 messages,
-    * ServerTime = the row's commit time) walked for lag gauges against
-    * the global WAL head — one shuffle, gauges computed per segment.
+    * ServerTime = the row's commit time) run through the consumer loop,
+    * its keepalives gauged against the global WAL head.
     */
   def replicationLag(flat: DataFrame)(implicit s: SparkSession): Dataset[LagGauge] = {
     import s.implicits._
@@ -624,6 +560,6 @@ object PgOutput {
       .agg(max("lsn_long"), unix_micros(max("tx_at"))).head()
     val (headLsn, headTimeUs) = (head.getLong(0), head.getLong(1))
     segmented(flat)(rows =>
-      lagObservations(encodeStream(rows), headLsn, headTimeUs).iterator)
+      consume(encode(rows)).lag(headLsn, headTimeUs).iterator)
   }
 }

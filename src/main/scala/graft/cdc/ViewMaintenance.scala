@@ -103,9 +103,7 @@ object ViewMaintenance {
   /** The (lo, hi] LSN ranges of `nChunks` ascending poll batches. */
   private def lsnRanges(flat: DataFrame, nChunks: Int): Seq[(Long, Long)] = {
     val b = flat.agg(min("lsn_long"), max("lsn_long")).head()
-    val (mn, mx) = (b.getLong(0), b.getLong(1))
-    val step = math.max(1L, (mx - mn + nChunks) / nChunks)
-    (mn - 1 until mx by step).map(lo => (lo, math.min(lo + step, mx)))
+    Polls.ranges(b.getLong(0) - 1, b.getLong(1), nChunks)
   }
 
   /** Drive the view over the WAL in `nChunks` poll batches. */

@@ -626,7 +626,7 @@ class CdcSpec extends AnyFunSuite {
       tx(11L, insertMsg(relB, Seq(TextCell("2"), NullCell, TextCell(formatTsTz(0L))))) ++
       tx(12L, deleteMsg(relA, 'K', Seq(TextCell("1"), NullCell, NullCell))) ++
       tx(13L, truncateMsg(Seq(relB, relA)))): _*)
-    val rows = decodeStream(stream)
+    val rows = consume(stream).rows
     // each change resolves through the relations map to ITS OWN table
     assert(rows.map(r => (r.lsn_long, r.op, r.schema_name, r.table_name)) == Seq(
       (10L, "c", "public", "events"),
@@ -669,7 +669,7 @@ class CdcSpec extends AnyFunSuite {
       xlog(5L, beginMsg(5L, PgEpochMicros + 42L, 77L)),
       xlog(5L, truncateMsg(Seq(RelId))),
       xlog(5L, commitMsg(5L, PgEpochMicros + 42L)))
-    val decoded = decodeStream(stream)
+    val decoded = consume(stream).rows
     assert(decoded.length == 1)
     assert(decoded.head.lsn_long == 999L && decoded.head.op == "t")
     // pg-epoch commit time converts back to unix micros; xid is the u32
@@ -679,7 +679,7 @@ class CdcSpec extends AnyFunSuite {
       xlog(5L, beginMsg(5L, PgEpochMicros, 1L)),
       xlog(5L, insertMsg(RelId, Seq(TextCell("1"), NullCell, NullCell))),
       xlog(5L, commitMsg(5L, PgEpochMicros)))
-    assert(decodeStream(orphan).isEmpty)
+    assert(consume(orphan).rows.isEmpty)
     // unknown pgoutput tags (Origin 'O', logical Message 'M') and unknown
     // frame types fall through the reference's type switches — skipped,
     // never fatal; surrounding messages still decode
@@ -691,7 +691,7 @@ class CdcSpec extends AnyFunSuite {
       xlog(10L, insertMsg(RelId, Seq(TextCell("3"), NullCell,
         TextCell(formatTsTz(0L))))),
       xlog(10L, commitMsg(10L, PgEpochMicros + 1L)))
-    val survived = decodeStream(withUnknowns)
+    val survived = consume(withUnknowns).rows
     assert(survived.map(r => (r.lsn_long, r.op, r.pk_after)) ==
       Seq((10L, "c", Some(3L))))
     // float8/timestamptz text decode is lossless by OID
@@ -703,17 +703,17 @@ class CdcSpec extends AnyFunSuite {
     import PgOutput._
     val rel = relationMsg(RelId, "public", "events", eventsCols)
     // no reply bit → no status update, regardless of traffic
-    assert(decodeReplies(framed(
-      xlog(10L, rel), keepalive(999L, reply = false))).isEmpty)
+    assert(consume(framed(
+      xlog(10L, rel), keepalive(999L, reply = false))).replies.isEmpty)
     // reply bit → one status update; position is the MAX of data WALStart
     // and keepalive ServerWALEnd up to that point, and flush/apply default
     // to the write position (pglogrepl semantics the reference relies on)
-    val replies = decodeReplies(framed(
+    val replies = consume(framed(
       xlog(10L, rel),
       xlog(40L, beginMsg(40L, PgEpochMicros, 40L)),
       keepalive(30L, reply = true), // stale ServerWALEnd must not regress
       xlog(55L, beginMsg(55L, PgEpochMicros, 55L)),
-      keepalive(80L, reply = true)))
+      keepalive(80L, reply = true))).replies
     assert(replies.map(r => (r.wal_write, r.wal_flush, r.wal_apply)) ==
       Seq((40L, 40L, 40L), (80L, 80L, 80L)))
     assert(replies.forall(r => !r.reply_requested))
@@ -738,7 +738,7 @@ class CdcSpec extends AnyFunSuite {
       keepalive(600L, reply = false, serverTimeUs = t1),
       // a keepalive AHEAD of the recorded head clamps behind to 0
       keepalive(1200L, reply = false, serverTimeUs = nowUs))
-    val g = lagObservations(stream, headLsn, nowUs)
+    val g = consume(stream).lag(headLsn, nowUs)
     assert(g.map(x => (x.wal_lsn, x.behind_lsn, x.behind_time_ms)) == Seq(
       (100L, 900L, (nowUs - t0) / 1000),
       (600L, 400L, 2500L),
@@ -746,7 +746,7 @@ class CdcSpec extends AnyFunSuite {
     assert(g.head.wal_lsn_str == graft.functions.Lsn.format(100L).toString)
     // XLogData frames advance position but never emit gauges (reference:
     // only the keepalive arm calls SetBehind*)
-    assert(lagObservations(framed(xlog(999L, rel)), headLsn, nowUs).isEmpty)
+    assert(consume(framed(xlog(999L, rel))).lag(headLsn, nowUs).isEmpty)
     // keepalive ServerTime roundtrips through the pg-epoch wire encoding
     // and the distributed plant produces one gauge row per 97-row cadence
     val df = CdcQueries.queries("x14_replication_lag")(spark, sf)
@@ -883,6 +883,12 @@ class CdcSpec extends AnyFunSuite {
     val want = CdcQueries.c04_apply_latest(spark, sf).collect().map(_.toString).toSeq
     assert(got == want, s"streamed replay diverged from direct apply " +
       s"(got ${got.length} rows, want ${want.length})")
+    // committing a state version deletes every older one: the replica's
+    // own version is the only one left
+    val durable = java.nio.file.Paths.get(new java.net.URI(df.inputFiles.head))
+      .getParent.getParent
+    val versions = durable.toFile.list().filter(_.startsWith("state_v")).toSeq
+    assert(versions.length == 1, s"state versions left: $versions")
   }
 
   test("c39 jdbc evolution: ALTER mid-stream, mixed writers resolve to latest") {
@@ -1024,7 +1030,7 @@ class CdcSpec extends AnyFunSuite {
       PgoRow(11L, "c", PgEpochMicros + 2, 1L, None, Some(1L), Some(2.0)),
       PgoRow(12L, "t", PgEpochMicros + 3, 0L, None, None, None),
       PgoRow(13L, "c", PgEpochMicros + 4, 4L, None, Some(4L), Some(3.0)))
-    val dec = decodeStream(encodeMultiStream(rows))
+    val dec = consume(encode(rows, uid => s"t${uid % 4}")).rows
     assert(dec.map(r => (r.lsn_long, r.op, r.table_name)) == Seq(
       (10L, "c", "t0"), (11L, "c", "t1"), (12L, "t", "t0"), (13L, "c", "t0")))
     // the truncate message carries ONLY t0's relation id
@@ -1074,6 +1080,64 @@ class CdcSpec extends AnyFunSuite {
     bySetting.values.foreach { g =>
       assert(g.map(r => (r.getLong(2), r.getDouble(3))).toSeq == want)
     }
+  }
+
+  /** 120 planted rows cycling u, u_pk, d, t, c (more than 97, so the
+    * stream carries a keepalive), some with a null value.
+    */
+  private val goldenRows: Seq[PgoRow] = (1 to 120).map { i =>
+    val op = Seq("c", "u", "u_pk", "d", "t")(i % 5)
+    val pk = (i * 7 % 31).toLong
+    PgoRow(lsn_long = 1000L + 3L * i, op = op,
+      tx_at_us = 1705312000000000L + 1000003L * i, user_id = pk,
+      pk_before = if (op == "u_pk" || op == "d") Some(pk) else None,
+      pk_after = op match {
+        case "c" | "u" => Some(pk)
+        case "u_pk" => Some(pk + 100)
+        case _ => None
+      },
+      after_value =
+        if (op == "d" || op == "t" || i % 7 == 0) None else Some(i * 1.25 - 40))
+  }
+
+  test("pgoutput producer bytes are pinned by SHA-256") {
+    import PgOutput._
+    def sha(b: Array[Byte]): String = java.security.MessageDigest
+      .getInstance("SHA-256").digest(b).map("%02x".format(_)).mkString
+    // single table without and with reply-requesting keepalives, then
+    // three tables registered lazily
+    val got = Seq(
+      sha(encode(goldenRows)),
+      sha(encode(goldenRows, keepaliveReply = true)),
+      sha(encode(goldenRows, uid => s"t${uid % 3}")))
+    assert(got == Seq(
+      "9222babab7f50570ba96bec69c2a53e33cc7200af30d8e38ce6dbedfff3f4dc8",
+      "95bed2250e5a80c431c81e60c0d71a9fcc87e50e633c8537b5e755ca4dad49ac",
+      "0b1703b8906077a9343159d7fa6d934e4e75e12b1a598f2f629eeb0396c004e0"))
+  }
+
+  test("malformed pgoutput streams fail loudly, naming the offset") {
+    import PgOutput._
+    val rel = framed(xlog(10L, relationMsg(RelId, "public", "events", eventsCols)))
+    def failsAt(stream: Array[Byte], offset: Int): Unit = {
+      val e = intercept[IllegalArgumentException](consume(stream))
+      assert(e.getMessage.contains(s"offset $offset"), e.getMessage)
+    }
+    // 1-3 bytes after the last whole frame: a cut length prefix
+    (1 to 3).foreach(k => failsAt(rel ++ new Array[Byte](k), rel.length))
+    // a 'w' frame (payload at offset 4) cut inside its 24-byte header:
+    // WALStart at offset 5 has 4 of its 8 bytes
+    failsAt(framed(Array[Byte]('w', 0, 0, 0, 0)), 5)
+    // a Begin (at offset 29, after the XLogData header) cut one byte
+    // into its commit time, which starts at offset 38
+    failsAt(framed(xlog(5L, beginMsg(5L, PgEpochMicros, 1L).take(10))), 38)
+    // a Relation whose namespace (at offset 34) has no NUL
+    failsAt(framed(xlog(5L, new W().u8('R').u32(RelId.toLong)
+      .bytes("public".getBytes("UTF-8")).result())), 34)
+    // four cells for the relation's three columns (cell count at 35 bytes
+    // into the insert's frame)
+    failsAt(rel ++ framed(xlog(11L, insertMsg(RelId,
+      Seq(TextCell("1"), NullCell, NullCell, NullCell)))), rel.length + 35)
   }
 
   test("pgoutput reader fails loudly on a truncated frame") {

@@ -104,7 +104,7 @@ object CodecPropertySpec extends Properties("codecs") {
 
   // -- whole-stream pgoutput codec --------------------------------------
   // Random op sequences (ops, nullable values, pk moves, truncates)
-  // through encodeStream∘decodeStream, compared against the planted-row
+  // through consume∘encode, compared against the planted-row
   // MODEL of what the consumer loop must emit — the property-sweep twin
   // of c25's testdata oracle.
 
@@ -133,7 +133,7 @@ object CodecPropertySpec extends Properties("codecs") {
       after_value = if (op == "d" || op == "t") None else v)
   }
 
-  /** The consumer-loop model: what decodeStream must emit for one planted
+  /** The consumer-loop model: what consume must emit for one planted
     * row (c25's oracle semantics — plain u derives its before image from
     * the NEW tuple's key, u_pk/d carry key-only old tuples, t has no
     * images; every after image carries the commit ts column).
@@ -155,9 +155,9 @@ object CodecPropertySpec extends Properties("codecs") {
       after_ts_us = if (hasAfter) Some(r.tx_at_us) else None)
   }
 
-  property("encodeStream∘decodeStream = planted-row model over random ops") =
+  property("consume∘encode = planted-row model over random ops") =
     Prop.forAll(genRows) { rows =>
-      PgOutput.decodeStream(PgOutput.encodeStream(rows)) == rows.map(model)
+      PgOutput.consume(PgOutput.encode(rows)).rows == rows.map(model)
     }
 
   property("keepalive placement is invariant for rows, exact for gauges") =
@@ -170,27 +170,24 @@ object CodecPropertySpec extends Properties("codecs") {
         // decoded rows (an AHEAD one legitimately advances CurrentLSN —
         // pinned separately in CdcSpec's monotonicity test)
         val rel = relationMsg(RelId, "public", "events", eventsCols)
-        val plain = encodeStream(rows)
+        val plain = encode(rows)
         val dense = {
           val out = new java.io.ByteArrayOutputStream()
-          val top = new R(plain)
-          while (top.remaining >= 4) {
-            val len = top.u32().toInt
-            val msg = top.bytes(len)
-            out.write(framed(msg))
+          frames(plain).foreach { f =>
+            out.write(framed(f.bytes(f.remaining)))
             out.write(framed(keepalive(0L, reply = false,
               serverTimeUs = rows.head.tx_at_us)))
           }
           out.toByteArray
         }
-        val sameRows = decodeStream(dense) == decodeStream(plain)
+        val sameRows = consume(dense).rows == consume(plain).rows
         // gauges: one observation per planted keepalive, clamped at zero
         val head = rows.last.lsn_long + headSlack
         val now = rows.head.tx_at_us + clockSkewUs
-        val gauges = lagObservations(framed(
+        val gauges = consume(framed(
           rel,
           keepalive(head - 1, reply = false, serverTimeUs = rows.head.tx_at_us),
-          keepalive(head + 7, reply = false, serverTimeUs = now)), head, now)
+          keepalive(head + 7, reply = false, serverTimeUs = now))).lag(head, now)
         val gaugesOk = gauges == Seq(
           LagGauge(head - 1, Lsn.format(head - 1).toString, 1L, clockSkewUs / 1000),
           LagGauge(head + 7, Lsn.format(head + 7).toString, 0L, 0L))
@@ -203,12 +200,12 @@ object CodecPropertySpec extends Properties("codecs") {
   // order the rows happen to arrive, truncates carrying only their own
   // relation — the property-sweep twin of c35's testdata oracle.
 
-  property("encodeMultiStream∘decodeStream = model over random table sets") =
+  property("consume∘encode = model over random table sets") =
     Prop.forAll(genRows, Gen.chooseNum(1, 6)) { (rows, k) =>
       // rows route by user_id mod k — registration order is then driven
       // by the random key sequence, not a fixed table order
       val tableOf: Long => String = uid => s"tb${(uid % k).toInt}"
-      val decoded = PgOutput.decodeStream(PgOutput.encodeMultiStream(rows, tableOf))
+      val decoded = PgOutput.consume(PgOutput.encode(rows, tableOf)).rows
       decoded == rows.map(r => model(r).copy(table_name = tableOf(r.user_id)))
     }
 
@@ -231,7 +228,7 @@ object CodecPropertySpec extends Properties("codecs") {
   property("interleaved multi-table apply ≡ per-table substream apply") =
     Prop.forAll(genRows, Gen.chooseNum(1, 6)) { (rows, k) =>
       val tableOf: Long => String = uid => s"tb${(uid % k).toInt}"
-      val decoded = PgOutput.decodeStream(PgOutput.encodeMultiStream(rows, tableOf))
+      val decoded = PgOutput.consume(PgOutput.encode(rows, tableOf)).rows
       // a truncate (or any op) on one table must be invisible to every
       // other: folding the interleaved stream equals folding each
       // table's isolated substream
@@ -244,10 +241,10 @@ object CodecPropertySpec extends Properties("codecs") {
 
   property("truncating a stream yields a decoded prefix or fails loudly") =
     Prop.forAll(genRows, Gen.chooseNum(0.0, 1.0)) { (rows, frac) =>
-      val bytes = PgOutput.encodeStream(rows)
+      val bytes = PgOutput.encode(rows)
       val cut = (bytes.length * frac).toInt
-      val full = PgOutput.decodeStream(bytes)
-      scala.util.Try(PgOutput.decodeStream(bytes.take(cut))) match {
+      val full = PgOutput.consume(bytes).rows
+      scala.util.Try(PgOutput.consume(bytes.take(cut)).rows) match {
         case scala.util.Success(prefix) => full.startsWith(prefix)
         case scala.util.Failure(_: IllegalArgumentException) => true // loud
         case scala.util.Failure(_) => false
