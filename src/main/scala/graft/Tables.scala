@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet loaders over the driver-generated testdata layout (TESTDATA.md):
   * one parquet file per table under an sf dir. All operators take the sf dir
@@ -13,12 +15,39 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  // path → ((leaf files, the nanos setting), the schema inferred under them)
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[
+    String, ((Seq[(String, Long, Long)], String), StructType)]()
+
+  /** Every leaf file under `path` (or `path` itself) as (name, length, mtime). */
+  private def leaves(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
+    val p = new Path(path)
+    val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSeq.sorted
+  }
+
+  /** Inferring a parquet schema runs a Spark job, so each path keeps the
+    * schema last inferred for it and reads with that schema while its leaf
+    * files and the nanos setting are unchanged.
+    */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     // events.parquet stores ts as TIMESTAMP(NANOS), which Spark 4 refuses
     // by default; read nanos as long and convert below.
-    try spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    try spark.conf.set(NanosAsLong, "true")
     catch { case _: Throwable => () }
-    spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val key = try (leaves(spark, path), spark.conf.get(NanosAsLong, "false"))
+      catch { case _: java.io.FileNotFoundException => return spark.read.parquet(path) }
+    val known = schemas.get(path)
+    val schema = if (known != null && known._1 == key) known._2 else {
+      val inferred = spark.read.parquet(path).schema
+      schemas.put(path, key -> inferred)
+      inferred
+    }
+    spark.read.schema(schema).parquet(path)
   }
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")

@@ -13,26 +13,49 @@ import graft.Tables
   * group-level deltas, and a truncate — which invalidates everything by
   * definition — triggers the one legitimate rebuild.
   *
-  * Each batch is read once (persisted for the advance) and folded once
-  * by `Apply.fold`; the state is read only through broadcast joins — for
-  * the touched keys' old values, then for its rewrite (left-anti + union
-  * + localCheckpoint) — so it is never shuffled, but it is still scanned
-  * whole: O(|state|) rows read per batch (ROADMAP open item 1). Sums are
-  * maintained in integer CENTS (per-row cents derived once from the same
+  * A delta advance runs at most five Spark jobs and one shuffle: one job
+  * fills the batch's cache and finds its truncates; `Apply.fold` folds
+  * the batch's events once (the one shuffle, of the batch's half-events
+  * only) and the touched keys' new rows are collected; one pk-IN filter
+  * reads their old rows from the checkpointed state; and one job
+  * checkpoints the rewritten state (old rows of the touched keys out,
+  * their live new rows in). The state is never shuffled and never
+  * joined, though the two filters still scan it whole. The driver holds
+  * at most one delta batch's touched keys, and the view, at most 19
+  * groups (`pk % 10`), as a local relation. Sums are maintained in
+  * integer CENTS (per-row cents derived once, in Spark, from the same
   * double both engines see), so delta accumulation is order-independent
   * and exact — a floating view maintained by ± deltas would drift from
-  * the recompute. The view, at most 19 groups (`pk % 10`), is a local
-  * relation.
+  * the recompute — and each group counts its non-null values, so a group
+  * whose values are all null reports a null sum like SQL's `SUM`.
   */
 object ViewMaintenance {
   private type Q = (SparkSession, String) => DataFrame
 
   private def cents(v: Column): Column = round(v * 100).cast("long")
 
+  private def grp: Column = (col("pk") % 10).as("grp")
+
+  /** The view's groups plus `n_vals`, the non-null values each sums. */
+  private def groupsOf(live: DataFrame): DataFrame =
+    live.groupBy(grp).agg(count(lit(1)).as("n_rows"),
+      sum(cents(col("last_value"))).as("sum_cents"), count(col("last_value")).as("n_vals"))
+
   /** The view definition over live replica rows (pk, last_value). */
-  def viewOf(live: DataFrame): DataFrame =
-    live.groupBy((col("pk") % 10).as("grp"))
-      .agg(count(lit(1)).as("n_rows"), sum(cents(col("last_value"))).as("sum_cents"))
+  def viewOf(live: DataFrame): DataFrame = groupsOf(live).drop("n_vals")
+
+  /** One group's row count, non-null value count and cents sum (a null
+    * value adds 0 to `cents`).
+    */
+  private final case class Agg(rows: Long, vals: Long, cents: Long) {
+    def +(o: Agg): Agg = Agg(rows + o.rows, vals + o.vals, cents + o.cents)
+    def negate: Agg = Agg(-rows, -vals, -cents)
+  }
+  private object Agg {
+    /** one live row of `cents` (null: a null value) */
+    def of(cents: java.lang.Long): Agg =
+      if (cents == null) Agg(1, 0, 0) else Agg(1, 1, cents)
+  }
 
   /** The engine: carries (state, view) across batches — what a
     * production IVM job persists between runs. Shared by c36 (batch poll
@@ -43,7 +66,12 @@ object ViewMaintenance {
     */
   final class IncrementalView(onBatch: (Boolean, Long) => Unit = (_, _) => ()) {
     private[cdc] var state: DataFrame = null
-    private[cdc] var view: DataFrame = null
+    private var groups: Map[Long, Agg] = null
+    private var view: DataFrame = null
+
+    // coalesced, or the delta union would add a partition every batch
+    private def checkpointed(df: DataFrame): DataFrame =
+      df.coalesce(df.sparkSession.sparkContext.defaultParallelism).localCheckpoint()
 
     def advance(chunk: DataFrame): Unit = {
       val batch = chunk.persist()
@@ -54,39 +82,42 @@ object ViewMaintenance {
         val truncates = batch.filter(col("op") === "t").select("lsn_long").as[Long].collect()
         // bootstrap, or truncate: the view is invalidated by definition, and
         // the cut drops every state row (their ords precede the batch)
-        val invalidated = view == null || truncates.nonEmpty
-        if (invalidated) {
-          state = Seq.empty[(Long, Double)].toDF("pk", "last_value")
-          view = Seq.empty[(Long, Long, java.lang.Long)].toDF("grp", "n_rows", "sum_cents")
-        }
+        val invalidated = groups == null || truncates.nonEmpty
         // every ord after the last truncate follows every state ord, so
-        // these events alone fold to a touched key's new row; the state adds
-        // old values by broadcast. A lone `op` filter lets the optimizer
-        // plan a truncate-free batch's fold without a cut
+        // these events alone fold to a touched key's new row. A lone `op`
+        // filter lets the optimizer plan a truncate-free batch's fold
+        // without a cut
         val events = truncates.maxOption.fold(batch)(t => batch.filter(col("lsn_long") > t))
           .filter(col("op") =!= "t")
-        val old = state
-          .join(broadcast(Apply.halfEvents(events).select("pk")), Seq("pk"), "left_semi")
-          .select(col("pk"), lit(1L).as("old_n"), cents(col("last_value")).as("old_cents"))
-        val changes = Apply.fold(events).join(broadcast(old), Seq("pk"), "left").persist()
-        try {
-          val isLive = col("last_op") =!= "d"
-          val deltas = changes.select((col("pk") % 10).as("grp"),
-            (when(isLive, 1L).otherwise(0L) - coalesce(col("old_n"), lit(0L))).as("n_rows"),
-            (coalesce(when(isLive, cents(col("last_value"))), lit(0L)) -
-              coalesce(col("old_cents"), lit(0L))).as("sum_cents"),
-            lit(1L).as("n_keys"))
-          val groups = view.withColumn("n_keys", lit(0L)).union(deltas).groupBy("grp")
-            .agg(sum("n_rows"), sum("sum_cents"), sum("n_keys")).collect()
-          view = groups.filter(_.getLong(1) > 0).sortBy(_.getLong(0)).toSeq
-            .map(r => (r.getLong(0), r.getLong(1), r.getAs[java.lang.Long](2)))
-            .toDF("grp", "n_rows", "sum_cents")
-          // coalesced, or the union would add partitions every batch
-          state = state.join(broadcast(changes.select("pk")), Seq("pk"), "left_anti")
-            .union(changes.filter(isLive).select("pk", "last_value"))
-            .coalesce(s.sparkContext.defaultParallelism).localCheckpoint()
-          onBatch(invalidated, if (invalidated) -1L else groups.map(_.getLong(3)).sum)
-        } finally changes.unpersist()
+        val folded = Apply.fold(events).select(col("pk"), grp,
+          (col("last_op") =!= "d").as("live"), col("last_value"),
+          cents(col("last_value")).as("cents"))
+        val touchedKeys = if (invalidated) {
+          state = checkpointed(folded.filter("live").select("pk", "last_value"))
+          groups = groupsOf(state).collect().map(r => r.getLong(0) ->
+            Agg(r.getLong(1), r.getLong(3), if (r.isNullAt(2)) 0L else r.getLong(2))).toMap
+          -1L
+        } else {
+          // the touched keys' new rows: bounded by the batch, never the state
+          val rows = folded.collect()
+          if (rows.nonEmpty) {
+            val inTouched = col("pk").isin(rows.map(_.getLong(0)).toIndexedSeq: _*)
+            val old = state.filter(inTouched).select(grp, cents(col("last_value"))).collect()
+            val fresh = rows.filter(_.getBoolean(2))
+            val deltas = fresh.map(r => r.getLong(1) -> Agg.of(r.getAs[java.lang.Long](4))) ++
+              old.map(r => r.getLong(0) -> Agg.of(r.getAs[java.lang.Long](1)).negate)
+            groups = deltas.foldLeft(groups) { case (m, (g, d)) =>
+              m.updated(g, m.getOrElse(g, Agg(0, 0, 0)) + d)
+            }
+            state = checkpointed(state.filter(!inTouched).union(fresh.toSeq
+              .map(r => (r.getLong(0), r.getAs[java.lang.Double](3))).toDF("pk", "last_value")))
+          }
+          rows.length.toLong
+        }
+        view = groups.toSeq.filter(_._2.rows > 0).sortBy(_._1)
+          .map { case (g, a) => (g, a.rows, Option.when(a.vals > 0)(a.cents)) }
+          .toDF("grp", "n_rows", "sum_cents")
+        onBatch(invalidated, touchedKeys)
       } finally batch.unpersist()
     }
 

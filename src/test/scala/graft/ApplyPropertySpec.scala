@@ -26,16 +26,20 @@ object ApplyPropertySpec extends Properties("spark-apply") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(12)
 
-  // dense key space (collisions on nearly every stream) and 2-dp-exact
-  // values (n/100.0 survives Spark's round(x, 2) unchanged)
+  // dense key space (collisions on nearly every stream), 2-dp-exact
+  // values (n/100.0 survives Spark's round(x, 2) unchanged) and null
+  // values on upserts
+  private val genValue: Gen[Option[Double]] =
+    Gen.option(Gen.choose(-99999L, 99999L).map(_ / 100.0))
+
   private val genRows: Gen[Seq[FlatRow]] = for {
     n <- Gen.chooseNum(1, 60)
     specs <- Gen.listOfN(n, for {
       op <- Gen.frequency((5, "c"), (4, "u"), (3, "u_pk"), (3, "d"), (1, "t"))
       pk <- Gen.choose(0L, 12L)
       pkNew <- Gen.choose(0L, 12L)
-      cents <- Gen.choose(-99999L, 99999L)
-    } yield (op, pk, pkNew, cents / 100.0))
+      v <- genValue
+    } yield (op, pk, pkNew, v))
   } yield specs.zipWithIndex.map { case ((op, pk, pkNew, v), i) =>
     FlatRow((i + 1).toLong * 3, op,
       pk_before = if (op == "u_pk" || op == "d") Some(pk) else None,
@@ -44,7 +48,7 @@ object ApplyPropertySpec extends Properties("spark-apply") {
         case "u_pk" => Some(pkNew)
         case _ => None
       },
-      after_value = if (op == "d" || op == "t") None else Some(v))
+      after_value = if (op == "d" || op == "t") None else v)
   }
 
   private def toDf(rows: Seq[FlatRow]): DataFrame = rows.toDF()
@@ -63,19 +67,24 @@ object ApplyPropertySpec extends Properties("spark-apply") {
         case _ => st
       }
     }
-  private def fold(rows: Seq[FlatRow]): Map[Long, Double] =
-    fold(rows, _.after_value.get)
+  private def fold(rows: Seq[FlatRow]): Map[Long, Option[Double]] =
+    fold(rows, _.after_value)
 
-  private def replica(df: DataFrame): Map[Long, Double] =
-    df.collect().map(r => r.getAs[Long]("pk") -> r.getAs[Double]("value")).toMap
+  private def double(r: org.apache.spark.sql.Row, i: Int): Option[Double] =
+    Option(r.getAs[java.lang.Double](i)).map(_.doubleValue)
+
+  private def replica(df: DataFrame): Map[Long, Option[Double]] =
+    df.collect().map(r => r.getAs[Long]("pk") -> double(r, r.fieldIndex("value"))).toMap
 
   /** Live rows of an `Apply.fold` result, rounded like the lanes do. */
-  private def live(state: DataFrame): Map[Long, Double] =
+  private def live(state: DataFrame): Map[Long, Option[Double]] =
     replica(state.filter(col("last_op") =!= "d")
       .select(col("pk"), round(col("last_value"), 2).as("value")))
 
-  private def rounded(m: Map[Long, Double]): Map[Long, Double] =
-    m.map { case (k, v) => k -> (math.rint(v * 100) / 100) }
+  private def round2(v: Option[Double]): Option[Double] = v.map(x => math.rint(x * 100) / 100)
+
+  private def rounded(m: Map[Long, Option[Double]]): Map[Long, Option[Double]] =
+    m.map { case (k, v) => k -> round2(v) }
 
   // cut points splitting a stream into consecutive batches
   private def batches(rows: Seq[FlatRow], cutPcts: Seq[Int]): Seq[Seq[FlatRow]] = {
@@ -113,7 +122,7 @@ object ApplyPropertySpec extends Properties("spark-apply") {
       val got = Apply.fold(df, keys = Seq("tbl"))
         .filter(col("last_op") =!= "d")
         .select(col("tbl"), col("pk"), round(col("last_value"), 2))
-        .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2)).toMap
+        .collect().map(r => (r.getString(0), r.getLong(1)) -> double(r, 2)).toMap
       val want = tagged.groupBy(_._2).toSeq.flatMap { case (t, rs) =>
         rounded(fold(rs.map(_._1))).map { case (pk, v) => (t, pk) -> v }
       }.toMap
@@ -122,15 +131,15 @@ object ApplyPropertySpec extends Properties("spark-apply") {
 
   property("a carried column follows the winning half-event") =
     Prop.forAll(genRows) { rows =>
-      // src names the event that wrote it, so every key's src pins
+      // src names the upsert that wrote it, so every key's src pins
       // exactly which half-event the fold kept
       val df = toDf(rows).withColumn("src",
-        when(col("after_value").isNotNull, concat(lit("e"), col("lsn_long"))))
+        when(col("op").isin("c", "u", "u_pk"), concat(lit("e"), col("lsn_long"))))
       val got = Apply.fold(df, carry = Seq("src"))
         .filter(col("last_op") =!= "d")
         .select(col("pk"), round(col("last_value"), 2), col("last_src"))
-        .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getString(2))).toMap
-      got == fold(rows, r => (math.rint(r.after_value.get * 100) / 100, s"e${r.lsn_long}"))
+        .collect().map(r => r.getLong(0) -> (double(r, 1), r.getString(2))).toMap
+      got == fold(rows, r => (round2(r.after_value), s"e${r.lsn_long}"))
     }
 
   property("batch-by-batch folds, each on the previous state ≡ one fold") =
@@ -147,49 +156,84 @@ object ApplyPropertySpec extends Properties("spark-apply") {
       }
     }
 
-  /** Advances an IncrementalView over `parts` in order: its view must
-    * equal `viewOf` the full replay, and `onBatch` must report a rebuild
-    * for exactly the bootstrap batch and the batches holding a truncate,
-    * and the distinct half-event keys of every other batch as touched.
+  /** Advances an IncrementalView over `parts` in order: after every
+    * batch its view must equal `viewOf` the replay up to that batch, and
+    * `onBatch` must report a rebuild for exactly the bootstrap batch and
+    * the batches holding a truncate, and the distinct half-event keys of
+    * every other batch as touched.
     */
   private def viewHolds(parts: Seq[Seq[FlatRow]]): Boolean = {
     val log = Seq.newBuilder[(Boolean, Long)]
     val engine = new ViewMaintenance.IncrementalView((inv, n) => log += ((inv, n)))
-    parts.foreach(b => engine.advance(toDf(b)))
-    val asTuples = (df: DataFrame) =>
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val want = asTuples(ViewMaintenance.viewOf(Apply.latest(toDf(parts.flatten))
-      .select(col("pk"), col("last_value"))).orderBy("grp"))
+    // an all-null group sums to null, not 0
+    val asTuples = (df: DataFrame) => df.collect().toSeq
+      .map(r => (r.getLong(0), r.getLong(1), Option(r.getAs[java.lang.Long](2)).map(_.longValue)))
+    val views = parts.indices.forall { i =>
+      engine.advance(toDf(parts(i)))
+      asTuples(engine.current) == asTuples(ViewMaintenance.viewOf(
+        Apply.latest(toDf(parts.take(i + 1).flatten)).select(col("pk"), col("last_value")))
+        .orderBy("grp"))
+    }
     val wantLog = parts.zipWithIndex.map { case (b, i) =>
       if (i == 0 || b.exists(_.op == "t")) (true, -1L)
       else (false, b.flatMap(r => r.pk_before ++ r.pk_after).distinct.length.toLong)
     }
-    asTuples(engine.current) == want && log.result() == wantLog
+    views && log.result() == wantLog
   }
 
+  // delta batches random cuts rarely make, each planted after a random
+  // batch: deletes of keys no stream creates, a key moved across groups
+  // and back, and a batch of only truncates
+  private val genPlanted: Gen[Seq[(Int, Seq[FlatRow])]] = for {
+    k <- Gen.choose(0L, 12L)
+    v <- genValue
+    at <- Gen.listOfN(3, Gen.choose(1, 4))
+  } yield at.zip(Seq(
+    Seq(FlatRow(0, "d", Some(100 + k), None, None), FlatRow(0, "d", Some(200), None, None)),
+    Seq(FlatRow(0, "u_pk", Some(k), Some(k + 1), v), FlatRow(0, "u_pk", Some(k + 1), Some(k), v)),
+    Seq(FlatRow(0, "t", None, None, None))))
+
   property("IncrementalView advanced batch by batch ≡ viewOf the full replay") =
-    Prop.forAll(genRows, Gen.listOfN(3, Gen.chooseNum(0, 100))) { (rows, cutPcts) =>
-      val parts = batches(rows, cutPcts)
-      Prop.classify(parts.drop(1).exists(_.exists(_.op == "t")), "truncate after bootstrap") {
-        viewHolds(parts)
-      }
+    Prop.forAll(genRows, Gen.listOfN(3, Gen.chooseNum(0, 100)), genPlanted) {
+      (rows, cutPcts, planted) =>
+        val random = batches(rows, cutPcts)
+        val withPlanted = random.indices.flatMap(i =>
+          random(i) +: planted.filter(_._1 == i + 1).map(_._2))
+        // renumbered in stream order, so every batch follows the last
+        val lsns = Iterator.from(1).map(_ * 3L)
+        val parts = withPlanted.map(_.map(_.copy(lsn_long = lsns.next())))
+        Prop.classify(random.drop(1).exists(_.exists(_.op == "t")), "truncate after bootstrap") {
+          viewHolds(parts)
+        }
     }
 
   property("IncrementalView: a planted stream of the view's edge cases") = Prop.delay {
     def ev(lsn: Long, op: String, before: Option[Long], after: Option[Long], v: Double) =
       FlatRow(lsn, op, before, after, if (op == "d" || op == "t") None else Some(v))
     def up(lsn: Long, op: String, pk: Long, v: Double) = ev(lsn, op, None, Some(pk), v)
+    def nul(lsn: Long, op: String, pk: Long) = FlatRow(lsn, op, None, Some(pk), None)
     def del(lsn: Long, pk: Long) = ev(lsn, "d", Some(pk), None, 0)
     def move(lsn: Long, from: Long, to: Long, v: Double) = ev(lsn, "u_pk", Some(from), Some(to), v)
+    def truncate(lsn: Long) = ev(lsn, "t", None, None, 0)
     Prop(viewHolds(Seq(
       Seq(up(1, "c", 1, 1.0), up(2, "c", 2, -3.25), up(3, "c", 13, 5.0)),
       // u_pk across groups (1 → 7), a key created and deleted in the
       // batch, negative cents
       Seq(move(4, 1, 7, 2.5), up(5, "c", 4, 1.1), del(6, 4), up(7, "u", 2, -0.07)),
       // a truncate in a delta-era batch, with events on both sides of it
-      Seq(up(8, "c", 8, 3.0), ev(9, "t", None, None, 0), up(10, "c", 9, -4.4),
-        move(11, 9, 11, -1.0)),
-      Seq(up(12, "u", 11, 0.5), del(13, 13), up(14, "c", 3, 0.01), move(15, 3, 23, -0.99)))))
+      Seq(up(8, "c", 8, 3.0), truncate(9), up(10, "c", 9, -4.4), move(11, 9, 11, -1.0)),
+      Seq(up(12, "u", 11, 0.5), del(13, 13), up(14, "c", 3, 0.01), move(15, 3, 23, -0.99)),
+      // an all-null group (5), a key moved across groups and back, and
+      // deletes of keys the state lacks (40 never existed, 13 is gone)
+      Seq(nul(16, "c", 15), nul(17, "c", 25), move(18, 11, 12, 0.75), move(19, 12, 11, 0.25),
+        del(20, 40), del(21, 13)),
+      // group 5 gains a value, group 3 loses its only one
+      Seq(up(22, "u", 15, 2.0), nul(23, "u", 23), nul(24, "u", 25)),
+      Seq(truncate(25), truncate(26)),
+      Seq(nul(27, "c", 5), del(28, 99), up(29, "c", 6, 1.5)),
+      // a rebuild into an all-null group, then a delta on it
+      Seq(truncate(30), nul(31, "c", 14), nul(32, "c", 24)),
+      Seq(up(33, "u", 14, 0.3), del(34, 24)))))
   }
 
   property("retention resume ≡ full replay for every gap-free cut") =

@@ -10,6 +10,38 @@ import java.nio.file.Files
 class SourcesSpec extends AnyFunSuite {
   import SparkTestSession._
 
+  test("Tables.load infers a path's schema once, and again after a rewrite") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = Files.createTempDirectory("graft_tables_")
+    val path = dir.resolve("t.parquet").toString
+    def jobsIn[T](body: => T): (T, Int) = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val onJob = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+      }
+      def drain(): Unit =
+        org.apache.spark.graft.SchedulerShim.waitListenerBusEmpty(spark.sparkContext, 60000)
+      drain()
+      spark.sparkContext.addSparkListener(onJob)
+      try (body, { drain(); jobs.get })
+      finally spark.sparkContext.removeSparkListener(onJob)
+    }
+    try {
+      spark.range(10).selectExpr("id", "id * 2 as v").repartition(2).write.parquet(path)
+      val (first, inferring) = jobsIn(Tables.load(spark, dir.toString, "t"))
+      assert(inferring == 1, s"$inferring jobs inferring the schema")
+      // an unchanged directory: the schema inferred above, no job
+      val (second, reusing) = jobsIn(Tables.load(spark, dir.toString, "t"))
+      assert(reusing == 0, s"$reusing jobs loading an unchanged directory")
+      assert(second.schema == first.schema && second.count() == 10)
+      // rewritten with another schema: inferred again
+      spark.range(5).selectExpr("cast(id as string) as name").write.mode("overwrite").parquet(path)
+      val (third, again) = jobsIn(Tables.load(spark, dir.toString, "t"))
+      assert(again == 1, s"$again jobs loading a rewritten directory")
+      assert(third.columns.toSeq == Seq("name") && third.count() == 5)
+    } finally graft.sources.SourceSinks.deleteDir(dir)
+  }
+
   test("x37 compaction plan conserves files and bytes in contiguous month order") {
     import org.apache.spark.sql.functions._
     val rows = graft.sources.SourceSinks.x37_compaction_planner(spark, sf)
