@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times the headline queries on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric","value","unit","queries","sf"[,"errors"]}.
   * Headline set spans every family: scan-agg, star join, window, CDC
@@ -66,29 +64,7 @@ object Bench {
       case other => (other, Nil)
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    // Dev-only override: SPARK_GRAFT_MASTER=local-cluster[4,8,16384] runs
-    // the same bench against separate executor JVMs (real serialized
-    // shuffles / broadcasts) — evidence for the multi-executor story that
-    // plain local[n] cannot give. Driver runs always use the default.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val spark = SparkSession.builder()
-      .master(master)
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // single-digit-MB..100MB single-file tables (this box's parquet)
-      // otherwise scan as ONE split at the default 128m — the heavy
-      // pre-shuffle projections (explode+hash over documents) then run
-      // single-threaded regardless of core count (found at sf5: d18
-      // slower than at sf10 because 75MB = 1 split, 150MB = 2). 16m
-      // keeps scans parallel here; a real corpus arrives as many files
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Cli.session("graft-bench", Cli.hostCpus)
 
     // warm the JVM/codegen paths once on the smallest query
     SparkEntry.queries("q01_pricing_agg")(spark, sfDir).count()
@@ -163,15 +139,9 @@ object Bench {
     val extraJson =
       if (extraNames.isEmpty) ""
       else s""","extended":${mapJson(extMins)},"extended_runs":$extRunsJson"""
-    def jsonEscape(s: String): String = s.flatMap {
-      case '\\' => "\\\\"
-      case '"' => "\\\""
-      case c if c < ' ' => f"\\u${c.toInt}%04x" // control chars (RFC 8259)
-      case c => c.toString
-    }
     def errorsJson(es: Iterable[(String, String)]): String =
       if (es.isEmpty) ""
-      else es.map { case (k, v) => "\"" + k + "\":\"" + jsonEscape(v) + "\"" }
+      else es.map { case (k, v) => "\"" + k + "\":" + Cli.jsonString(v) }
         .mkString(",\"errors\":{", ",", "}")
     val errJson = errorsJson(errors)
     println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"runs":$runsJson$extraJson,"sf":"$sfDir"$errJson}""")

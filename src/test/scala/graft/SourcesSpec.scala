@@ -11,20 +11,11 @@ class SourcesSpec extends AnyFunSuite {
   import SparkTestSession._
 
   test("Tables.load infers a path's schema once, and again after a rewrite") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val dir = Files.createTempDirectory("graft_tables_")
     val path = dir.resolve("t.parquet").toString
     def jobsIn[T](body: => T): (T, Int) = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger()
-      val onJob = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-      }
-      def drain(): Unit =
-        org.apache.spark.graft.SchedulerShim.waitListenerBusEmpty(spark.sparkContext, 60000)
-      drain()
-      spark.sparkContext.addSparkListener(onJob)
-      try (body, { drain(); jobs.get })
-      finally spark.sparkContext.removeSparkListener(onJob)
+      val (r, ran) = PlanWalk.scheduled(spark)(body)
+      (r, ran.jobs)
     }
     try {
       spark.range(10).selectExpr("id", "id * 2 as v").repartition(2).write.parquet(path)

@@ -228,40 +228,34 @@ class StreamingSpec extends AnyFunSuite {
 
   test("s25 splice state is horizon-bounded and beyond-horizon events drop") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_s25spec")
-    try {
-      // user 0: 11 early events (us 0..100), 11 much-later events
-      // (us 10000..10100), then a beyond-horizon straggler at us=5
-      val early = (0 until 11).map(i => (i.toLong, 0L,
-        Seq("view", "click", "purchase")(i % 3), i * 10L))
-      val late = (0 until 11).map(i => (100L + i, 0L,
-        Seq("click", "view")(i % 2), 10000L + i * 10L))
-      val straggler = Seq((999L, 0L, "purchase", 5L))
-      Seq(early, late, straggler).zipWithIndex.foreach { case (b, i) =>
-        sources.SourceSinks.landSingleParquet(
-          b.toDF("event_id", "user_id", "event_type", "us"),
-          dir.resolve(f"b$i%02d.parquet"))
-      }
-      val H = 500L // horizon ≪ the 10000-us gap: early prefix finalizes
-      val em = StreamingQueries.streamTransitions(spark, dir.toString, H)
-        .collect().sortBy(_.getAs[Long]("seq"))
-      assert(em.length == 3)
-      val fin = em.last
-      // the straggler splices before the finalized boundary → dropped
-      assert(fin.getAs[Long]("n_dropped") == 1L)
-      // state holds only the in-horizon tail, not the 22-event history
-      assert(em.map(_.getAs[Int]("n_state")).max <= 11)
-      assert(fin.getAs[Int]("n_state") == 11)
-      // counts still equal the reference fold over the non-dropped events
-      val all = (early ++ late).sortBy(e => (e._4, e._1))
-      val expect = all.map(_._3).sliding(2).filter(_.size == 2)
-        .map(p => (p.head, p(1))).toSeq
-        .groupBy(identity).map { case ((a, b), v) => (a, b, v.size.toLong) }
-        .toSeq.sorted
-      val got = fin.getSeq[org.apache.spark.sql.Row](2)
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2))).sorted
-      assert(got == expect)
-    } finally sources.SourceSinks.deleteDir(dir)
+    // user 0: 11 early events (us 0..100), 11 much-later events
+    // (us 10000..10100), then a beyond-horizon straggler at us=5
+    val early = (0 until 11).map(i => (i.toLong, 0L,
+      Seq("view", "click", "purchase")(i % 3), i * 10L))
+    val late = (0 until 11).map(i => (100L + i, 0L,
+      Seq("click", "view")(i % 2), 10000L + i * 10L))
+    val straggler = Seq((999L, 0L, "purchase", 5L))
+    val parts = Seq(early, late, straggler)
+      .map(_.toDF("event_id", "user_id", "event_type", "us"))
+    val H = 500L // horizon ≪ the 10000-us gap: early prefix finalizes
+    val em = StreamingQueries.streamTransitions(spark, parts, H)
+      .collect().sortBy(_.getAs[Long]("seq"))
+    assert(em.length == 3)
+    val fin = em.last
+    // the straggler splices before the finalized boundary → dropped
+    assert(fin.getAs[Long]("n_dropped") == 1L)
+    // state holds only the in-horizon tail, not the 22-event history
+    assert(em.map(_.getAs[Int]("n_state")).max <= 11)
+    assert(fin.getAs[Int]("n_state") == 11)
+    // counts still equal the reference fold over the non-dropped events
+    val all = (early ++ late).sortBy(e => (e._4, e._1))
+    val expect = all.map(_._3).sliding(2).filter(_.size == 2)
+      .map(p => (p.head, p(1))).toSeq
+      .groupBy(identity).map { case ((a, b), v) => (a, b, v.size.toLong) }
+      .toSeq.sorted
+    val got = fin.getSeq[org.apache.spark.sql.Row](2)
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2))).sorted
+    assert(got == expect)
   }
 
   test("s25 streaming transitions equal the batch q49 row for row") {
@@ -307,49 +301,42 @@ class StreamingSpec extends AnyFunSuite {
 
   test("s24/s31 k-min bound violations are observable via n_evicted") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_sevspec")
-    try {
-      // user 0 is >k-crowded for k=2: 5 clicks and 5 purchases land
-      // across two batches; user 1 stays under every bound
-      val b0 = Seq((0L, "view", 0L), (0L, "click", 10L), (0L, "click", 20L),
-        (0L, "purchase", 30L), (0L, "purchase", 40L), (1L, "view", 0L),
-        (1L, "click", 15L))
-      val b1 = Seq((0L, "click", 50L), (0L, "click", 60L), (0L, "click", 70L),
-        (0L, "purchase", 80L), (0L, "purchase", 90L), (0L, "purchase", 95L),
-        (1L, "purchase", 25L))
-      Seq(b0, b1).zipWithIndex.foreach { case (b, i) =>
-        sources.SourceSinks.landSingleParquet(
-          b.toDF("user_id", "event_type", "us"),
-          dir.resolve(f"b$i%02d.parquet"))
-      }
-      val W = 1000L
-      // tight bound: the crowded user MUST report evictions...
-      val tight = StreamingQueries.streamFunnel(spark, dir.toString, 2, W)
-        .collect()
-      val ev0 = tight.filter(_.getAs[Long]("user_id") == 0L)
-        .map(_.getAs[Long]("n_evicted")).max
-      assert(ev0 > 0, "k=2 on a 5-click/5-purchase user must evict observably")
-      // ...and the uncrowded user must not
-      assert(tight.filter(_.getAs[Long]("user_id") == 1L)
-        .forall(_.getAs[Long]("n_evicted") == 0L))
-      // roomy bound: zero evictions ⇒ the fold was provably exact
-      val roomy = StreamingQueries.streamFunnel(spark, dir.toString, 64, W)
-        .collect()
-      assert(roomy.forall(_.getAs[Long]("n_evicted") == 0L))
-      // same discipline for the s31 engine
-      val t2 = StreamingQueries.streamTimeToConvert(spark, dir.toString, 2)
-        .collect()
-      assert(t2.filter(_.getAs[Long]("user_id") == 0L)
-        .map(_.getAs[Long]("n_evicted")).max > 0)
-      assert(t2.filter(_.getAs[Long]("user_id") == 1L)
-        .forall(_.getAs[Long]("n_evicted") == 0L))
-      val t64 = StreamingQueries.streamTimeToConvert(spark, dir.toString, 64)
-        .collect()
-      assert(t64.forall(_.getAs[Long]("n_evicted") == 0L))
-      // the production lanes run at k=64: this corpus never evicts, so
-      // every depth/(fv,fp) the snapshot folds is exact by the counter
-      // argument, not just by twin equality
-    } finally sources.SourceSinks.deleteDir(dir)
+    // user 0 is >k-crowded for k=2: 5 clicks and 5 purchases land
+    // across two batches; user 1 stays under every bound
+    val b0 = Seq((0L, "view", 0L), (0L, "click", 10L), (0L, "click", 20L),
+      (0L, "purchase", 30L), (0L, "purchase", 40L), (1L, "view", 0L),
+      (1L, "click", 15L))
+    val b1 = Seq((0L, "click", 50L), (0L, "click", 60L), (0L, "click", 70L),
+      (0L, "purchase", 80L), (0L, "purchase", 90L), (0L, "purchase", 95L),
+      (1L, "purchase", 25L))
+    val parts = Seq(b0, b1).map(_.toDF("user_id", "event_type", "us"))
+    val W = 1000L
+    // tight bound: the crowded user MUST report evictions...
+    val tight = StreamingQueries.streamFunnel(spark, parts, 2, W)
+      .collect()
+    val ev0 = tight.filter(_.getAs[Long]("user_id") == 0L)
+      .map(_.getAs[Long]("n_evicted")).max
+    assert(ev0 > 0, "k=2 on a 5-click/5-purchase user must evict observably")
+    // ...and the uncrowded user must not
+    assert(tight.filter(_.getAs[Long]("user_id") == 1L)
+      .forall(_.getAs[Long]("n_evicted") == 0L))
+    // roomy bound: zero evictions ⇒ the fold was provably exact
+    val roomy = StreamingQueries.streamFunnel(spark, parts, 64, W)
+      .collect()
+    assert(roomy.forall(_.getAs[Long]("n_evicted") == 0L))
+    // same discipline for the s31 engine
+    val t2 = StreamingQueries.streamTimeToConvert(spark, parts, 2)
+      .collect()
+    assert(t2.filter(_.getAs[Long]("user_id") == 0L)
+      .map(_.getAs[Long]("n_evicted")).max > 0)
+    assert(t2.filter(_.getAs[Long]("user_id") == 1L)
+      .forall(_.getAs[Long]("n_evicted") == 0L))
+    val t64 = StreamingQueries.streamTimeToConvert(spark, parts, 64)
+      .collect()
+    assert(t64.forall(_.getAs[Long]("n_evicted") == 0L))
+    // the production lanes run at k=64: this corpus never evicts, so
+    // every depth/(fv,fp) the snapshot folds is exact by the counter
+    // argument, not just by twin equality
   }
 
   test("s30 streaming Benford equals the batch q76 row for row") {
@@ -372,6 +359,38 @@ class StreamingSpec extends AnyFunSuite {
     // no market can hold more entries than there are suppliers
     val nSup = Tables.supplier(spark, sf).count()
     got.foreach(r => assert(r(1).asInstanceOf[Long] <= nSup))
+  }
+
+  test("a streaming twin leaves no temp view, active query or scratch dir behind") {
+    // one keyed engine, one global fold, one exploded-array fold, one
+    // former driver map and one aggregate twin
+    // the harness's scratch prefix: other test JVMs share the temp dir
+    // and keep graft_* dirs of other lanes until they exit (x21's)
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def scratch(): Set[String] =
+      Option(tmp.listFiles()).toSeq.flatten
+        .filter(f => f.isDirectory && f.getName.startsWith("graft_twin"))
+        .map(_.getName).toSet
+    def views(): Set[String] =
+      spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+    Seq("s24_stream_funnel", "s30_stream_benford", "s35_stream_balance",
+      "s22_stream_cusum", "s44_stream_abc").foreach { lane =>
+      val (views0, scratch0) = (views(), scratch())
+      assert(spark.streams.active.isEmpty)
+      assert(StreamingQueries.queries(lane)(spark, sf).collect().nonEmpty)
+      assert(views() == views0, s"$lane left temp views ${views() -- views0}")
+      assert(spark.streams.active.isEmpty,
+        s"$lane left active queries ${spark.streams.active.map(_.name).toSeq}")
+      // another JVM's twin holds its dirs for a while; a leaked dir is
+      // one that never goes away
+      var left = scratch() -- scratch0
+      val deadline = System.nanoTime() + 120L * 1000000000L
+      while (left.nonEmpty && System.nanoTime() < deadline) {
+        Thread.sleep(1000)
+        left = left.filter(n => new java.io.File(tmp, n).exists)
+      }
+      assert(left.isEmpty, s"$lane left scratch dirs $left")
+    }
   }
 
   test("snapshotTwin scratch is bounded by key space after ≥8 triggers") {
