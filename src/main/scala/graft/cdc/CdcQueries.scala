@@ -818,26 +818,21 @@ object CdcQueries {
     val dir = java.nio.file.Files.createTempDirectory("graft_c42")
     try {
       graft.sources.SourceSinks.landSingleParquet(sparse, dir.resolve("ops.parquet"))
-      val name = s"graft_c42_${System.nanoTime()}"
       val stream = s.readStream.schema(sparse.schema).parquet(dir.toString)
-      val q = stream.withWatermark("ts", "30 minutes")
-        .groupBy(window(c("ts"), "6 hours").as("w"))
-        .agg(count(when(c("kind") === "op", 1)).as("n"))
-        .select(unix_micros(c("w.start")).as("window_start_us"), c("n"))
-        .writeStream.outputMode("append").format("memory").queryName(name).start()
-      try {
-        q.processAllAvailable() // ops drained; watermark = sparse tail − 30m
-        if (heartbeat) {
-          graft.sources.SourceSinks.landSingleParquet(hb, dir.resolve("hb.parquet"))
-          q.processAllAvailable() // keepalive closes the remaining windows
-        }
-      } finally q.stop()
-      val out = s.table(name).filter(c("n") > 0)
-        .orderBy("window_start_us")
-      try {
-        val rows = out.collect().toSeq
-        s.createDataFrame(s.sparkContext.parallelize(rows, 1), out.schema)
-      } finally s.catalog.dropTempView(name)
+      graft.streaming.StreamingQueries.drainMemory(s, "graft_c42") { name =>
+        val q = stream.withWatermark("ts", "30 minutes")
+          .groupBy(window(c("ts"), "6 hours").as("w"))
+          .agg(count(when(c("kind") === "op", 1)).as("n"))
+          .select(unix_micros(c("w.start")).as("window_start_us"), c("n"))
+          .writeStream.outputMode("append").format("memory").queryName(name).start()
+        try {
+          q.processAllAvailable() // ops drained; watermark = sparse tail − 30m
+          if (heartbeat) {
+            graft.sources.SourceSinks.landSingleParquet(hb, dir.resolve("hb.parquet"))
+            q.processAllAvailable() // keepalive closes the remaining windows
+          }
+        } finally q.stop()
+      }(_.filter(c("n") > 0).orderBy("window_start_us"))
     } finally graft.sources.SourceSinks.deleteDir(dir)
   }
 

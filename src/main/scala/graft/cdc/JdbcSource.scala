@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{KeyedStore, Tables}
 
 /** JDBC/Postgres ingest edge — the reference daemon's database side lifted
   * to Spark's JDBC source against the session's [[JdbcFixture]] database
@@ -22,10 +22,12 @@ import graft.Tables
   *     lsn-poll micro-batch loop the daemon's replication stream drives
   *     (internal/dao/replication.go Next/Stream; daemon wiring
   *     internal/dao/init.go:91-145): each poll reads only
-  *     `lsn > last_applied` and merges into the evolving replica state
-  *     exactly like c13's streaming apply — state is the base of the
-  *     next `Apply.fold`, entering at its own ord, so a truncate inside
-  *     a batch still wipes prior state (Apply's ord discipline).
+  *     `lsn > last_applied` and merges into the evolving replica. c33
+  *     folds each poll onto the state (state is the base of the next
+  *     `Apply.fold`, entering at its own ord, so a truncate inside a
+  *     batch still wipes prior state); s15 folds each poll alone and
+  *     merges it into the replica [[KeyedStore]], where a truncate is a
+  *     horizon row, as in c13's streaming apply.
   *
   * The replayed result is therefore ≡ c04's full-replay apply on the same
   * rows, which is what the DuckDB oracle pins.
@@ -110,33 +112,49 @@ object JdbcSource {
     */
   case class PollCmd(poll_seq: Int, hi: Long)
 
-  /** The s15 durable offset: highest foreachBatch batch id committed,
-    * last LSN applied, and which state version holds the replica.
+  /** `flat` folded alone into replica rows (pk, last_ord, last_op,
+    * last_value): each key's last write after the batch's own truncate
+    * cut, plus one `StreamApply.TruncPk` horizon row at the batch's max
+    * truncate ord when it holds a truncate.
     */
-  private case class Offset(batchId: Long, lastLsn: Long, version: Long)
+  private def replicaRows(flat: DataFrame): DataFrame =
+    Apply.fold(flat).select("pk", "last_ord", "last_op", "last_value")
+      .unionByName(flat.filter(col("op") === "t")
+        // grouped, so a batch without a truncate yields no row
+        .groupBy(lit(true)).agg(max(col("lsn_long") * 2 + 1).as("last_ord"))
+        .select(lit(StreamApply.TruncPk).as("pk"), col("last_ord"),
+          lit("t").as("last_op"), lit(null).cast("double").as("last_value")))
 
-  private def readOffset(p: Path): Offset = {
-    val Array(b, l, v) = Files.readString(p).trim.split(",")
-    Offset(b.toLong, l.toLong, v.toLong)
-  }
-  private def writeOffset(p: Path, o: Offset): Unit = {
-    // write-then-move: the offset commit must be atomic — a torn offset
-    // after a crash would desynchronize batchId and state version
-    val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
-    Files.writeString(tmp, s"${o.batchId},${o.lastLsn},${o.version}")
-    Files.move(tmp, p, java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  /** One s15 poll, store batch `batchId`: from the position committed
+    * below `batchId` (`Long.MinValue` when none is), pull `(last, hi]` up
+    * to the highest `hi` asked, merge its replica rows into the touched
+    * buckets and commit `hi` as the position. Returns the position it
+    * resumed from. A replayed batchId starts from the same position and
+    * rewrites the same versions, so it leaves the replica unchanged.
+    */
+  private[graft] def poll(store: KeyedStore, batchId: Long, his: Seq[Long],
+      pull: (Long, Long) => DataFrame): Long = {
+    val last = store.position(below = batchId).fold(Long.MinValue)(_._2)
+    val hi = (last +: his).max
+    if (hi > last) {
+      store.merge(batchId, replicaRows(pull(last, hi)))
+      store.commit(batchId, hi)
+    }
+    last
   }
 
   /** s15 engine: c33's lsn-poll loop under Structured Streaming.
-    * Poll COMMANDS arrive as a file stream; foreachBatch executes each
-    * poll as a bounded JDBC pull merged into a VERSIONED parquet replica
-    * state, committing (batchId, lastLsn, version) to a durable offset
-    * with an idempotent batchId gate — the standard exactly-once
-    * foreachBatch sink contract. The query is STOPPED mid-tail and a
-    * second incarnation resumes from the shared checkpoint + offset:
-    * it must pull only `lsn > lastLsn` (no re-pull, no gap), and the
-    * final replica must equal the full-replay apply (c04's oracle).
+    * Poll COMMANDS arrive as a file stream; foreachBatch runs each
+    * micro-batch's polls as one bounded JDBC pull merged into the replica
+    * [[KeyedStore]] (keys `pk`, ord `last_ord`), then commits the last
+    * applied LSN through the store as the batch's position: the
+    * `foreachBatch` sink into a committed, versioned store. The initial
+    * snapshot is store batch 0 and poll micro-batch b is store batch
+    * b + 1, so a replayed micro-batch re-merges against its pre-batch
+    * state. The query is STOPPED mid-tail and a second incarnation
+    * resumes from the shared checkpoint and the store's position: it
+    * must pull only `lsn > lastLsn` (no re-pull, no gap), and the final
+    * replica must equal the full-replay apply (c04's oracle).
     *
     * Returns (replica, snapshot LSN, incarnation-1 last applied LSN,
     * resume-point LSN seen by incarnation 2, poll batches run).
@@ -144,51 +162,28 @@ object JdbcSource {
   def s15run(s: SparkSession, d: String): (DataFrame, Long, Long, Long, Int) = {
     import s.implicits._
     val dir = Files.createTempDirectory("graft_s15")
-    // replica + offset outlive this call (the result reads them lazily)
-    val durable = graft.sources.SourceSinks.cleanupOnExit(
-      Files.createTempDirectory("graft_s15_replica"))
+    // the replica store outlives this call (the result reads it lazily)
+    val store = KeyedStore.open(s, graft.sources.SourceSinks.cleanupOnExit(
+      Files.createTempDirectory("graft_s15_replica")), Seq("pk"), "last_ord")
     val (fx, minL, maxL) = loadDb(s, d, dir)
     val (url, props) = (fx.url, fx.props)
     try {
       val cmdDir = dir.resolve("polls"); Files.createDirectories(cmdDir)
       val cp = dir.resolve("checkpoint")
-      val offsetPath = durable.resolve("offset")
       val snapLsn = Polls.snapshotCut(minL, maxL)
-      // ---- initial snapshot (c33's striped scan), state version 0 ----
-      val snapshot = s.read.jdbc(
-        url, s"(SELECT * FROM WAL WHERE LSN_LONG <= $snapLsn) AS SNAP",
-        "LSN_LONG", minL, snapLsn, 8, props)
-      Apply.state(lower(snapshot))
-        .write.mode("overwrite").parquet(s"$durable/state_v0")
-      writeOffset(offsetPath, Offset(-1L, snapLsn, 0L))
+      // ---- initial snapshot (c33's striped scan), store batch 0 ----
+      poll(store, 0L, Seq(snapLsn), (_, hi) => lower(s.read.jdbc(
+        url, s"(SELECT * FROM WAL WHERE LSN_LONG <= $hi) AS SNAP",
+        "LSN_LONG", minL, hi, 8, props)))
+      val pull = (lo: Long, hi: Long) => lower(s.read.jdbc(
+        url, s"(SELECT * FROM WAL WHERE LSN_LONG > $lo AND LSN_LONG <= $hi) AS W",
+        props))
       val resumeFrom = new java.util.concurrent.atomic.AtomicLong(-1L)
       // ---- the streaming poll loop --------------------------------------
       val onBatch: (DataFrame, Long) => Unit = (cmdBatch, batchId) => {
         // poll commands are bounded metadata (a few rows), never WAL data
-        val cmds = cmdBatch.select(col("poll_seq"), col("hi"))
-          .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-        val off = readOffset(offsetPath)
-        if (batchId > off.batchId && cmds.nonEmpty) { // idempotent gate
-          resumeFrom.compareAndSet(-1L, off.lastLsn)
-          var last = off.lastLsn
-          var state = s.read.parquet(s"$durable/state_v${off.version}")
-          cmds.foreach { case (_, hi) =>
-            if (hi > last) {
-              val batch = s.read.jdbc(
-                url, s"(SELECT * FROM WAL WHERE LSN_LONG > $last AND LSN_LONG <= $hi) AS W",
-                props)
-              state = Apply.fold(lower(batch), Some(state))
-              last = hi
-            }
-          }
-          val v = off.version + 1
-          state.write.mode("overwrite").parquet(s"$durable/state_v$v")
-          writeOffset(offsetPath, Offset(batchId, last, v))
-          // a restart re-reads only the version the offset names, so
-          // every older version is garbage once v is committed
-          (0L until v).map(k => durable.resolve(s"state_v$k")).filter(Files.exists(_))
-            .foreach(graft.sources.SourceSinks.deleteDir)
-        }
+        val his = cmdBatch.select(col("hi")).collect().map(_.getLong(0)).toSeq
+        resumeFrom.compareAndSet(-1L, poll(store, batchId + 1, his, pull))
       }
       def incarnation(): org.apache.spark.sql.streaming.StreamingQuery =
         s.readStream.schema(implicitly[org.apache.spark.sql.Encoder[PollCmd]].schema)
@@ -204,18 +199,14 @@ object JdbcSource {
       val q1 = incarnation()
       try { land(0, his(0)); land(1, his(1)); q1.processAllAvailable() }
       finally q1.stop()
-      val inc1Last = readOffset(offsetPath).lastLsn
-      // incarnation 2: SAME checkpoint + offset — resumes, finishes the tail
+      val inc1Last = store.position().get._2
+      // incarnation 2: SAME checkpoint + store — resumes, finishes the tail
       resumeFrom.set(-1L)
       val q2 = incarnation()
       try { land(2, his(2)); land(3, his(3)); q2.processAllAvailable() }
       finally q2.stop()
-      val fin = readOffset(offsetPath)
-      val replica = s.read.parquet(s"$durable/state_v${fin.version}")
-        .filter(col("last_op") =!= "d")
-        .select(col("pk"), round(col("last_value"), 2).as("value"), col("last_ord"))
-        .orderBy("pk")
-      (replica, snapLsn, inc1Last, resumeFrom.get(), fin.version.toInt)
+      (StreamApply.replica(store.panel), snapLsn, inc1Last, resumeFrom.get(),
+        store.position().get._1.toInt)
     } finally {
       fx.close()
       graft.sources.SourceSinks.deleteDir(dir)

@@ -1,18 +1,20 @@
 package graft.cdc
 
+import java.nio.file.Files
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.Tables
+import graft.{KeyedStore, Tables}
 
 /** Per-key half-event for the streaming apply. */
 case class HalfEvent(pk: Long, ord: Long, eff_op: String, value: Option[Double])
 
-/** Streaming per-key replica state: one row per key (bounded state). */
-case class KeyState(value: Option[Double], ord: Long, deleted: Boolean)
-
-/** Emitted after each batch for each touched key. */
-case class KeyUpdate(pk: Long, value: Option[Double], last_ord: Long, deleted: Boolean)
+/** A key's replica row, as [[Apply.fold]] names it: its last write's ord,
+  * op and value. It is both the streaming apply's per-key state and what
+  * each micro-batch emits for the keys it touched.
+  */
+case class KeyUpdate(pk: Long, last_ord: Long, last_op: String, last_value: Option[Double])
 
 /** Structured Streaming CDC apply: the same upsert/delete/pk-change/
   * TRUNCATE semantics as the batch [[Apply]], maintained incrementally
@@ -20,36 +22,55 @@ case class KeyUpdate(pk: Long, value: Option[Double], last_ord: Long, deleted: B
   * state size is bounded by live-key cardinality regardless of stream
   * length (SURVEY.md §4). Truncate is a control-plane event (table-wide,
   * not keyed), so it rides the SAME stream as a sentinel-key half-event
-  * whose state folds the max truncate ord; the final snapshot drops
-  * every key whose last update precedes that horizon — exactly the batch
-  * `liveEvents` cut (`ord > tmax`), derived without a second source
-  * pass. (r13: the c04-oracle conversion caught the previous
-  * truncates-excluded behavior diverging at sf1, where the last truncate
-  * lands late enough in the log to wipe most keys; at small sf every key
-  * had post-truncate activity and the divergence was invisible.)
+  * whose state folds the max truncate ord.
+  *
+  * Each micro-batch's updated rows merge into a [[graft.KeyedStore]]
+  * (keys `pk`, ord `last_ord`) through `foreachBatch`; the sentinel's row
+  * is the truncate horizon, one more key in the store. The replica is
+  * the store's `replica` readout: every key whose last write is an upsert
+  * after that horizon — exactly the batch `liveEvents` cut
+  * (`ord > tmax`), derived without a second source pass. (r13: the
+  * c04-oracle conversion caught an earlier truncates-excluded behavior
+  * diverging at sf1, where the last truncate lands late enough in the
+  * log to wipe most keys.)
   */
 object StreamApply {
   /** Sentinel pk carrying the truncate horizon through the keyed stream
-    * (real pks are non-negative user-derived keys).
+    * and the store (real pks are non-negative user-derived keys).
     */
   val TruncPk: Long = Long.MinValue
 
-  private val applyFn: (Long, Iterator[HalfEvent], GroupState[KeyState]) => Iterator[KeyUpdate] =
+  private val applyFn: (Long, Iterator[HalfEvent], GroupState[KeyUpdate]) => Iterator[KeyUpdate] =
     (pk, events, state) => {
-      var st = state.getOption.getOrElse(KeyState(None, -1L, deleted = true))
+      var st = state.getOption.getOrElse(KeyUpdate(pk, -1L, "d", None))
       // events within a micro-batch arrive unordered — apply in ord order
       events.toSeq.sortBy(_.ord).foreach { e =>
-        if (e.ord > st.ord) {
-          st = if (e.eff_op == "d") KeyState(None, e.ord, deleted = true)
-          else KeyState(e.value, e.ord, deleted = false)
-        }
+        if (e.ord > st.last_ord)
+          st = KeyUpdate(pk, e.ord, e.eff_op, if (e.eff_op == "d") None else e.value)
       }
       state.update(st)
-      Iterator.single(KeyUpdate(pk, st.value, st.ord, st.deleted))
+      Iterator.single(st)
     }
 
-  /** Run the streaming apply over the events parquet and return the final
-    * materialized state (pk, value, last_ord) as a batch DataFrame.
+  /** The replica held by a store of replica rows (pk, last_ord, last_op,
+    * last_value) plus the `TruncPk` horizon row: (pk, value, last_ord) of
+    * every key whose last write is an upsert after the horizon, by pk.
+    * Shared by the streaming apply (c13) and the JDBC tail (s15).
+    */
+  def replica(panel: DataFrame): DataFrame = {
+    // the horizon is one row: broadcast, no second pass
+    val horizon = panel.filter(col("pk") === TruncPk)
+      .agg(coalesce(max("last_ord"), lit(-1L)).as("tmax"))
+    panel.filter(col("pk") =!= TruncPk)
+      .crossJoin(broadcast(horizon))
+      .filter(col("last_op") =!= "d" && col("last_ord") > col("tmax"))
+      .select(col("pk"), round(col("last_value"), 2).as("value"), col("last_ord"))
+      .orderBy("pk")
+  }
+
+  /** Run the streaming apply over the events parquet and return the
+    * replica (pk, value, last_ord). The frame reads the apply's store,
+    * which lives until the JVM exits.
     */
   def run(spark: SparkSession, dir: String, queryName: String = "graft_stream_apply"): DataFrame = {
     import spark.implicits._
@@ -73,27 +94,11 @@ object StreamApply {
     val updates = halves
       .groupByKey(_.pk)
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(applyFn)
-    val q = updates.writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(queryName)
-      .start()
+    val store = KeyedStore.open(spark, graft.sources.SourceSinks.cleanupOnExit(
+      Files.createTempDirectory("graft_replica")), Seq("pk"), "last_ord")
+    val q = store.sink(updates.toDF()).queryName(queryName).start()
     try q.processAllAvailable() finally q.stop()
-    // last update per key across batches = final state
-    val snap = spark.table(queryName)
-      .groupBy(col("pk"))
-      .agg(max("last_ord").as("last_ord"),
-        max_by(col("deleted"), col("last_ord")).as("deleted"),
-        max_by(col("value"), col("last_ord")).as("last_value"))
-    // the sentinel's final ord is the truncate horizon; a key survives
-    // only if its last half-event is AFTER the last truncate (the batch
-    // liveEvents `ord > tmax` cut) — 1-row broadcast, no second pass
-    val horizon = snap.filter(col("pk") === TruncPk)
-      .agg(coalesce(max("last_ord"), lit(-1L)).as("tmax"))
-    snap.filter(col("pk") =!= TruncPk)
-      .crossJoin(broadcast(horizon))
-      .filter(!col("deleted") && col("last_ord") > col("tmax"))
-      .select(col("pk"), round(col("last_value"), 2).as("value"), col("last_ord"))
-      .orderBy("pk")
+    // an empty log commits no bucket, and its replica is empty
+    replica(if (store.lastBatch < 0) Seq.empty[KeyUpdate].toDF() else store.panel)
   }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{KeyedStore, Tables}
 
 /** Streaming / event-time surface (SURVEY.md §2, s01–s05). s01–s04 are
   * event-time operators expressed as batch plans (identical semantics at
@@ -81,25 +81,39 @@ object StreamingQueries {
       .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
       .orderBy("event_type", "hour_of_day")
 
-  // s05 (rows-only): the s01 aggregation through an actual streaming
-  // query with a 1-hour watermark; update-mode memory sink. Spec asserts
-  // equality with s01.
-  val s05_watermark_agg: Q = (s, d) => {
-    val raw = Tables.load(s, d, "events")
-    val stream = s.readStream.schema(raw.schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(d)
-      .transform(graft.Tables.normalizeEventsTs)
-    val name = s"graft_watermark_agg_${System.nanoTime()}"
-    val q = tumblingAgg(stream.withWatermark("ts", "1 hour"), distinctUsers = false)
-      .writeStream.outputMode("update").format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    s.table(name)
-      .groupBy(col("window_start_us"), col("event_type"))
-      .agg(max_by(col("n"), col("n")).as("n"),
-        max_by(col("sum_value"), col("n")).as("sum_value"))
-      .orderBy("window_start_us", "event_type")
+  /** The events table as a file stream, ts normalized. */
+  private def eventStream(s: SparkSession, d: String): DataFrame =
+    s.readStream.schema(Tables.load(s, d, "events").schema)
+      .option("pathGlobFilter", "events.parquet").parquet(d)
+      .transform(Tables.normalizeEventsTs)
+
+  /** Runs `run(name)`, which starts a memory-sink query named `name`
+    * and drains it, and returns `shape` of the sink's rows as a local
+    * frame. The sink's temp view (which holds every emitted row in
+    * driver heap) is dropped even when `run` or the collect throws.
+    */
+  private[graft] def drainMemory(s: SparkSession, prefix: String)(run: String => Unit)(
+      shape: DataFrame => DataFrame): DataFrame = {
+    val name = s"${prefix}_${System.nanoTime()}"
+    try {
+      run(name)
+      val out = shape(s.table(name))
+      val rows = out.collect().toSeq
+      s.createDataFrame(s.sparkContext.parallelize(rows, 1), out.schema)
+    } finally s.catalog.dropTempView(name)
   }
+
+  /** Store keys of the tumbling aggregation's update-mode rows; a
+    * window's `n` grows with each update, so it is the store's ord.
+    */
+  private val windowKeys = Seq("window_start_us", "event_type")
+
+  // s05 (rows-only): the s01 aggregation through an actual streaming
+  // query with a 1-hour watermark, its update-mode rows merged into a
+  // keyed store. Spec asserts equality with s01.
+  val s05_watermark_agg: Q = (s, d) =>
+    drainToStore(s, tumblingAgg(eventStream(s, d).withWatermark("ts", "1 hour"),
+      distinctUsers = false), windowKeys, "n")(_.orderBy(windowKeys.map(col): _*))
 
   // s06: sessionization via Spark's NATIVE session_window operator —
   // same 30-minute gap semantics as s02's lag+cumsum formulation, so the
@@ -149,18 +163,14 @@ object StreamingQueries {
   // sides — exactly how a 100 TB/day CDC attribution pipeline stays
   // finite-state.
   val s08_stream_stream_join: Q = (s, d) => {
-    val raw = Tables.load(s, d, "events")
-    def stream = s.readStream.schema(raw.schema)
-      .option("pathGlobFilter", "events.parquet").parquet(d)
-      .transform(graft.Tables.normalizeEventsTs)
-      .withWatermark("ts", "1 hour")
-    val name = s"graft_ssj_${System.nanoTime()}"
-    val q = attributionPairs(
-      stream.filter(col("event_type") === "click"),
-      stream.filter(col("event_type") === "purchase"))
-      .writeStream.outputMode("append").format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    attributionAgg(s.table(name))
+    def stream = eventStream(s, d).withWatermark("ts", "1 hour")
+    drainMemory(s, "graft_ssj") { name =>
+      val q = attributionPairs(
+        stream.filter(col("event_type") === "click"),
+        stream.filter(col("event_type") === "purchase"))
+        .writeStream.outputMode("append").format("memory").queryName(name).start()
+      try q.processAllAvailable() finally q.stop()
+    }(attributionAgg)
   }
 
   // s09 (oracle: the batch groupBy SQL; spec: == batch groupBy):
@@ -172,10 +182,7 @@ object StreamingQueries {
   val s09_stateful_counter: Q = (s, d) => {
     import s.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
-    val raw = Tables.load(s, d, "events")
-    val stream = s.readStream.schema(raw.schema)
-      .option("pathGlobFilter", "events.parquet").parquet(d)
-      .transform(graft.Tables.normalizeEventsTs)
+    val stream = eventStream(s, d)
       .select(col("user_id"), col("value"), unix_micros(col("ts")).as("us"))
       .as[(Long, Double, Long)]
     val fn: (Long, Iterator[(Long, Double, Long)], GroupState[(Long, Double, Long)]) => (Long, Long, Double, Long) =
@@ -187,18 +194,14 @@ object StreamingQueries {
         state.update((n, sum, lastUs))
         (uid, n, sum, lastUs)
       }
-    val name = s"graft_sc_${System.nanoTime()}"
-    val q = stream.groupByKey(_._1)
+    val updates = stream.groupByKey(_._1)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout)(fn)
       .toDF("user_id", "n_events", "sum_value", "last_us")
-      .writeStream.outputMode("update").format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    s.table(name)
-      .groupBy(col("user_id"))
-      .agg(max("n_events").as("n_events"),
-        round(max_by(col("sum_value"), col("n_events")), 2).as("sum_value"),
-        max("last_us").as("last_us"))
-      .orderBy("user_id")
+    drainToStore(s, updates, Seq("user_id"), "n_events") {
+      _.select(col("user_id"), col("n_events"),
+        round(col("sum_value"), 2).as("sum_value"), col("last_us"))
+        .orderBy("user_id")
+    }
   }
 
   // s10: streaming WAL CONSUMPTION through the wire codec — the NATS-
@@ -211,29 +214,18 @@ object StreamingQueries {
   // runs per micro-batch exactly as it would per NATS delivery).
   val s10_stream_envelope_decode: Q = (s, d) => {
     implicit val spark: SparkSession = s
-    val raw = Tables.load(s, d, "events")
-    val stream = s.readStream.schema(raw.schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(d)
-      .transform(graft.Tables.normalizeEventsTs)
-    val decoded = graft.cdc.AvroEnvelope.roundtrip(graft.cdc.Envelope.flat(stream))
-    val name = s"graft_stream_envelope_${System.nanoTime()}"
-    val q = decoded.toDF()
-      .groupBy(col("op"))
-      .agg(count(lit(1)).as("n"),
-        max("lsn_long").as("max_lsn"),
-        sum((col("fp_ok") && col("magic_ok")).cast("long")).as("n_ok"),
-        round(sum("after_value"), 2).as("sum_after"))
-      .writeStream.outputMode("complete").format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    // materialize, then drop the memory-sink view so repeated runs don't
-    // accumulate catalog entries + driver-held result rows
-    val out = s.table(name)
-      .select(col("op"), col("n"), col("max_lsn"), col("n_ok"), col("sum_after"))
-      .orderBy("op")
-    val rows = out.collect().toSeq
-    s.catalog.dropTempView(name)
-    s.createDataFrame(s.sparkContext.parallelize(rows, 1), out.schema)
+    val decoded = graft.cdc.AvroEnvelope.roundtrip(graft.cdc.Envelope.flat(eventStream(s, d)))
+    drainMemory(s, "graft_stream_envelope") { name =>
+      val q = decoded.toDF()
+        .groupBy(col("op"))
+        .agg(count(lit(1)).as("n"),
+          max("lsn_long").as("max_lsn"),
+          sum((col("fp_ok") && col("magic_ok")).cast("long")).as("n_ok"),
+          round(sum("after_value"), 2).as("sum_after"))
+        .writeStream.outputMode("complete").format("memory").queryName(name).start()
+      try q.processAllAvailable() finally q.stop()
+    }(_.select(col("op"), col("n"), col("max_lsn"), col("n_ok"), col("sum_after"))
+      .orderBy("op"))
   }
 
   /** s11 engine: run the tumbling aggregation over a two-batch arrival —
@@ -258,29 +250,22 @@ object StreamingQueries {
       def land(pred: org.apache.spark.sql.Column, name: String): Unit =
         graft.sources.SourceSinks.landSingleParquet(evs.filter(pred), dir.resolve(name))
       val stream = s.readStream.schema(evs.schema).parquet(dir.toString)
-      val name = s"graft_s11_${System.nanoTime()}"
       land(col("ts") >= lit(cutoff), "ontime.parquet")
-      val q = tumblingAgg(stream.withWatermark("ts", "30 minutes"),
-          distinctUsers = false)
-        .writeStream.outputMode("update").format("memory").queryName(name).start()
-      try {
-        q.processAllAvailable() // batch 1: on-time only; watermark advances
-        land(col("ts") < lit(cutoff), "late.parquet")
-        q.processAllAvailable() // batch 2: the stragglers, now late
-      } finally q.stop()
-      val dropped = q.recentProgress
-        .flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
-      val out = s.table(name)
-        .groupBy(col("window_start_us"), col("event_type"))
-        .agg(max_by(col("n"), col("n")).as("n"),
-          max_by(col("sum_value"), col("n")).as("sum_value"))
-        .orderBy("window_start_us", "event_type")
-      // materialize before the temp dir disappears; drop the sink view
-      // even if the collect throws (it holds the update-mode rows)
-      try {
-        val rows = out.collect().toSeq
-        (s.createDataFrame(s.sparkContext.parallelize(rows, 1), out.schema), dropped)
-      } finally s.catalog.dropTempView(name)
+      KeyedStore.scratch(s, windowKeys, "n") { store =>
+        val q = store.sink(tumblingAgg(stream.withWatermark("ts", "30 minutes"),
+          distinctUsers = false)).start()
+        try {
+          q.processAllAvailable() // batch 1: on-time only; watermark advances
+          land(col("ts") < lit(cutoff), "late.parquet")
+          q.processAllAvailable() // batch 2: the stragglers, now late
+        } finally q.stop()
+        val dropped = q.recentProgress
+          .flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
+        // bounded (windows × event types): a local frame outlives the store
+        val out = store.panel.orderBy(windowKeys.map(col): _*)
+        (s.createDataFrame(s.sparkContext.parallelize(out.collect().toSeq, 1), out.schema),
+          dropped)
+      }
     } finally graft.sources.SourceSinks.deleteDir(dir)
   }
 
@@ -310,21 +295,17 @@ object StreamingQueries {
     val stream = s.readStream.schema(raw.schema)
       .option("pathGlobFilter", "events.parquet").parquet(d)
     val dim = Tables.nation(s, d).select(col("n_nationkey"), col("n_name"))
-    val name = s"graft_s12_${System.nanoTime()}"
-    val q = stream
-      // sign-preserving % (not pmod) — the oracle's `user_id % 25`; they
-      // agree on the non-negative testdata ids but must also agree by law
-      .withColumn("n_nationkey", col("user_id") % 25)
-      .join(broadcast(dim), "n_nationkey")
-      .groupBy(col("n_name"))
-      .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
-      .writeStream.outputMode("complete").format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    val out = s.table(name).orderBy("n_name")
-    try {
-      val rows = out.collect().toSeq
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), out.schema)
-    } finally s.catalog.dropTempView(name)
+    drainMemory(s, "graft_s12") { name =>
+      val q = stream
+        // sign-preserving % (not pmod) — the oracle's `user_id % 25`; they
+        // agree on the non-negative testdata ids but must also agree by law
+        .withColumn("n_nationkey", col("user_id") % 25)
+        .join(broadcast(dim), "n_nationkey")
+        .groupBy(col("n_name"))
+        .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
+        .writeStream.outputMode("complete").format("memory").queryName(name).start()
+      try q.processAllAvailable() finally q.stop()
+    }(_.orderBy("n_name"))
   }
 
   /** s13 engine: run the per-type aggregation as TWO query incarnations
@@ -352,19 +333,16 @@ object StreamingQueries {
     try {
       val n1 = s"graft_s13a_${System.nanoTime()}"
       val q1 = incarnation(n1)
-      try { land(0); q1.processAllAvailable() } finally q1.stop()
+      try { land(0); q1.processAllAvailable() }
+      finally { q1.stop(); s.catalog.dropTempView(n1) }
       val in1 = q1.recentProgress.map(_.numInputRows).sum
-      s.catalog.dropTempView(n1)
-      val n2 = s"graft_s13b_${System.nanoTime()}"
-      val q2 = incarnation(n2) // SAME checkpoint: state restores, offsets resume
-      try { land(1); q2.processAllAvailable() } finally q2.stop()
-      val in2 = q2.recentProgress.map(_.numInputRows).sum
-      val out = s.table(n2).orderBy("event_type")
-      try {
-        val rows = out.collect().toSeq
-        (s.createDataFrame(s.sparkContext.parallelize(rows, 1), out.schema),
-          Seq(in1, in2))
-      } finally s.catalog.dropTempView(n2)
+      var in2 = 0L
+      val out = drainMemory(s, "graft_s13b") { n2 =>
+        val q2 = incarnation(n2) // SAME checkpoint: state restores, offsets resume
+        try { land(1); q2.processAllAvailable() } finally q2.stop()
+        in2 = q2.recentProgress.map(_.numInputRows).sum
+      }(_.orderBy("event_type"))
+      (out, Seq(in1, in2))
     } finally graft.sources.SourceSinks.deleteDir(dir)
   }
 
@@ -382,7 +360,8 @@ object StreamingQueries {
   // batch-side exactly like a real system trains on history) BROADCAST
   // against a live windowed aggregation, z-scored per closing window.
   // The stream is s05's real Structured-Streaming tumbling aggregation
-  // (1-hour watermark, update-mode memory sink, final-update per window);
+  // (1-hour watermark, update-mode rows merged into a keyed store, the
+  // final update per window);
   // the baseline join is stream-static-broadcast (s12's shape), so state
   // stays bounded by open windows and the model never shuffles. The
   // anomaly predicate fires on the ROUNDED z (both engines agree on the
@@ -392,18 +371,7 @@ object StreamingQueries {
     val baseline = tumblingAgg(Tables.events(s, d), distinctUsers = false)
       .groupBy(col("event_type"))
       .agg(avg(col("n")).as("mu"), stddev_samp(col("n")).as("sigma"))
-    val raw = Tables.load(s, d, "events")
-    val stream = s.readStream.schema(raw.schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(d)
-      .transform(graft.Tables.normalizeEventsTs)
-    val name = s"graft_anomaly_${System.nanoTime()}"
-    val q = tumblingAgg(stream.withWatermark("ts", "1 hour"), distinctUsers = false)
-      .writeStream.outputMode("update").format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    s.table(name)
-      .groupBy(col("window_start_us"), col("event_type"))
-      .agg(max_by(col("n"), col("n")).as("n"))
+    s05_watermark_agg(s, d)
       .join(broadcast(baseline), Seq("event_type"))
       .withColumn("z", round((col("n") - col("mu")) / col("sigma"), 4))
       .withColumn("is_anomaly", (abs(col("z")) > 2.0).cast("int"))
@@ -445,35 +413,30 @@ object StreamingQueries {
       col("user_id") === col("c_user") &&
         col("c_ts") >= col("p_ts") - expr("INTERVAL 30 MINUTES") &&
         col("c_ts") < col("p_ts"), "left_outer")
-    val name = s"graft_s21_${System.nanoTime()}"
-    val q = joined.writeStream.outputMode("append")
-      .format("memory").queryName(name).start()
-    try {
-      graft.sources.SourceSinks.landSingleParquet(evs, data.resolve("b0.parquet"))
-      q.processAllAvailable()
-      val sentinel = evs.agg(max("ts").as("mts")).select(
-        lit(-1L).as("event_id"), lit(-1L).as("user_id"),
-        lit("click").as("event_type"),
-        (col("mts") + expr("INTERVAL 3 HOURS")).as("ts"), lit(0.0).as("value"))
-        .union(evs.agg(max("ts").as("mts")).select(
-          lit(-2L).as("event_id"), lit(-1L).as("user_id"),
-          lit("purchase").as("event_type"),
-          (col("mts") + expr("INTERVAL 3 HOURS")).as("ts"), lit(0.0).as("value")))
-      graft.sources.SourceSinks.landSingleParquet(sentinel, data.resolve("b1.parquet"))
-      q.processAllAvailable()
-      val out = s.table(name)
-        .filter(col("user_id") =!= -1L)
+    try drainMemory(s, "graft_s21") { name =>
+      val q = joined.writeStream.outputMode("append")
+        .format("memory").queryName(name).start()
+      try {
+        graft.sources.SourceSinks.landSingleParquet(evs, data.resolve("b0.parquet"))
+        q.processAllAvailable()
+        val sentinel = evs.agg(max("ts").as("mts")).select(
+          lit(-1L).as("event_id"), lit(-1L).as("user_id"),
+          lit("click").as("event_type"),
+          (col("mts") + expr("INTERVAL 3 HOURS")).as("ts"), lit(0.0).as("value"))
+          .union(evs.agg(max("ts").as("mts")).select(
+            lit(-2L).as("event_id"), lit(-1L).as("user_id"),
+            lit("purchase").as("event_type"),
+            (col("mts") + expr("INTERVAL 3 HOURS")).as("ts"), lit(0.0).as("value")))
+        graft.sources.SourceSinks.landSingleParquet(sentinel, data.resolve("b1.parquet"))
+        q.processAllAvailable()
+      } finally q.stop()
+    } {
+      _.filter(col("user_id") =!= -1L)
         .groupBy(col("event_id"))
         .agg(count(col("c_user")).as("n_clicks_30m"),
           round(sum("c_value"), 2).as("click_value"))
         .orderBy("event_id")
-      val rows = out.collect().toSeq
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), out.schema)
-    } finally {
-      q.stop()
-      s.catalog.dropTempView(name)
-      graft.sources.SourceSinks.deleteDir(dir)
-    }
+    } finally graft.sources.SourceSinks.deleteDir(dir)
   }
 
   // s22: STREAMING CUSUM change-point — q55's streaming twin (the 9th
@@ -1367,171 +1330,6 @@ object StreamingQueries {
     }
   }
 
-  /** Committed compacted-state versions under a harness state dir,
-    * ascending. A version counts as committed iff its parquet
-    * `_SUCCESS` marker exists — the marker is the commit record, and
-    * retirement deletes it FIRST, so a crash mid-delete can never leave
-    * a half-deleted dir that still looks committed.
-    */
-  private def committedStates(
-      snapDir: java.nio.file.Path): Seq[(Long, java.nio.file.Path)] = {
-    val st = java.nio.file.Files.list(snapDir)
-    try {
-      import scala.jdk.CollectionConverters._
-      st.iterator().asScala.toSeq
-        .filter(p => p.getFileName.toString.startsWith("state_v") &&
-          java.nio.file.Files.exists(p.resolve("_SUCCESS")))
-        .map(p => (p.getFileName.toString.stripPrefix("state_v").toLong, p))
-        .sortBy(_._1)
-    } finally st.close()
-  }
-
-  /** Default hash-bucket count for a harness state dir. Each key
-    * lives in bucket `pmod(hash(keys), B)`; a micro-batch rewrites ONLY
-    * the buckets its keys hash into, so per-trigger write volume is
-    * O(keys in touched buckets), never O(key space). 16 fits the small
-    * bounded test axes; sf-proportional lanes size B from their key
-    * cardinality via `sizedSnapshotBuckets` (round-14 verdict residual).
-    */
-  val snapshotBuckets = 16
-
-  /** Production sizing rule for a harness bucket count:
-    * B ≈ key_space / targetKeysPerBucket, exactly like table bucketing,
-    * clamped to [snapshotBuckets, 4096] — the floor keeps small test
-    * axes on a meaningful multi-bucket layout, the cap bounds the
-    * state-dir fan-out (4096 dirs × target keys each covers a 2M-key
-    * axis at the default; raise the target, not the cap, beyond that).
-    * With B sized this way a touched bucket rewrites
-    * O(targetKeysPerBucket) rows REGARDLESS of key-space scale, so a
-    * 1-key micro-batch costs ⌈keys/B⌉ + batch rows, never O(key space)
-    * — the contract the single-key-batch spec pins.
-    */
-  def sizedSnapshotBuckets(keySpace: Long,
-      targetKeysPerBucket: Long = 512): Int = {
-    require(targetKeysPerBucket > 0, "targetKeysPerBucket must be positive")
-    val b = (keySpace + targetKeysPerBucket - 1) / targetKeysPerBucket
-    math.max(snapshotBuckets.toLong, math.min(4096L, b)).toInt
-  }
-
-  /** A row's bucket: `pmod(hash(keys), B)`, or bucket 0 for a key-less
-    * (global) panel, whose one row always lands in the same bucket.
-    */
-  private def bucketOf(keys: Seq[String], buckets: Int): Column =
-    if (keys.isEmpty) lit(0) else pmod(hash(keys.map(col): _*), lit(buckets))
-
-  /** Latest committed state version per bucket under a bucketed
-    * harness state dir, strictly below `below` (batchId-keyed
-    * replay base). Buckets never touched by any batch have no dir and
-    * are simply absent — an absent bucket holds no keys.
-    */
-  private[graft] def latestBucketStates(
-      snapDir: java.nio.file.Path, below: Long = Long.MaxValue,
-      buckets: Int = snapshotBuckets)
-      : Seq[(Int, Long, java.nio.file.Path)] =
-    (0 until buckets).flatMap { b =>
-      val bd = snapDir.resolve(f"bkt_$b%02d")
-      if (!java.nio.file.Files.isDirectory(bd)) Nil
-      else committedStates(bd).filter(_._1 < below).lastOption
-        .map { case (v, p) => (b, v, p) }
-    }
-
-  /** The current compacted panel: the union of each bucket's latest
-    * committed state (one row per touched key). Used by the harness
-    * readout and by the scratch-bound / prefix-consistency specs.
-    */
-  private[graft] def snapshotPanel(ss: SparkSession,
-      snapDir: java.nio.file.Path,
-      buckets: Int = snapshotBuckets): DataFrame =
-    ss.read.parquet(
-      latestBucketStates(snapDir, buckets = buckets).map(_._3.toString): _*)
-
-  /** One micro-batch of the INCREMENTAL snapshot compaction: merge the
-    * batch's rows into the previous committed state of ONLY the hash
-    * buckets the batch touches (the latest row per `keys` wins by
-    * `ord`, which strictly increases across a key's successive
-    * emissions — an update-mode aggregate's `n = count(*)` or a
-    * stateful fold's `seq`), land all touched buckets in ONE
-    * partitioned write, and commit each bucket by moving its partition
-    * dir to a batchId-versioned state dir and creating its `_SUCCESS`
-    * marker (the move-then-mark is the per-bucket commit point).
-    * Untouched buckets are never listed, read, or written — their
-    * files stay byte-identical across the trigger (spec-pinned), which
-    * is what makes a small batch cost O(batch + touched-bucket keys)
-    * instead of a key-space-sized rewrite (round-13 verdict item 1).
-    *
-    * Replay discipline is per bucket: the merge base is that bucket's
-    * highest COMMITTED version strictly below the current batchId, so a
-    * replayed micro-batch re-merges against the true pre-batch state
-    * and overwrite-rewrites its own version — batchId-keyed
-    * idempotency under at-least-once foreachBatch semantics. A crash
-    * between bucket commits leaves some buckets committed at this
-    * batchId and some not; the replay rebuilds both identically
-    * (committed ones are excluded from their own base by the `<
-    * batchId` filter). Retirement keeps the bucket's MERGE BASE
-    * alongside the new version (≤2 committed versions per bucket) and
-    * deletes only versions older than the base, `_SUCCESS` first —
-    * deleting the base itself would strand a replay of this batchId
-    * with no pre-batch state and silently drop every key the batch
-    * did not touch (caught by the replay-idempotency spec; the
-    * engine never replays batch k once k+1 has started, so the
-    * immediate predecessor is exactly the retention replay needs).
-    */
-  private[graft] def mergeSnapshotBatch(snapDir: java.nio.file.Path,
-      keys: Seq[String], batchId: Long, df: DataFrame,
-      buckets: Int = snapshotBuckets, ord: String = "n"): Unit = {
-    val ss = df.sparkSession
-    val valNames = df.columns.filterNot(keys.contains).toSeq
-    val bdf = df
-      .withColumn("_bkt", bucketOf(keys, buckets))
-      .persist() // reused for the touched-bucket probe and the merge
-    try {
-      val touched = bdf.select("_bkt").distinct()
-        .collect().map(_.getInt(0)).sorted // bounded by `buckets`
-      val baseStates = latestBucketStates(snapDir, below = batchId, buckets)
-        .filter { case (b, _, _) => touched.contains(b) }
-      val baseVersion = baseStates
-        .map { case (b, v, _) => b -> v }.toMap
-      // ONE multi-path read of every touched bucket's base: a per-path
-      // union would hand Catalyst a B-ary left-deep plan whose analysis
-      // is superlinear in B — with sized bucket counts (≤4096) the
-      // driver spun for minutes in the analyzer (caught by the r15 sf5
-      // multi-JVM gate). _bkt recomputes from the keys — the same
-      // deterministic bucketOf that routed the rows at write time.
-      val base =
-        if (baseStates.isEmpty) None
-        else Some(ss.read.parquet(baseStates.map(_._3.toString): _*)
-          .withColumn("_bkt", bucketOf(keys, buckets)))
-      val merged = base.fold(bdf: DataFrame)(bdf.unionByName(_))
-        .groupBy(("_bkt" +: keys).map(col): _*)
-        .agg(max_by(struct(valNames.map(col): _*), col(ord)).as("st"))
-        .select(col("_bkt") +: (keys.map(col) ++
-          valNames.map(v => col("st." + v).as(v))): _*)
-      val tmp = snapDir.resolve(f"inflight_v$batchId%05d")
-      if (java.nio.file.Files.exists(tmp)) // crashed prior attempt
-        graft.sources.SourceSinks.deleteDir(tmp)
-      merged.write.partitionBy("_bkt").mode("overwrite")
-        .parquet(tmp.toString)
-      touched.foreach { b =>
-        val bd = snapDir.resolve(f"bkt_$b%02d")
-        java.nio.file.Files.createDirectories(bd)
-        val dst = bd.resolve(f"state_v$batchId%05d")
-        if (java.nio.file.Files.exists(dst)) // uncommitted leftover
-          graft.sources.SourceSinks.deleteDir(dst)
-        java.nio.file.Files.move(tmp.resolve(s"_bkt=$b"), dst)
-        java.nio.file.Files.createFile(dst.resolve("_SUCCESS")) // commit
-        // keep the merge base (replay of THIS batchId re-merges against
-        // it); retire everything older
-        committedStates(bd)
-          .filter(_._1 < baseVersion.getOrElse(b, batchId))
-          .foreach { case (_, p) =>
-            java.nio.file.Files.deleteIfExists(p.resolve("_SUCCESS"))
-            graft.sources.SourceSinks.deleteDir(p)
-          }
-      }
-      graft.sources.SourceSinks.deleteDir(tmp)
-    } finally bdf.unpersist()
-  }
-
   /** `feed` cut into `n` parts by `pmod(shard, n)`: adversarial,
     * non-chronological delivery for a commutative fold.
     */
@@ -1551,6 +1349,25 @@ object StreamingQueries {
     }
   }
 
+  /** Runs the update-mode `stream` to its end into a scratch
+    * [[KeyedStore]] (keys `keys`, ord `ord`, `buckets` buckets) and
+    * returns `readout(panel)` materialized (`localCheckpoint`) before the
+    * scratch goes; `readout` must return a BOUNDED frame. `probe`, when
+    * given, runs after the stream stops with (session, store dir, number
+    * of committed batches).
+    */
+  private def drainToStore(s: SparkSession, stream: DataFrame, keys: Seq[String],
+      ord: String, probe: (SparkSession, java.nio.file.Path, Long) => Unit = null,
+      buckets: Int = KeyedStore.DefaultBuckets)(
+      readout: DataFrame => DataFrame): DataFrame =
+    KeyedStore.scratch(s, keys, ord, buckets) { store =>
+      val q = store.sink(stream).start()
+      try q.processAllAvailable() finally q.stop()
+      val panel = store.panel
+      if (probe != null) probe(s, store.dir, store.lastBatch + 1)
+      readout(panel).localCheckpoint(true)
+    }
+
   /** The streaming-twin harness: every batch↔streaming twin lands,
     * streams and compacts through it.
     *
@@ -1559,24 +1376,17 @@ object StreamingQueries {
     *     stateful `build` (an update-mode aggregation, or a
     *     `[flat]MapGroupsWithState` fold and whatever stateless
     *     projection follows it);
-    *  3. merges each micro-batch's emissions into a hash-bucketed,
-    *     batchId-versioned parquet store with `mergeSnapshotBatch`,
-    *     keeping the latest row per `keys` by `ord`;
-    *  4. materializes `readout(panel)` — the panel is the store's
-    *     current rows — eagerly (`localCheckpoint`) before it deletes
-    *     its scratch dirs; `readout` must return a BOUNDED frame.
+    *  3. merges each micro-batch's emissions into a [[KeyedStore]],
+    *     keeping the latest row per `keys` by `ord` (`drainToStore`);
+    *  4. materializes `readout(panel)` before it deletes its scratch.
     *
-    * Store contract. `ord` must strictly increase across the
-    * successive emissions of one key: an aggregate's `n = count(*)`, a
-    * fold's `seq`. `keys = Nil` keeps one global row (a whole-series
-    * fold); keying by (key, `seq`) keeps every emission (the engines'
-    * full logs). The panel then holds at most one row per key, so
-    * scratch is bounded by the KEY SPACE, not by the trigger count
-    * (round-12 item), and a trigger rewrites only the buckets its rows
-    * hash into (round-13 item). A micro-batch replayed under
-    * at-least-once delivery re-merges against the bucket's pre-batch
-    * version, so the store is exactly-once per batchId — the
-    * `foreachBatch` + committed-store sink of Structured Streaming.
+    * `ord` must strictly increase across the successive emissions of one
+    * key: an aggregate's `n = count(*)`, a fold's `seq`. `keys = Nil`
+    * keeps one global row (a whole-series fold); keying by (key, `seq`)
+    * keeps every emission (the engines' full logs). The store holds at
+    * most one row per key, so scratch is bounded by the KEY SPACE, not by
+    * the trigger count, and a trigger rewrites only the buckets its rows
+    * hash into.
     *
     * There is no memory sink. It appends every trigger's emission to
     * driver heap and keeps it under a temp view for the life of the
@@ -1584,48 +1394,27 @@ object StreamingQueries {
     * run in round 10, and a twin that forgot to drop its view leaked
     * it for good.
     *
-    * The state scratch is a SIBLING temp dir, never inside the
-    * monitored source dir (which is read with recursiveFileLookup
-    * precisely so that nesting scratch back inside it would fail the
-    * gates loudly instead of depending on non-recursive listing
-    * semantics). `probe`, when given, runs after the stream stops with
-    * (session, state ROOT dir, number of committed batches) — read the
-    * panel with `snapshotPanel` — the scratch-bound spec uses it to
-    * assert rows ≤ key space after ≥8 triggers.
+    * The store is a SIBLING temp dir, never inside the monitored source
+    * dir (which is read with recursiveFileLookup precisely so that
+    * nesting scratch back inside it would fail the gates loudly instead
+    * of depending on non-recursive listing semantics). The scratch-bound
+    * spec's `probe` asserts rows ≤ key space after ≥8 triggers.
     */
   def streamTwin(s: SparkSession, parts: Seq[DataFrame], keys: Seq[String],
       ord: String, probe: (SparkSession, java.nio.file.Path, Long) => Unit = null,
-      buckets: Int = snapshotBuckets)(build: DataFrame => DataFrame)(
+      buckets: Int = KeyedStore.DefaultBuckets)(build: DataFrame => DataFrame)(
       readout: DataFrame => DataFrame): DataFrame = {
     val dir = java.nio.file.Files.createTempDirectory("graft_twin")
-    val snapDir = java.nio.file.Files.createTempDirectory("graft_twin_state")
     try {
       parts.zipWithIndex.foreach { case (p, i) =>
         graft.sources.SourceSinks.landSingleParquet(p, dir.resolve(f"b$i%02d.parquet"))
       }
-      val q = build(s.readStream
+      drainToStore(s, build(s.readStream
           .schema(org.apache.spark.sql.types.StructType(parts.head.schema.fields))
           .option("recursiveFileLookup", "true") // pins sibling scratch
-          .option("maxFilesPerTrigger", "1").parquet(dir.toString))
-        .writeStream.outputMode("update")
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          // runs on the driver, sequentially per batch
-          mergeSnapshotBatch(snapDir, keys, batchId, df, buckets, ord)
-        }.start()
-      try q.processAllAvailable() finally q.stop()
-      val states = latestBucketStates(snapDir, buckets = buckets)
-      // an empty feed commits no bucket: fail loudly rather than let
-      // max-of-empty / a zero-path parquet read surface as an
-      // unrelated schema-inference error (ADVICE r14)
-      require(states.nonEmpty,
-        s"streamTwin: no committed snapshot state under $snapDir — " +
-          "the feed produced no micro-batch")
-      if (probe != null) probe(s, snapDir, states.map(_._2).max + 1)
-      readout(snapshotPanel(s, snapDir, buckets)).localCheckpoint(true)
-    } finally {
-      graft.sources.SourceSinks.deleteDir(dir)
-      graft.sources.SourceSinks.deleteDir(snapDir)
-    }
+          .option("maxFilesPerTrigger", "1").parquet(dir.toString)),
+        keys, ord, probe, buckets)(readout)
+    } finally graft.sources.SourceSinks.deleteDir(dir)
   }
 
   /** The aggregate case of `streamTwin`: an update-mode keyed
@@ -1637,7 +1426,7 @@ object StreamingQueries {
   def snapshotTwin(s: SparkSession, feed: DataFrame, shard: Column,
       keys: Seq[String], aggs: Seq[Column], nShards: Int = 4,
       probe: (SparkSession, java.nio.file.Path, Long) => Unit = null,
-      buckets: Int = snapshotBuckets)(
+      buckets: Int = KeyedStore.DefaultBuckets)(
       readout: DataFrame => DataFrame): DataFrame = {
     val all = aggs :+ count(lit(1)).as("n")
     streamTwin(s, shards(feed, shard, nShards), keys, "n", probe, buckets)(
@@ -1662,7 +1451,7 @@ object StreamingQueries {
     // (the dimension count is a parquet-metadata read, not a feed scan)
     snapshotTwin(s, feed, col("l_orderkey"), Seq("l_partkey", "yr"),
       Seq(sum("cents").as("c"), sum("l_quantity").as("q")),
-      buckets = sizedSnapshotBuckets(Tables.part(s, d).count() * 7)) { panel =>
+      buckets = KeyedStore.sizedBuckets(Tables.part(s, d).count() * 7)) { panel =>
       graft.ops.Relational.priceIndexReadout(
         panel.select(col("l_partkey"), col("yr"), col("c"), col("q")))
     }
@@ -1719,7 +1508,7 @@ object StreamingQueries {
     snapshotTwin(s, feed, col("o_orderkey"), Seq("o_custkey", "qtr"),
       Seq(sum("cents").as("cents")),
       buckets =
-        sizedSnapshotBuckets(Tables.customer(s, d).count() * 28)) { panel =>
+        KeyedStore.sizedBuckets(Tables.customer(s, d).count() * 28)) { panel =>
       // bounded cohort×age readout over the compacted panel
       graft.ops.Relational.cohortLtvReadout(
         panel.select(col("o_custkey"), col("qtr"), col("cents")))
@@ -1744,7 +1533,7 @@ object StreamingQueries {
       Seq(expr("bit_or(shiftleft(1L, cast(pmod(lsn_long, 3) as int)))")
         .as("mask"), max("lsn_long").as("max_lsn")),
       buckets =
-        sizedSnapshotBuckets(Tables.customer(s, d).count())) { panel =>
+        KeyedStore.sizedBuckets(Tables.customer(s, d).count())) { panel =>
       // 3-row readout (c48's) over the compacted per-key panel
       panel
         .select(col("user_id"), bit_count(col("mask")).as("n_pubs"),
@@ -1803,7 +1592,7 @@ object StreamingQueries {
     // key space = the part dimension
     snapshotTwin(s, feed, col("l_orderkey"), Seq("l_partkey"),
       Seq(sum("cents").as("rc")),
-      buckets = sizedSnapshotBuckets(Tables.part(s, d).count())) { panel =>
+      buckets = KeyedStore.sizedBuckets(Tables.part(s, d).count())) { panel =>
       // ≤3-row readout; the compacted panel is one small parquet scan,
       // cheap for abcReadout's stats pass + scored plan (no persist)
       graft.ops.Relational.abcReadout(
@@ -1827,7 +1616,7 @@ object StreamingQueries {
     snapshotTwin(s, feed, col("o_orderkey"), Seq("yr", "o_custkey"),
       Seq(sum("cents").as("cents")),
       buckets =
-        sizedSnapshotBuckets(Tables.customer(s, d).count() * 7)) { panel =>
+        KeyedStore.sizedBuckets(Tables.customer(s, d).count() * 7)) { panel =>
       // |years|-row readout; compacted panel = one small scan, so the
       // bucket stats pass + ranked plan re-read it cheaply (no persist)
       graft.ops.Relational.paretoDriftReadout(
@@ -1850,7 +1639,7 @@ object StreamingQueries {
     snapshotTwin(s, feed, col("o_custkey"), Seq("o_custkey"),
       Seq(sum("cents").as("cents")),
       buckets =
-        sizedSnapshotBuckets(Tables.customer(s, d).count())) { panel =>
+        KeyedStore.sizedBuckets(Tables.customer(s, d).count())) { panel =>
       graft.ops.Relational.giniReadout(panel.select(col("cents")))
     }
   }
@@ -1896,7 +1685,7 @@ object StreamingQueries {
     snapshotTwin(s, feed, col("o_custkey"), Seq("o_custkey"),
       Seq(sum("xp").as("x")),
       buckets =
-        sizedSnapshotBuckets(Tables.customer(s, d).count())) { panel =>
+        KeyedStore.sizedBuckets(Tables.customer(s, d).count())) { panel =>
       graft.ops.Relational.theilReadout(s, d,
         panel.select(col("o_custkey"), col("x")))
     }

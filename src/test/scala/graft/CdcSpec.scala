@@ -125,7 +125,8 @@ class CdcSpec extends AnyFunSuite {
     // truncates is invisible (the pre-r13 defect the c04-oracle
     // conversion caught at sf1). Plant the last truncate near the END
     // of a small log so it actually wipes keys, and pin both engines.
-    val dir = java.nio.file.Files.createTempDirectory("graft_c13t")
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("graft_c13t")
     try {
       // remap event_ids: 900 → 5004 (a % 5003 == 1 truncate, late in
       // lsn order), 990+ → +5010 (a small post-truncate tail)
@@ -135,9 +136,21 @@ class CdcSpec extends AnyFunSuite {
           when(col("event_id") === 900, lit(5004L))
             .when(col("event_id") >= 990, col("event_id") + 5010)
             .otherwise(col("event_id")))
+      // "one": the log as one file, one micro-batch. "two": the log
+      // before the truncate, then the truncate and its tail in a later
+      // file, read through the glob two/{a,b}, so the horizon row
+      // reaches the store a merge after the rows it cuts
+      Seq("one", "two/a", "two/b").foreach(p => Files.createDirectories(dir.resolve(p)))
       graft.sources.SourceSinks.landSingleParquet(
-        ev, dir.resolve("events.parquet"))
-      val landed = spark.read.parquet(dir.resolve("events.parquet").toString)
+        ev, dir.resolve("one/events.parquet"))
+      graft.sources.SourceSinks.landSingleParquet(
+        ev.filter(col("event_id") < 5000), dir.resolve("two/a/events.parquet"))
+      val late = dir.resolve("two/b/events.parquet")
+      graft.sources.SourceSinks.landSingleParquet(ev.filter(col("event_id") >= 5000), late)
+      // the stream takes files in modification order
+      Files.setLastModifiedTime(late, java.nio.file.attribute.FileTime.fromMillis(
+        Files.getLastModifiedTime(dir.resolve("two/a/events.parquet")).toMillis + 60000))
+      val landed = spark.read.parquet(dir.resolve("one/events.parquet").toString)
       val batch = Apply.latest(Envelope.flat(landed))
         .select(col("pk"), round(col("last_value"), 2).as("value"),
           col("last_ord"))
@@ -147,11 +160,28 @@ class CdcSpec extends AnyFunSuite {
         .collect().length
       assert(batch.size < noTrunc,
         "the planted truncate must actually wipe keys for this test to bite")
-      val streamed = StreamApply
-        .run(spark, dir.toString, s"apply_trunc_${System.nanoTime()}")
-        .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSet
-      assert(streamed == batch,
-        "streamed state must honor the truncate horizon exactly")
+      Seq("one", "two").foreach { layout =>
+        val path = if (layout == "one") s"$dir/one" else s"$dir/two/{a,b}"
+        val out = StreamApply.run(spark, path, s"apply_trunc_${System.nanoTime()}")
+        val streamed = out.collect()
+          .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSet
+        assert(streamed == batch,
+          s"$layout: streamed state must honor the truncate horizon exactly")
+        // the store committed a batch 1 iff the log ran as two micro-batches
+        assert(out.inputFiles.exists(_.contains("state_v00001")) == (layout == "two"),
+          s"$layout: micro-batches ${out.inputFiles.toSeq}")
+      }
+    } finally graft.sources.SourceSinks.deleteDir(dir)
+  }
+
+  test("streaming apply over an empty log returns an empty replica") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_c13e")
+    try {
+      graft.sources.SourceSinks.landSingleParquet(
+        Tables.load(spark, sf, "events").limit(0), dir.resolve("events.parquet"))
+      val out = StreamApply.run(spark, dir.toString, s"apply_empty_${System.nanoTime()}")
+      assert(out.columns.toSeq == Seq("pk", "value", "last_ord"))
+      assert(out.count() == 0)
     } finally graft.sources.SourceSinks.deleteDir(dir)
   }
 
@@ -893,12 +923,46 @@ class CdcSpec extends AnyFunSuite {
     val want = CdcQueries.c04_apply_latest(spark, sf).collect().map(_.toString).toSeq
     assert(got == want, s"streamed replay diverged from direct apply " +
       s"(got ${got.length} rows, want ${want.length})")
-    // committing a state version deletes every older one: the replica's
-    // own version is the only one left
-    val durable = java.nio.file.Paths.get(new java.net.URI(df.inputFiles.head))
-      .getParent.getParent
-    val versions = durable.toFile.list().filter(_.startsWith("state_v")).toSeq
-    assert(versions.length == 1, s"state versions left: $versions")
+    // committing a version retires every one older than its merge base:
+    // each bucket keeps at most its base and its latest version, and of
+    // the 1 + nBatches committed positions only the last two are left
+    val store = java.nio.file.Paths.get(new java.net.URI(df.inputFiles.head))
+      .getParent.getParent.getParent
+    val buckets = store.toFile.listFiles().filter(_.getName.startsWith("bkt_"))
+    assert(buckets.nonEmpty)
+    buckets.foreach { b =>
+      val versions = b.list().filter(_.startsWith("state_v")).toSeq
+      assert(versions.length <= 2, s"${b.getName} versions left: $versions")
+    }
+    val positions = store.toFile.list().filter(_.startsWith("position_v")).toSeq
+    assert(positions.length == 2, s"positions left: $positions")
+  }
+
+  test("s15 poll: replaying a batch id leaves the replica and its position unchanged") {
+    // the s15 poll step over the same WAL read as a frame instead of
+    // through JDBC: snapshot as store batch 0, then the four tail polls
+    val flat = Envelope.flat(Tables.events(spark, sf))
+      .select("lsn_long", "op", "pk_before", "pk_after", "after_value")
+    val b = flat.agg(min("lsn_long"), max("lsn_long")).head()
+    val snapLsn = Polls.snapshotCut(b.getLong(0), b.getLong(1))
+    val his = snapLsn +: Polls.ranges(snapLsn, b.getLong(1), 4).map(_._2)
+    val pull = (lo: Long, hi: Long) =>
+      flat.filter(col("lsn_long") > lo && col("lsn_long") <= hi)
+    val dir = java.nio.file.Files.createTempDirectory("graft_s15replay")
+    try {
+      val store = KeyedStore.open(spark, dir, Seq("pk"), "last_ord")
+      def replica() = StreamApply.replica(store.panel).collect().map(_.toString).toSeq
+      (0 to 2).foreach(i => JdbcSource.poll(store, i, Seq(his(i)), pull))
+      val (before, pos) = (replica(), store.position())
+      // at-least-once delivery hands batch 2 over again
+      assert(JdbcSource.poll(store, 2, Seq(his(2)), pull) == his(1),
+        "a replay resumes from the position committed before it")
+      assert(replica() == before, "a replayed batch id must leave the replica unchanged")
+      assert(store.position() == pos)
+      (3 until his.length).foreach(i => JdbcSource.poll(store, i, Seq(his(i)), pull))
+      assert(replica() ==
+        CdcQueries.c04_apply_latest(spark, sf).collect().map(_.toString).toSeq)
+    } finally graft.sources.SourceSinks.deleteDir(dir)
   }
 
   test("c39 jdbc evolution: ALTER mid-stream, mixed writers resolve to latest") {

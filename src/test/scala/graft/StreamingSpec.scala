@@ -361,23 +361,31 @@ class StreamingSpec extends AnyFunSuite {
     got.foreach(r => assert(r(1).asInstanceOf[Long] <= nSup))
   }
 
-  test("a streaming twin leaves no temp view, active query or scratch dir behind") {
-    // one keyed engine, one global fold, one exploded-array fold, one
-    // former driver map and one aggregate twin
-    // the harness's scratch prefix: other test JVMs share the temp dir
-    // and keep graft_* dirs of other lanes until they exit (x21's)
+  test("a streaming lane leaves no temp view, active query or scratch dir behind") {
+    // twins: one keyed engine, one global fold, one exploded-array fold,
+    // one former driver map and one aggregate twin; then the update-mode
+    // store lanes, the memory-sink lanes and the streaming apply
+    // the scratch prefixes of the twin harness and the store: other test
+    // JVMs share the temp dir and keep graft_* dirs of other lanes until
+    // they exit (x21's). c13's replica store backs its returned frame
+    // and lives until the JVM exits, as c33's and s15's replicas do.
     val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
     def scratch(): Set[String] =
       Option(tmp.listFiles()).toSeq.flatten
-        .filter(f => f.isDirectory && f.getName.startsWith("graft_twin"))
+        .filter(f => f.isDirectory &&
+          Seq("graft_twin", "graft_store").exists(f.getName.startsWith))
         .map(_.getName).toSet
     def views(): Set[String] =
       spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+    val lanes = StreamingQueries.queries ++
+      Map("c13_stream_apply" -> cdc.CdcQueries.c13_stream_apply)
     Seq("s24_stream_funnel", "s30_stream_benford", "s35_stream_balance",
-      "s22_stream_cusum", "s44_stream_abc").foreach { lane =>
+      "s22_stream_cusum", "s44_stream_abc", "s05_watermark_agg",
+      "s08_stream_stream_join", "s09_stateful_counter", "s18_stream_anomaly",
+      "c13_stream_apply").foreach { lane =>
       val (views0, scratch0) = (views(), scratch())
       assert(spark.streams.active.isEmpty)
-      assert(StreamingQueries.queries(lane)(spark, sf).collect().nonEmpty)
+      assert(lanes(lane)(spark, sf).collect().nonEmpty)
       assert(views() == views0, s"$lane left temp views ${views() -- views0}")
       assert(spark.streams.active.isEmpty,
         s"$lane left active queries ${spark.streams.active.map(_.name).toSeq}")
@@ -410,7 +418,8 @@ class StreamingSpec extends AnyFunSuite {
       probe = (ss, stateRoot, nBatches) => {
         assert(nBatches >= 8,
           s"8 shards at one file per trigger must run ≥8 batches, got $nBatches")
-        val scratchRows = StreamingQueries.snapshotPanel(ss, stateRoot).count()
+        val scratchRows = KeyedStore.open(ss, stateRoot, Seq("l_partkey"), "n")
+          .panel.count()
         assert(scratchRows <= keySpace,
           s"compacted scratch ($scratchRows rows) must be bounded by the " +
             s"key space ($keySpace), not by trigger count")
@@ -434,6 +443,7 @@ class StreamingSpec extends AnyFunSuite {
     // byte-identical on disk, (b) rewrite no more rows than the touched
     // buckets hold, and (c) stay batchId-idempotent per bucket.
     val snapDir = java.nio.file.Files.createTempDirectory("graft_bktspec")
+    val store = KeyedStore.open(spark, snapDir, Seq("k"), "n")
     def fingerprints(): Map[String, String] = {
       val st = java.nio.file.Files.walk(snapDir)
       try {
@@ -450,14 +460,14 @@ class StreamingSpec extends AnyFunSuite {
       val nKeys = 200
       val b0 = (0 until nKeys).map(k => (k.toLong, k * 10L, 1L))
         .toDF("k", "v", "n")
-      StreamingQueries.mergeSnapshotBatch(snapDir, Seq("k"), 0L, b0)
+      store.merge(0L, b0)
       val before = fingerprints()
       // batch 1 updates a single key — exactly one touched bucket
       val oneKey = 7L
       val b1 = Seq((oneKey, 999L, 2L)).toDF("k", "v", "n")
-      StreamingQueries.mergeSnapshotBatch(snapDir, Seq("k"), 1L, b1)
+      store.merge(1L, b1)
       val after = fingerprints()
-      val nB = StreamingQueries.snapshotBuckets
+      val nB = KeyedStore.DefaultBuckets
       val bkt = b1.select(pmod(hash(col("k")), lit(nB))).head.getInt(0)
       val touchedPrefix = f"bkt_$bkt%02d"
       // (a) untouched buckets: identical file set, identical bytes
@@ -481,9 +491,8 @@ class StreamingSpec extends AnyFunSuite {
       assert(rewritten.filter(col("k") === oneKey)
         .select("v").head.getLong(0) == 999L)
       // (c) at-least-once replay of batch 1 is idempotent
-      StreamingQueries.mergeSnapshotBatch(snapDir, Seq("k"), 1L, b1)
-      val panel = StreamingQueries.snapshotPanel(spark, snapDir)
-        .collect().map(_.toSeq).toSet
+      store.merge(1L, b1)
+      val panel = store.panel.collect().map(_.toSeq).toSet
       val expect = (0 until nKeys).map(k =>
         if (k.toLong == oneKey) Seq[Any](oneKey, 999L, 2L)
         else Seq[Any](k.toLong, k * 10L, 1L)).toSet
@@ -523,6 +532,7 @@ class StreamingSpec extends AnyFunSuite {
       .withColumn("_shard", pmod(col("l_orderkey"), lit(nShards)))
       .persist()
     val snapDir = java.nio.file.Files.createTempDirectory("graft_prefixspec")
+    val store = KeyedStore.open(spark, snapDir, Seq("e", "r"), "n")
     try {
       (0 until nShards).foreach { k =>
         val sofar = feed.filter(col("_shard") <= k)
@@ -530,11 +540,9 @@ class StreamingSpec extends AnyFunSuite {
           .agg(count(lit(1)).as("cnt"), count(lit(1)).as("n"))
           .join(feed.filter(col("_shard") === k).select("e", "r").distinct(),
             Seq("e", "r"), "left_semi")
-        StreamingQueries.mergeSnapshotBatch(snapDir, Seq("e", "r"),
-          k.toLong, emitted)
+        store.merge(k.toLong, emitted)
         val got = ops.Relational.oddsRatioReadout(
-          StreamingQueries.snapshotPanel(spark, snapDir)
-            .select(col("e"), col("r"), col("cnt")))
+          store.panel.select(col("e"), col("r"), col("cnt")))
           .collect().map(_.toSeq).toSeq
         val exp = ops.Relational.oddsRatioReadout(
           sofar.groupBy(col("e"), col("r")).agg(count(lit(1)).as("cnt")))
@@ -550,27 +558,28 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
-  test("sizedSnapshotBuckets sizes B from key cardinality; a 1-key batch rewrite is bounded by the bucket, not the key space") {
+  test("KeyedStore.sizedBuckets sizes B from key cardinality; a 1-key batch rewrite is bounded by the bucket, not the key space") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    // Round-14 residual: snapshotBuckets was a fixed 16, so a touched
+    // Round-14 residual: the bucket count was a fixed 16, so a touched
     // bucket on a growing key space held key_space/16 rows. The sizing
     // rule B ≈ keySpace / targetKeysPerBucket must (a) follow the rule
     // with floor and cap, and (b) actually plumb through the merge: a
     // 1-key batch over a sized layout rewrites roughly ⌈keys/B⌉ rows
     // (one bucket's occupancy), never O(key space).
-    assert(StreamingQueries.sizedSnapshotBuckets(2000, 64) == 32)
-    assert(StreamingQueries.sizedSnapshotBuckets(10) ==
-      StreamingQueries.snapshotBuckets, "tiny axes keep the floor")
-    assert(StreamingQueries.sizedSnapshotBuckets(100000000L) == 4096,
+    assert(KeyedStore.sizedBuckets(2000, 64) == 32)
+    assert(KeyedStore.sizedBuckets(10) ==
+      KeyedStore.DefaultBuckets, "tiny axes keep the floor")
+    assert(KeyedStore.sizedBuckets(100000000L) == 4096,
       "the cap bounds state-dir fan-out")
     val nKeys = 2000
-    val nB = StreamingQueries.sizedSnapshotBuckets(nKeys, 64) // 32 > default
+    val nB = KeyedStore.sizedBuckets(nKeys, 64) // 32 > default
     val snapDir = java.nio.file.Files.createTempDirectory("graft_sizedspec")
+    val store = KeyedStore.open(spark, snapDir, Seq("k"), "n", nB)
     try {
       val b0 = (0 until nKeys).map(k => (k.toLong, k * 10L, 1L))
         .toDF("k", "v", "n")
-      StreamingQueries.mergeSnapshotBatch(snapDir, Seq("k"), 0L, b0, nB)
+      store.merge(0L, b0)
       // the sized count reached the layout: buckets beyond the default
       // 16 exist on disk
       assert((16 until nB).exists(b => java.nio.file.Files.isDirectory(
@@ -578,7 +587,7 @@ class StreamingSpec extends AnyFunSuite {
         "bucket dirs beyond the default 16 prove the count was plumbed")
       val oneKey = 7L
       val b1 = Seq((oneKey, 999L, 2L)).toDF("k", "v", "n")
-      StreamingQueries.mergeSnapshotBatch(snapDir, Seq("k"), 1L, b1, nB)
+      store.merge(1L, b1)
       val bkt = b1.select(pmod(hash(col("k")), lit(nB))).head.getInt(0)
       val bucketKeys = b0.select(pmod(hash(col("k")), lit(nB)).as("b"))
         .filter(col("b") === bkt).count()
@@ -594,7 +603,7 @@ class StreamingSpec extends AnyFunSuite {
       assert(bucketKeys < nKeys / 4,
         "a single bucket must hold a small fraction of the key space")
       // panel is still exact after the sized merge
-      val panel = StreamingQueries.snapshotPanel(spark, snapDir, nB)
+      val panel = store.panel
       assert(panel.count() == nKeys.toLong)
       assert(panel.filter(col("k") === oneKey).select("v").head.getLong(0)
         == 999L)
@@ -617,9 +626,9 @@ class StreamingSpec extends AnyFunSuite {
           .as("cents"))
       .withColumn("_shard", pmod(col("l_orderkey"), lit(nShards)))
       .persist()
-    val nB = StreamingQueries.sizedSnapshotBuckets(
-      Tables.part(spark, sf).count())
+    val nB = KeyedStore.sizedBuckets(Tables.part(spark, sf).count())
     val snapDir = java.nio.file.Files.createTempDirectory("graft_s44prefix")
+    val store = KeyedStore.open(spark, snapDir, Seq("l_partkey"), "n", nB)
     try {
       (0 until nShards).foreach { k =>
         val sofar = feed.filter(col("_shard") <= k)
@@ -627,11 +636,9 @@ class StreamingSpec extends AnyFunSuite {
           .agg(sum("cents").as("rc"), count(lit(1)).as("n"))
           .join(feed.filter(col("_shard") === k)
             .select("l_partkey").distinct(), Seq("l_partkey"), "left_semi")
-        StreamingQueries.mergeSnapshotBatch(snapDir, Seq("l_partkey"),
-          k.toLong, emitted, nB)
+        store.merge(k.toLong, emitted)
         val got = ops.Relational.abcReadout(
-          StreamingQueries.snapshotPanel(spark, snapDir, nB)
-            .select(col("l_partkey"), col("rc")))
+          store.panel.select(col("l_partkey"), col("rc")))
           .collect().map(_.toSeq).toSeq
         val exp = ops.Relational.abcReadout(
           sofar.groupBy(col("l_partkey")).agg(sum("cents").as("rc")))
