@@ -30,7 +30,9 @@ import graft.sources.SourceSinks
   * `seq`, a replica row's `last_ord`). All touched buckets land in ONE
   * partitioned write; untouched buckets are never listed, read or
   * written, so a batch costs O(batch + touched-bucket keys), never
-  * O(key space).
+  * O(key space). Only a store with a version below the batch probes
+  * which buckets the batch touches (one small job over the cached batch,
+  * to pick the bases to read); a fresh store merges in the write alone.
   *
   * The merge is last-writer-wins, not `cdc.Apply.fold`, because the rows
   * are not a change stream: a twin's rows are a fold's cumulative
@@ -100,42 +102,52 @@ final class KeyedStore private (session: SparkSession, val dir: Path,
   /** Merge `rows` (keys ++ value columns, `ord` among them) as `batchId`. */
   def merge(batchId: Long, rows: DataFrame): Unit = {
     val valNames = rows.columns.filterNot(keys.contains).toSeq
+    val committed = latest(below = batchId)
     val bdf = rows.withColumn("_bkt", bucketOf)
-      .persist() // reused for the touched-bucket probe and the merge
+    // reused for the touched-bucket probe and the merge; a store with no
+    // version below batchId has no base to read, so no probe and no cache
+    if (committed.nonEmpty) bdf.persist()
     try {
-      val touched = bdf.select("_bkt").distinct()
-        .collect().map(_.getInt(0)).sorted // bounded by `buckets`
-      if (touched.nonEmpty) {
-        val bases = latest(below = batchId).filter(b => touched.contains(b._1))
-        // ONE multi-path read of every touched bucket's base: a per-path
-        // union hands Catalyst a B-ary left-deep plan whose analysis is
-        // superlinear in B (minutes in the analyzer at 4096 buckets).
-        // _bkt recomputes from the keys with the same bucketOf.
-        val merged =
-          (if (bases.isEmpty) bdf
-          else bdf.unionByName(rows.sparkSession.read
-            .parquet(bases.map(_._3.toString): _*).withColumn("_bkt", bucketOf)))
-            // the merge's one shuffle, by bucket: each bucket lands as one file
-            .repartition(col("_bkt"))
-            .groupBy(("_bkt" +: keys).map(col): _*)
-            .agg(max_by(struct(valNames.map(col): _*), col(ord)).as("st"))
-            .select(col("_bkt") +: (keys.map(col) ++
-              valNames.map(v => col("st." + v).as(v))): _*)
-        val tmp = dir.resolve(f"inflight_v$batchId%05d")
-        if (Files.exists(tmp)) SourceSinks.deleteDir(tmp) // a crashed attempt's
-        merged.write.partitionBy("_bkt").mode("overwrite").parquet(tmp.toString)
-        val baseVersion = bases.map(b => b._1 -> b._2).toMap
-        touched.foreach { b =>
-          val bd = bucketDir(b)
-          Files.createDirectories(bd)
-          val dst = bd.resolve(f"state_v$batchId%05d")
-          if (Files.exists(dst)) SourceSinks.deleteDir(dst) // uncommitted leftover
-          Files.move(tmp.resolve(s"_bkt=$b"), dst)
-          Files.createFile(dst.resolve("_SUCCESS")) // the bucket's commit
-          retire(versions(bd, "state_v"), keep = baseVersion.getOrElse(b, batchId))
-        }
-        SourceSinks.deleteDir(tmp)
+      val bases = if (committed.isEmpty) Nil else {
+        val probed = bdf.select("_bkt").distinct()
+          .collect().map(_.getInt(0)).toSet // bounded by `buckets`
+        committed.filter(b => probed.contains(b._1))
       }
+      // ONE multi-path read of every touched bucket's base: a per-path
+      // union hands Catalyst a B-ary left-deep plan whose analysis is
+      // superlinear in B (minutes in the analyzer at 4096 buckets).
+      // _bkt recomputes from the keys with the same bucketOf.
+      val merged =
+        (if (bases.isEmpty) bdf
+        else bdf.unionByName(rows.sparkSession.read
+          .parquet(bases.map(_._3.toString): _*).withColumn("_bkt", bucketOf)))
+          // the merge's one shuffle, by bucket: each bucket lands as one file
+          .repartition(col("_bkt"))
+          .groupBy(("_bkt" +: keys).map(col): _*)
+          .agg(max_by(struct(valNames.map(col): _*), col(ord)).as("st"))
+          .select(col("_bkt") +: (keys.map(col) ++
+            valNames.map(v => col("st." + v).as(v))): _*)
+      val tmp = dir.resolve(f"inflight_v$batchId%05d")
+      if (Files.exists(tmp)) SourceSinks.deleteDir(tmp) // a crashed attempt's
+      merged.write.partitionBy("_bkt").mode("overwrite").parquet(tmp.toString)
+      // the touched buckets are the partitions the write produced
+      val touched = {
+        val st = Files.list(tmp)
+        try st.iterator().asScala.map(_.getFileName.toString)
+          .filter(_.startsWith("_bkt=")).map(_.stripPrefix("_bkt=").toInt).toSeq.sorted
+        finally st.close()
+      }
+      val baseVersion = bases.map(b => b._1 -> b._2).toMap
+      touched.foreach { b =>
+        val bd = bucketDir(b)
+        Files.createDirectories(bd)
+        val dst = bd.resolve(f"state_v$batchId%05d")
+        if (Files.exists(dst)) SourceSinks.deleteDir(dst) // uncommitted leftover
+        Files.move(tmp.resolve(s"_bkt=$b"), dst)
+        Files.createFile(dst.resolve("_SUCCESS")) // the bucket's commit
+        retire(versions(bd, "state_v"), keep = baseVersion.getOrElse(b, batchId))
+      }
+      SourceSinks.deleteDir(tmp)
     } finally bdf.unpersist()
   }
 

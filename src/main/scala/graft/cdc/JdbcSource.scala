@@ -114,16 +114,12 @@ object JdbcSource {
 
   /** `flat` folded alone into replica rows (pk, last_ord, last_op,
     * last_value): each key's last write after the batch's own truncate
-    * cut, plus one `StreamApply.TruncPk` horizon row at the batch's max
-    * truncate ord when it holds a truncate.
+    * cut, plus its truncates' `StreamApply.horizonRows`, of which the
+    * store keeps the latest.
     */
   private def replicaRows(flat: DataFrame): DataFrame =
     Apply.fold(flat).select("pk", "last_ord", "last_op", "last_value")
-      .unionByName(flat.filter(col("op") === "t")
-        // grouped, so a batch without a truncate yields no row
-        .groupBy(lit(true)).agg(max(col("lsn_long") * 2 + 1).as("last_ord"))
-        .select(lit(StreamApply.TruncPk).as("pk"), col("last_ord"),
-          lit("t").as("last_op"), lit(null).cast("double").as("last_value")))
+      .unionByName(StreamApply.horizonRows(flat))
 
   /** One s15 poll, store batch `batchId`: from the position committed
     * below `batchId` (`Long.MinValue` when none is), pull `(last, hi]` up

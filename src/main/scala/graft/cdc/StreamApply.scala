@@ -52,25 +52,37 @@ object StreamApply {
       Iterator.single(st)
     }
 
+  /** The truncate horizon rows of `flat` (lsn_long, op, …) as replica
+    * rows: (`TruncPk`, the truncate's batch-cut ord lsn*2+1, 't', null),
+    * one per truncate. The store keeps the latest, so the horizon row is
+    * the max truncate ord merged so far.
+    */
+  def horizonRows(flat: DataFrame): DataFrame =
+    flat.filter(col("op") === "t").select(lit(TruncPk).as("pk"),
+      (col("lsn_long") * 2 + 1).as("last_ord"), lit("t").as("last_op"),
+      lit(null).cast("double").as("last_value"))
+
   /** The replica held by a store of replica rows (pk, last_ord, last_op,
     * last_value) plus the `TruncPk` horizon row: (pk, value, last_ord) of
     * every key whose last write is an upsert after the horizon, by pk.
-    * Shared by the streaming apply (c13) and the JDBC tail (s15).
+    * The horizon row is read when this is called: read the frame before
+    * the store merges more batches. Shared by the streaming apply (c13)
+    * and the JDBC tail (s15).
     */
   def replica(panel: DataFrame): DataFrame = {
-    // the horizon is one row: broadcast, no second pass
-    val horizon = panel.filter(col("pk") === TruncPk)
-      .agg(coalesce(max("last_ord"), lit(-1L)).as("tmax"))
-    panel.filter(col("pk") =!= TruncPk)
-      .crossJoin(broadcast(horizon))
-      .filter(col("last_op") =!= "d" && col("last_ord") > col("tmax"))
+    // the horizon is one row: read once, then a plain filter of one pass
+    val tmax = panel.filter(col("pk") === TruncPk).select("last_ord")
+      .collect().map(_.getLong(0)).foldLeft(-1L)(math.max)
+    panel.filter(col("pk") =!= TruncPk && col("last_op") =!= "d" && col("last_ord") > tmax)
       .select(col("pk"), round(col("last_value"), 2).as("value"), col("last_ord"))
       .orderBy("pk")
   }
 
   /** Run the streaming apply over the events parquet and return the
-    * replica (pk, value, last_ord). The frame reads the apply's store,
-    * which lives until the JVM exits.
+    * replica (pk, value, last_ord). The frame reads the apply's store, a
+    * temp dir of one row per touched key that is deleted only when the
+    * JVM exits: each call keeps O(key space) bytes of disk for the life
+    * of the JVM, even when the caller collects the frame at once.
     */
   def run(spark: SparkSession, dir: String, queryName: String = "graft_stream_apply"): DataFrame = {
     import spark.implicits._
@@ -82,12 +94,11 @@ object StreamApply {
       .parquet(dir)
       .transform(graft.Tables.normalizeEventsTs)
     val flat = Envelope.flat(stream)
-    // truncates become sentinel-key half-events at the batch cut's ord
-    // (lsn*2+1); applyFn folds them like any upsert, so the sentinel's
-    // state ord IS the truncate horizon after any delivery order
-    val truncs = flat.filter(col("op") === "t").select(
-      lit(TruncPk).as("pk"), (col("lsn_long") * 2 + 1).as("ord"),
-      lit("t").as("eff_op"), lit(null).cast("double").as("value"))
+    // truncates become sentinel-key half-events; applyFn folds them like
+    // any upsert, so the sentinel's state ord IS the truncate horizon
+    // after any delivery order
+    val truncs = horizonRows(flat).select(col("pk"), col("last_ord").as("ord"),
+      col("last_op").as("eff_op"), col("last_value").as("value"))
     val halves = Apply.halfEvents(flat.filter(col("op") =!= "t"))
       .select("pk", "ord", "eff_op", "value").unionByName(truncs)
       .as[HalfEvent]

@@ -197,11 +197,15 @@ object StreamingQueries {
     val updates = stream.groupByKey(_._1)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout)(fn)
       .toDF("user_id", "n_events", "sum_value", "last_us")
-    drainToStore(s, updates, Seq("user_id"), "n_events") {
-      _.select(col("user_id"), col("n_events"),
-        round(col("sum_value"), 2).as("sum_value"), col("last_us"))
-        .orderBy("user_id")
-    }
+    // one row per user, too many for drainToStore's checkpointed readout:
+    // the store outlives this call and the result reads it lazily
+    val store = KeyedStore.open(s, graft.sources.SourceSinks.cleanupOnExit(
+      java.nio.file.Files.createTempDirectory("graft_s09_state")), Seq("user_id"), "n_events")
+    val q = store.sink(updates).start()
+    try q.processAllAvailable() finally q.stop()
+    store.panel.select(col("user_id"), col("n_events"),
+      round(col("sum_value"), 2).as("sum_value"), col("last_us"))
+      .orderBy("user_id")
   }
 
   // s10: streaming WAL CONSUMPTION through the wire codec — the NATS-
